@@ -30,7 +30,7 @@ object WordCount {
   def viaFacade(lines: Dataset[String]): Dataset[(String, Seq[String])] = {
     import lines.sparkSession.implicits._
     MapReduce.runFold[Long](lines,
-      (_, line) => line.split("\\s+").iterator.filter(_.nonEmpty).map(w => (w, "1")),
+      (_, line) => Tokens(line).map(w => (w, "1")),
       0L,
       (b, v) => b + v.toLong,
       _ + _,
