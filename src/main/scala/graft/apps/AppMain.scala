@@ -33,8 +33,9 @@ private[apps] object AppRunner {
     // key the builder sets is saved first (value or absence) and
     // restored after the job — a shared session must not come back
     // from a config-file-driven app with its parallelism or UI conf
-    // silently changed (the N_WORKER output-file contract is enforced
-    // by TextKVSink's explicit repartition, not by this conf).
+    // silently changed (the N_WORKER output-file contract — at most
+    // N key-sorted files, merged output as the parity contract — is
+    // TextKVSink's, not this conf's).
     val builderConfs = Seq("spark.sql.shuffle.partitions", "spark.ui.enabled")
     val existing = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)

@@ -29,7 +29,7 @@ object InvertedIndex {
     * `include/MapReduceMaster.h:469` feeding `src/InvertedIndex.cpp:22-26`. */
   def viaFacade(lines: Dataset[String], numPartitions: Int): Dataset[(String, Seq[String])] =
     MapReduce.run(lines,
-      (no, line) => Tokens(line).map(w => (w, no.toString)),
+      (no, line) => { val pos = no.toString; Tokens(line).map(w => (w, pos)) },
       (_, vs) => vs.toSeq.distinct.sorted, // string sort + unique, src/InvertedIndex.cpp:35-36
       numPartitions)
 }

@@ -2,6 +2,7 @@ package graft.apps
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import graft.SparkTestBase
 import graft.sinks.TextKVSink
 
@@ -66,22 +67,32 @@ class ReferenceParitySpec extends SparkTestBase {
   test("O8 sink format: trailing space, one file per partition, sorted within file") {
     import spark.implicits._
     val ds = spark.createDataset(Seq("b beta", "a alpha", "c gamma", "a again"))
-    val out = InvertedIndex.viaFacade(ds, 2).toDF("key", "values")
-    val dir = Files.createTempDirectory("o8sink").toString
-    TextKVSink.write(out, "key", "values", dir, 2)
-
-    val partFiles = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).sorted
-    assert(partFiles.length == 2) // one output_<r> per reducer partition
-    val perFile = partFiles.map(f => Files.readAllLines(f.toPath).asScala.toSeq)
-    perFile.foreach { fileLines =>
-      fileLines.foreach(l => assert(l.endsWith(" "), s"missing trailing space: '$l'"))
-      val keys = fileLines.map(_.split(" ").head)
-      assert(keys == keys.sorted, "rows must be key-sorted within each file")
+    /** Writes `out` through the sink with 2 reducers; checks each file's
+      * trailing spaces and key order, and returns the files' lines. */
+    def sinkFiles(out: DataFrame): Seq[Seq[String]] = {
+      val dir = Files.createTempDirectory("o8sink").toString
+      TextKVSink.write(out, "key", "values", dir, 2)
+      val partFiles = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).sorted
+      val perFile = partFiles.map(f => Files.readAllLines(f.toPath).asScala.toSeq).toSeq
+      perFile.foreach { fileLines =>
+        fileLines.foreach(l => assert(l.endsWith(" "), s"missing trailing space: '$l'"))
+        val keys = fileLines.map(_.split(" ").head)
+        assert(keys == keys.sorted, "rows must be key-sorted within each file")
+      }
+      perFile
     }
+
+    val index = sinkFiles(InvertedIndex.viaFacade(ds, 2).toDF("key", "values"))
+    assert(index.size == 2) // one output_<r> per reducer partition
     // merged contract (SURVEY.md §7.4): union of files == expected KV lines
-    val merged = perFile.toSeq.flatten.sorted
     // lines: 0="b beta", 1="a alpha", 2="c gamma", 3="a again"
-    assert(merged == Seq("a 1 3 ", "again 3 ", "alpha 1 ", "b 0 ", "beta 0 ", "c 2 ", "gamma 2 "))
+    assert(index.flatten.sorted == Seq("a 1 3 ", "again 3 ", "alpha 1 ", "b 0 ", "beta 0 ", "c 2 ", "gamma 2 "))
+
+    // runFold's output is already hash-partitioned on the key, so the
+    // sink writes at most (not exactly) one file per reducer
+    val counts = sinkFiles(WordCount.viaFacade(ds).toDF("key", "values"))
+    assert(counts.nonEmpty && counts.size <= 2, s"${counts.size} files")
+    assert(counts.flatten.sorted == Seq("a 2 ", "again 1 ", "alpha 1 ", "b 1 ", "beta 1 ", "c 1 ", "gamma 1 "))
     assert(TextKVSink.formatRow("a", Seq("0", "1")) == "a 0 1 ")
   }
 
