@@ -1,6 +1,6 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.EngineConfig
 import graft.mr.MapReduce
 import graft.sinks.TextKVSink
@@ -20,7 +20,7 @@ import graft.sinks.TextKVSink
 private[apps] object AppRunner {
 
   def run(configPath: String,
-          app: (SparkSession, String, Int) => org.apache.spark.sql.DataFrame): Int = {
+          app: (SparkSession, String, Int) => DataFrame): Int = {
     val cfg = EngineConfig.load(configPath)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(cfg.inputFile))) {
       System.err.println(s"input file not found: ${cfg.inputFile}")
@@ -68,20 +68,22 @@ private[apps] object AppRunner {
 
 /** Reference app 1 as an executable (`src/WordCounter.cpp:45`). */
 object WordCountMain {
+  private[apps] val app: (SparkSession, String, Int) => DataFrame = (spark, input, _) =>
+    WordCount.viaFacade(spark.read.textFile(input)).toDF("key", "values")
+
   def main(args: Array[String]): Unit = {
-    val rc = AppRunner.run(args.headOption.getOrElse("config_WordCounter.txt"),
-      (spark, input, _) =>
-        WordCount.viaFacade(spark.read.textFile(input)).toDF("key", "values"))
+    val rc = AppRunner.run(args.headOption.getOrElse("config_WordCounter.txt"), app)
     if (rc != 0) sys.exit(rc)
   }
 }
 
 /** Reference app 2 as an executable (`src/InvertedIndex.cpp:43`). */
 object InvertedIndexMain {
+  private[apps] val app: (SparkSession, String, Int) => DataFrame = (spark, input, n) =>
+    InvertedIndex.viaFacade(spark.read.textFile(input), n).toDF("key", "values")
+
   def main(args: Array[String]): Unit = {
-    val rc = AppRunner.run(args.headOption.getOrElse("config_InvertedIndex.txt"),
-      (spark, input, n) =>
-        InvertedIndex.viaFacade(spark.read.textFile(input), n).toDF("key", "values"))
+    val rc = AppRunner.run(args.headOption.getOrElse("config_InvertedIndex.txt"), app)
     if (rc != 0) sys.exit(rc)
   }
 }

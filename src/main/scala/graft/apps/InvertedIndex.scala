@@ -2,6 +2,7 @@ package graft.apps
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.mr.MapReduce
 
 /** Reference application 2: inverted index (`src/InvertedIndex.cpp:20-39`).
@@ -15,11 +16,10 @@ import graft.mr.MapReduce
 object InvertedIndex {
 
   /** DataFrame-native path over (position, line) pairs:
-    * explode → distinct → grouped sorted set. */
+    * tokenize → explode → grouped sorted set. */
   def index(df: DataFrame, posCol: String, textCol: String): DataFrame =
     df.select(col(posCol).cast("string").as("pos"),
-        explode(split(col(textCol), "\\s+")).as("word"))
-      .filter(length(col("word")) > 0)
+        explode(GraftFunctions.wsTokens(df.sparkSession, col(textCol))).as("word"))
       .groupBy(col("word"))
       .agg(sort_array(collect_set(col("pos"))).as("positions"))
       .orderBy(col("word"))

@@ -2,6 +2,7 @@ package graft.apps
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.mr.MapReduce
 
 /** Reference application 1: word count (`src/WordCounter.cpp:19-41`).
@@ -13,13 +14,12 @@ import graft.mr.MapReduce
   */
 object WordCount {
 
-  /** DataFrame-native path: split → explode → groupBy → count.
+  /** DataFrame-native path: tokenize → explode → groupBy → count.
     * Catalyst plans partial+final HashAggregate, i.e. the map-side
     * combine the reference lacks — at scale only |distinct words| rows
     * per partition cross the shuffle. */
   def counts(lines: Dataset[String]): DataFrame =
-    lines.select(explode(split(col("value"), "\\s+")).as("word"))
-      .filter(length(col("word")) > 0)
+    lines.select(explode(GraftFunctions.wsTokens(lines.sparkSession, col("value"))).as("word"))
       .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy(col("word"))

@@ -2037,7 +2037,9 @@ object DedupQueries extends QueryCatalog {
     // exempt from AQE coalescing, and hashpartitioning(doc_en, doc_xx)
     // is a subset of the dedup's grouping keys, so the distinct
     // introduces no second exchange and the verify joins run wide.
-    val nShuffle = s.conf.get("spark.sql.shuffle.partitions").toInt
+    // The typed value: Spark validates the conf as an int but keeps
+    // the string as set (" 4 " passes), which `.toInt` rejects.
+    val nShuffle = s.sessionState.conf.defaultNumShufflePartitions
     val cand = a.join(b, Seq("band_no", "band_key"))
       .select($"doc_en", $"doc_xx", $"xx_lang")
       .repartition(nShuffle, $"doc_en", $"doc_xx")

@@ -110,6 +110,14 @@ object GraftFunctions {
     }
   }
 
+  /** DataFrame-side helper: `ws_tokens(c)` on any session, registered
+    * or not (Spark 4 keeps building a `Column` from an expression
+    * private to its own packages, so this goes through the registry). */
+  def wsTokens(spark: SparkSession, c: Column): Column = {
+    register(spark)
+    org.apache.spark.sql.functions.call_function("ws_tokens", c)
+  }
+
   /** DataFrame-side helper: `cosineSimilarity(a, b)` without SQL. */
   def cosineSimilarity(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)

@@ -193,6 +193,8 @@ object GraphQueries extends QueryCatalog {
     * caveats as ConnectedComponents. */
   private[graph] def hitsScores(s: SparkSession, dir: String,
       checkpointDir: Option[String] = None): DataFrame = {
+    // `auth` is first assigned inside the loop
+    require(Iters >= 1, s"HITS needs at least one round, got $Iters")
     import s.implicits._
     val sc = s.sparkContext
     val prevCheckpointDir = sc.getCheckpointDir
@@ -709,6 +711,8 @@ object GraphQueries extends QueryCatalog {
     * sweeps — factored out so q214's modularity audit scores the SAME
     * communities q202 reports. */
   private def lpaLabels(s: SparkSession, dir: String, und: DataFrame): DataFrame = {
+    // round 1 runs unconditionally, before the `2 to LpaRounds` loop
+    require(LpaRounds >= 1, s"LPA needs at least one round, got $LpaRounds")
     import s.implicits._
     val nodes = ScratchCache.persist(
       Tables.documents(s, dir).select($"doc_id".as("node")))

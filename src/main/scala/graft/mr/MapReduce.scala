@@ -1,5 +1,6 @@
 package graft.mr
 
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -35,10 +36,11 @@ import org.apache.spark.sql.functions._
   * key's values into a buffer and flushes one `(key, buffer)` row per
   * buffered key every [[CombineCap]] pairs and at the end of the task.
   * [[run]] cannot combine an arbitrary reducer, so its buffer is the
-  * key's value list; [[runFold]]'s is the user fold's state, so
-  * Catalyst only merges folded states. Both group on the key column, so
-  * the shuffle carries no duplicated key column and no row is
-  * deserialized just to extract its key.
+  * key's values encoded into one byte array ([[ValueBuffer]]);
+  * [[runFold]]'s is the user fold's state, so Catalyst only merges
+  * folded states. Both aggregate on the key column, so the shuffle
+  * carries no duplicated key column, no row is deserialized just to
+  * extract its key, and the output stays hash-partitioned by key.
   */
 object MapReduce {
 
@@ -51,44 +53,56 @@ object MapReduce {
     * Output is (key, values) sorted by key (O6 semantics: byte-wise
     * string order, matching std::string operator<).
     *
-    * Each map task combines its pairs into `(key, values)` rows
-    * ([[combine]], a list per key), so a key ships about once per task
-    * instead of once per occurrence. The combined rows are grouped on
-    * the key column — a sort-based, spillable grouping — and
-    * `reduceFn(k, vs)` sees the concatenation of k's lists: the same
-    * multiset of values as the reference's group stream, in no
-    * particular order. A reducer must not depend on value order; the
-    * reference's two (sum, and sort + unique) do not.
+    * Each map task combines its pairs into `(key, buffer)` rows
+    * ([[combine]]), each buffer one key's values encoded as a single
+    * byte array ([[ValueBuffer]]), so a key ships about once per flush
+    * instead of once per occurrence. The rows are aggregated on the key
+    * column with `collect_list`, and `reduceFn(k, vs)` runs in a
+    * projection that passes the key column through, decoding k's
+    * buffers lazily into `vs`: the same multiset of values as the
+    * reference's group stream, in no particular order. A reducer must
+    * not depend on value order; the reference's two (sum, and sort +
+    * unique) do not. All of one key's buffers are collected into one
+    * array before `reduceFn` sees them, which is the reference's
+    * `reduce_fn(k2, vector<string>)` contract
+    * (`include/MapReduceMaster.h:95,:510-543`); a fold over a key too
+    * heavy for that belongs on [[runFold]].
     *
-    * The O4 hash-partition-by-key exchange is delivered by the grouping
-    * shuffle itself — an explicit `repartition(n, key)` before it would
-    * be a second, pure-waste exchange of the same data. `numPartitions`
-    * (≅ nr_reducer) is advisory on Spark: the shuffle width comes from
-    * `spark.sql.shuffle.partitions` and the at-most-one-file-per-reducer
-    * layout from the sink ([[graft.sinks.TextKVSink]]);
-    * per the reference's contract (and the partition-invariance
-    * property test) it never changes answers. */
+    * The O4 hash-partition-by-key exchange is delivered by the
+    * aggregate's shuffle itself, and the key column keeps that
+    * partitioning up to the sink: [[graft.sinks.TextKVSink]] with N
+    * equal to `spark.sql.shuffle.partitions` plans no second exchange.
+    * `numPartitions` (≅ nr_reducer) is advisory on Spark: the shuffle
+    * width comes from `spark.sql.shuffle.partitions` and the
+    * at-most-one-file-per-reducer layout from the sink; per the
+    * reference's contract (and the partition-invariance property test)
+    * it never changes answers. */
   def run(lines: Dataset[String],
           mapFn: (Long, String) => Iterator[(String, String)],
           reduceFn: (String, Iterator[String]) => Seq[String],
           numPartitions: Int): Dataset[(String, Seq[String])] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    val lists = spark.createDataset(pairs(lines, mapFn)
-      .mapPartitions(combine[List[String]](_, Nil, (vs, v) => v :: vs, CombineCap)))
-    lists.groupBy(col("_1")).as[String, (String, List[String])]
-      .mapGroups((k, rows) => (k, reduceFn(k, rows.flatMap(_._2)).toList: Seq[String]))
+    val packed = spark.createDataset(pairs(lines, mapFn).mapPartitions(
+      combine(_, new ValueBuffer, (b: ValueBuffer, v: String) => b.add(v), CombineCap)
+        .map { case (k, b) => (k, b.toBytes) }))
+    val reduce = udf((k: String, bufs: Seq[Array[Byte]]) =>
+      reduceFn(k, bufs.iterator.flatMap(ValueBuffer.decode))).withName("reduce_fn")
+    packed.groupBy(col("_1")).agg(collect_list(col("_2")).as("_2"))
+      .select(col("_1"), reduce(col("_1"), col("_2")).as("_2"))
+      .as[(String, Seq[String])]
       .orderBy(col("_1"))
   }
 
   /** The map-side combiner: folds a map task's pairs into one buffer
-    * per key, starting from `zero`, and flushes one `(key, buffer)` row
-    * per buffered key each time `cap` pairs are folded, and once more
-    * at the end. Per key, the flushed buffers together fold exactly the
-    * key's values. One hash lookup per pair; `zero` seeds every key's
-    * buffer, so `step` must return a new value rather than mutate it. */
+    * per key, each starting from a fresh `zero`, and flushes one
+    * `(key, buffer)` row per buffered key each time `cap` pairs are
+    * folded, and once more at the end. Per key, the flushed buffers
+    * together fold exactly the key's values. One hash lookup per pair.
+    * `zero` is evaluated once per key per flush, so `step` may update a
+    * mutable buffer in place and return it. */
   private[mr] def combine[B](pairs: Iterator[(String, String)],
-                             zero: B,
+                             zero: => B,
                              step: (B, String) => B,
                              cap: Int): Iterator[(String, B)] = {
     require(cap >= 1, s"combine cap must be positive, got $cap")
@@ -111,19 +125,6 @@ object MapReduce {
     * lineNo being the 0-based global line number. */
   private def pairs(lines: Dataset[String], mapFn: (Long, String) => Iterator[(String, String)]) =
     lines.rdd.zipWithIndex().flatMap { case (line, no) => mapFn(no, line) }
-
-  /** The reference's mapper input shard (O2): mapper `i` of `n` keeps
-    * line iff `hash(record_number) % n == i`, and libstdc++'s
-    * `std::hash<int>` is the identity ⇒ round-robin by line number
-    * (`include/MapReduceMaster.h:434-440,:465`). Spark's input splits
-    * make this unnecessary (each split is read once), but the exact
-    * record-to-task assignment is reproducible when bit-parity matters. */
-  def mapperShard(lines: Dataset[String], nrMapper: Int, mapperId: Int): Dataset[String] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    spark.createDataset(
-      lines.rdd.zipWithIndex().collect { case (l, no) if no % nrMapper == mapperId => l })
-  }
 
   /** Algebraic variant: when the user reduce is a fold (zero/step/merge),
     * each map task folds its pairs itself ([[combine]] with `foldStep`)
@@ -168,4 +169,56 @@ private[mr] final class FoldAggregator[B](foldZero: B,
   override def finish(b: B): Seq[String] = foldFinish(b)
   override def bufferEncoder: Encoder[B] = benc
   override def outputEncoder: Encoder[Seq[String]] = ExpressionEncoder[Seq[String]]()
+}
+
+/** [[MapReduce.run]]'s per-key value buffer: the values appended to one
+  * growable byte array, each as a varint length code followed by its
+  * UTF-8 bytes. Code 0 is `null`; code n + 1 is a value of n bytes.
+  * Strings encode as Catalyst's `UTF8String.fromString` does, so a
+  * value decodes to what a string column would have given back. */
+private[mr] final class ValueBuffer {
+  private var bytes = new Array[Byte](32)
+  private var size = 0
+
+  def add(v: String): ValueBuffer = {
+    if (v == null) putCode(0)
+    else {
+      val utf8 = v.getBytes(UTF_8)
+      putCode(utf8.length + 1)
+      grow(utf8.length)
+      System.arraycopy(utf8, 0, bytes, size, utf8.length)
+      size += utf8.length
+    }
+    this
+  }
+
+  def toBytes: Array[Byte] = java.util.Arrays.copyOf(bytes, size)
+
+  private def putCode(code: Int): Unit = {
+    grow(5)
+    var c = code
+    while ((c & ~0x7f) != 0) { bytes(size) = ((c & 0x7f) | 0x80).toByte; size += 1; c >>>= 7 }
+    bytes(size) = c.toByte
+    size += 1
+  }
+
+  private def grow(n: Int): Unit =
+    if (size + n > bytes.length) bytes = java.util.Arrays.copyOf(bytes, math.max(2 * bytes.length, size + n))
+}
+
+private[mr] object ValueBuffer {
+  /** The values of one [[ValueBuffer.toBytes]] array, decoded as they
+    * are read. */
+  def decode(buf: Array[Byte]): Iterator[String] = new Iterator[String] {
+    private var pos = 0
+    def hasNext: Boolean = pos < buf.length
+    def next(): String = {
+      var code = 0
+      var shift = 0
+      var b = 0x80
+      while ((b & 0x80) != 0) { b = buf(pos); pos += 1; code |= (b & 0x7f) << shift; shift += 7 }
+      if (code == 0) null
+      else { val v = new String(buf, pos, code - 1, UTF_8); pos += code - 1; v }
+    }
+  }
 }

@@ -17,12 +17,13 @@ import org.apache.spark.sql.functions._
   * `sortWithinPartitions` gives the per-file key order, and
   * `.write.text` writes one file per non-empty partition. The contract
   * is therefore **at most n files, each key-sorted**, with the merged
-  * output as the parity contract (SURVEY.md §7.4) — not n files. When
-  * the rows are already hash-partitioned on the key (as
-  * [[graft.mr.MapReduce.runFold]]'s aggregate output is), Spark plans no
+  * output as the parity contract (SURVEY.md §7.4) — not n files. Both
+  * facade paths ([[graft.mr.MapReduce.run]] and
+  * [[graft.mr.MapReduce.runFold]]) give output hash-partitioned on the
+  * key, so when n equals `spark.sql.shuffle.partitions` Spark plans no
   * exchange for the repartition, and adaptive execution may coalesce
-  * the shuffle it keeps into fewer partitions: WordCount's output can
-  * land in a single file.
+  * the aggregate's shuffle into fewer partitions: the output can land
+  * in fewer than n files, even a single one.
   */
 object TextKVSink {
 

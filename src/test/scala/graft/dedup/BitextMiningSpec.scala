@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
 import graft.SparkTestBase
 
 /** Pins q237 bitext mining against a full JVM replay of the plant and
@@ -24,6 +25,14 @@ class BitextMiningSpec extends SparkTestBase {
     else Set(raw)
   private def sig(sh: Set[String], j: Int): String =
     sh.map(s => (md5hex(s"a|$s") + md5hex(s"b|$s")).substring(8 * j, 8 * j + 8)).min
+
+  test("q237 takes the typed shuffle width: a padded ' 4 ' setting is valid") {
+    assume(fixture)
+    val padded = spark.newSession()
+    padded.conf.set("spark.sql.shuffle.partitions", " 4 ") // Spark trims when it validates
+    val plan = graft.SparkEntry.queries("q237_bitext_mining")(padded, dir).queryExecution.optimizedPlan
+    assert(plan.collect { case r: RepartitionByExpression => r.numPartitions }.contains(4))
+  }
 
   test("q237: banding complete for plants, Jaccard gate exact, mined == brute force") {
     assume(fixture)

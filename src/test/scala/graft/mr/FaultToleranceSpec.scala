@@ -14,6 +14,9 @@ import graft.SparkTestBase
   */
 class FaultToleranceSpec extends SparkTestBase {
 
+  private def chain(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
+
   test("map task failing on first attempt recovers and answers correctly") {
     import spark.implicits._
     val lines = spark.createDataset(Seq("a b a", "b c", "c d e", "a e"))
@@ -45,10 +48,22 @@ class FaultToleranceSpec extends SparkTestBase {
         (_, _) => throw new IllegalStateException("user map_fn error"),
         (_, vs) => vs.toSeq, 2).collect()
     }
-    def chain(t: Throwable): Seq[Throwable] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
     assert(chain(ex).exists(_.getMessage != null) &&
       chain(ex).exists(c => String.valueOf(c.getMessage).contains("user map_fn error")))
+  }
+
+  test("a reduce_fn that always throws surfaces the user error (reference exit -3 parity)") {
+    import spark.implicits._
+    // The reference aborts with exit code -3 when reduce_fn throws
+    // (include/MapReduceMaster.h:546-555); reduceFn runs inside the
+    // reduce-side projection, whose failure must carry the user's message.
+    val lines = spark.createDataset(Seq("a b"))
+    val ex = intercept[Exception] {
+      MapReduce.run(lines,
+        (_, line) => line.split(" ").iterator.map(w => (w, "1")),
+        (_, _) => throw new IllegalStateException("user reduce_fn error"), 2).collect()
+    }
+    assert(chain(ex).exists(c => String.valueOf(c.getMessage).contains("user reduce_fn error")))
   }
 
   test("DataFrame-path task failure also recovers (scan → agg query)") {

@@ -1,11 +1,16 @@
 package graft.mr
 
 import org.apache.spark.sql.{Encoders, Observation}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.unsafe.types.UTF8String
 import graft.SparkTestBase
-import graft.apps.WordCount
+import graft.apps.{InvertedIndex, WordCount}
+import graft.sinks.TextKVSink
 
 /** Facade laws (SURVEY.md §5 test plan items 1 and 4a/4b):
   * equivalence with a naive Scala groupBy-fold, and partition-count
@@ -105,7 +110,54 @@ class MapReduceSpec extends SparkTestBase {
       assert(got.map { case (k, vs) => (k, vs.sorted) } == want, s"cap $cap")
       val folded = MapReduce.combine(pairs.iterator, 0L, step, cap).toSeq.groupMapReduce(_._1)(_._2)(_ + _)
       assert(folded == wantFold, s"fold, cap $cap")
+      // a mutable state: each key's buffer must start from its own zero
+      val packed = MapReduce.combine(pairs.iterator, new ValueBuffer, (b: ValueBuffer, v: String) => b.add(v), cap)
+        .map { case (k, b) => (k, ValueBuffer.decode(b.toBytes).toList) }.toSeq.groupMapReduce(_._1)(_._2)(_ ++ _)
+      assert(packed.map { case (k, vs) => (k, vs.sorted) } == want, s"buffer, cap $cap")
     }
+  }
+
+  test("value buffer round-trips values as a string column would (seeded)") {
+    val rnd = new scala.util.Random(20261018L)
+    val pieces = Seq("", "a", "é", "日本", "\uD83D\uDE00", "\uD800", "\uDC00", "x\uDBFFy", " ", "\u0000")
+    def value(): String = rnd.nextInt(12) match {
+      case 0 => null
+      case 1 => ""
+      case 2 => "a" * (128 + rnd.nextInt(64)) // two-byte length code
+      case 3 => "é" * (8192 + rnd.nextInt(512)) // >= 16,384 bytes: three-byte code
+      case 4 => Seq.fill(rnd.nextInt(40))(rnd.nextInt(0x10000).toChar).mkString // any UTF-16 unit
+      case _ => Seq.fill(rnd.nextInt(6))(pieces(rnd.nextInt(pieces.size))).mkString
+    }
+    def viaCatalyst(v: String) = if (v == null) null else UTF8String.fromString(v).toString
+    (1 to 200).foreach { round =>
+      val vs = Seq.fill(rnd.nextInt(30))(value())
+      val buf = vs.foldLeft(new ValueBuffer)(_.add(_)).toBytes
+      assert(ValueBuffer.decode(buf).toList == vs.map(viaCatalyst), s"round $round")
+    }
+    assert(Seq(128, 16384).forall(n => new ValueBuffer().add("a" * n).toBytes.length > n + 1))
+    assert(ValueBuffer.decode(new ValueBuffer().toBytes).isEmpty)
+  }
+
+  test("InvertedIndex through the sink with N = shuffle partitions runs one exchange") {
+    import spark.implicits._
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val dir = java.nio.file.Files.createTempDirectory("onexchange").toString
+    try TextKVSink.write(InvertedIndex.viaFacade(spark.createDataset(corpus), 4).toDF("key", "values"),
+      "key", "values", dir, 4)
+    finally spark.listenerManager.unregister(listener)
+    // the zipWithIndex job over `lines.rdd` reports its own plan first
+    val plan = Iterator.continually(plans.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+      .map(p => Option(p).getOrElse(fail("no write plan")))
+      .find(p => nodes(p).exists(_.isInstanceOf[DataWritingCommandExec])).get
+    val exchanges = nodes(plan).collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, plan.toString)
+    assert(!exchanges.exists(_.shuffleOrigin == REPARTITION_BY_NUM), plan.toString)
   }
 
   test("run == naive when one map task emits more pairs than the pack cap") {
