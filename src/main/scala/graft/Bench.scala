@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import graft.core.ScratchCache
+import graft.core.{ScratchCache, Sessions}
 
 /** Benchmark main: runs every catalog query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line for the driver.
@@ -86,31 +85,17 @@ import graft.core.ScratchCache
   * Scratch caches registered by catalog queries are drained after
   * every run so no storage leaks across the catalog and every run
   * rebuilds its own cache (uniform work per run).
+  *
+  * Usage: sbt "runMain graft.Bench [query ...]" (SPARK_GRAFT_SF_DIR,
+  * SPARK_GRAFT_BENCH_RUNS), on [[graft.core.Sessions.local]]:
+  * SPARK_GRAFT_CPUS cores, else all.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val only = args.toSet // optional query-name subset (local dev)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // r22 NOTE (measured and REVERTED): lowering AQE's post-shuffle
-      // partition-size floor (coalescePartitions.minPartitionSize,
-      // default 1m) to 64k was tried as a global default — it
-      // parallelized q237's CPU-dense-but-small band frame (4.1→1.7 s)
-      // but cost 1.5× on a band of small queries whose tiny stages
-      // genuinely belong on one core (q61 0.87→1.52, q93 1.41→2.31,
-      // q68 1.46→2.17; 256k lost q237's win while keeping most of the
-      // damage). CPU-dense small frames are handled surgically at the
-      // operator instead (q237's explicit band-key repartition).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     // NonFatal: a query failure is a per-query "failed" entry; a fatal
     // error must abort the bench rather than keep timing in a broken JVM
@@ -127,7 +112,7 @@ object Bench {
     }
 
     // PREFLIGHT (r10 lesson): analyze the whole catalog BEFORE the
-    // sigstore build, the warmup, and the R timed sweeps. A regenerated
+    // store builds, the warmup, and the R timed sweeps. A regenerated
     // testdata file that breaks a loader (r10: events.ts switched
     // parquet vintage and 18 queries died at analysis) is caught here
     // in seconds instead of burning a 20-minute sweep on exception
@@ -162,32 +147,21 @@ object Bench {
           finally sc.clearJobGroup()
         }.left.toOption.map(m => name -> m.take(300))
       finally ScratchCache.drain()
-    // q94 constructs against the sigstore artifact (q75/q100 against
-    // the cluster-label artifact) and triggers its lazy build —
-    // preflighted AFTER the timed builds below so the build cost lands
-    // in q94_sigstore_build / q75_labelstore_build, not the preflight.
-    val lazyBuilds = Set("q94_incremental_dedup", "q239_ivf_incremental",
-      "q241_nightly_refresh", // reads the sigstore AND ivfstore artifacts
-      "q75_dedup_clusters", "q100_canonical_docs", "q134_bucketed_join",
-      "q151_partition_pruning", "q153_incremental_agg",
-      "q156_jsonl_ingest", "q157_csv_ingest", "q158_crawl_admission",
-      "q159_corpus_build", "q160_policy_admission", "q161_stream_raw_ingest",
-      "q162_snapshot_diff", "q166_orc_roundtrip", "q167_robots_parse",
-      "q169_moved_pages", "q172_crawl_frontier",
-      "q192_recrawl_schedule", "q199_crawl_roi")
+    // Queries that construct against a store artifact trigger its lazy
+    // build — they are preflighted AFTER the timed builds below so the
+    // build cost lands in the store's detail key, not the preflight.
+    val stores = SparkEntry.catalogs.flatMap(_.stores)
+    val deferred = stores.flatMap(_.dependents).toSet
     val preflightFailed = collection.mutable.LinkedHashMap.empty[String, String]
-    allNames.filterNot(lazyBuilds).foreach(n => analyzeErr(n).foreach(preflightFailed += _))
+    allNames.filterNot(deferred).foreach(n => analyzeErr(n).foreach(preflightFailed += _))
 
-    // q94's corpus-signature artifact is run N's one-off output, not
-    // part of run N+1's ingest cost: build it before the timed sweeps
-    // so every timed q94 execution measures the incremental REPLAY —
-    // the plan a daily-ingest user actually runs. The build itself is
-    // timed and emitted in BENCH_DETAIL ("q94_sigstore_build") so the
-    // cost moved out of the catalog stays visible in the artifact.
-    // Guarded like every other failure mode: an environment break in
-    // the artifact build marks q94 preflight-failed (visible in
-    // BENCH_DETAIL) instead of crashing the whole bench before any
-    // record is written.
+    // Each store (see graft.core.Store) is built before the timed
+    // sweeps, and the build is timed and emitted in BENCH_DETAIL under
+    // the store's detail key, so the cost moved out of the catalog stays
+    // visible in the artifact. Guarded like every other failure mode: an
+    // environment break in a build marks its dependents preflight-failed
+    // (visible in BENCH_DETAIL) instead of crashing the whole bench
+    // before any record is written.
     // Builds get the same hang guard as the analysis preflight (r13
     // advice: an unbounded artifact build that hangs starves the whole
     // bench — the exact r12 failure mode). Budget is build-scale (these
@@ -208,62 +182,9 @@ object Bench {
       } finally ScratchCache.drain()
       (System.nanoTime() - t0) / 1e9
     }
-    val sigStoreBuildSec = timedBuild(Seq("q94_incremental_dedup"), "sigstore") {
-      graft.dedup.DedupQueries.ensureSigStore(spark, sfDir); ()
-    }
-    // q239's trained-IVF index — run N's one-off artifact (centroids +
-    // per-cell corpus loads); timed q239 runs measure the batch-side
-    // incremental replay only, the plan a daily-ingest user runs
-    val ivfStoreBuildSec = timedBuild(Seq("q239_ivf_incremental"), "ivfstore") {
-      graft.sim.SimilarityQueries.ensureIvfStore(spark, sfDir); ()
-    }
-    // the q75/q100 shared connected-components labeling — one fixpoint
-    // per corpus dir, replayed by both queries (see ensureLabelStore)
-    val labelStoreBuildSec = timedBuild(
-      Seq("q75_dedup_clusters", "q100_canonical_docs"), "labelstore") {
-      graft.dedup.DedupQueries.ensureLabelStore(spark, sfDir); ()
-    }
-    // q134's bucketed-table ingest — the one-off shuffle a lakehouse
-    // pays at write time so every later orderkey join is exchange-free;
-    // timed separately so the catalog entry measures the JOIN
-    val bucketStoreBuildSec = timedBuild(Seq("q134_bucketed_join"), "bucketstore") {
-      graft.layout.LayoutQueries.ensureBucketStore(spark, sfDir); ()
-    }
-    // q151's date-partitioned event store — the write-time layout cost
-    // a lake pays once so every day-scoped read lists one directory
-    val partStoreBuildSec = timedBuild(Seq("q151_partition_pruning"), "partstore") {
-      graft.layout.LayoutQueries.ensurePartStore(spark, sfDir); ()
-    }
-    // q153's materialized history aggregate — nightly-ETL's one full
-    // scan, paid once; timed q153 runs measure the delta merge only
-    val aggStoreBuildSec = timedBuild(Seq("q153_incremental_agg"), "aggstore") {
-      graft.layout.LayoutQueries.ensureAggStore(spark, sfDir); ()
-    }
-    // q156–q158's raw JSONL/CSV crawl dump — the corpus RENDER is test
-    // scaffolding (a real pipeline receives the raw files), so its cost
-    // must not land on the timed ingest queries
-    val rawStoreBuildSec = timedBuild(
-      Seq("q156_jsonl_ingest", "q157_csv_ingest", "q158_crawl_admission",
-        "q159_corpus_build", "q160_policy_admission", "q161_stream_raw_ingest"),
-      "rawstore") {
-      graft.ingest.IngestQueries.ensureRawStore(spark, sfDir); ()
-    }
-    // q162's previous-crawl digest artifact — snapshot N-1's one-off
-    // output; timed q162 runs measure the DIFF join only
-    val prevStoreBuildSec = timedBuild(Seq("q162_snapshot_diff", "q169_moved_pages", "q172_crawl_frontier"), "prevcrawl") {
-      graft.ingest.IngestQueries.ensurePrevStore(spark, sfDir); ()
-    }
-    // q167's fetched-robots store — a crawl fetches robots.txt bodies
-    // once per domain; timed q167 runs measure the PARSE
-    val robotsStoreBuildSec = timedBuild(Seq("q167_robots_parse"), "robots") {
-      graft.ingest.IngestQueries.ensureRobotsStore(spark, sfDir); ()
-    }
-    // q166's ORC lake table — the write-once format conversion; timed
-    // q166 runs measure the selective ORC read
-    val orcStoreBuildSec = timedBuild(Seq("q166_orc_roundtrip"), "orcstore") {
-      graft.layout.LayoutQueries.ensureOrcStore(spark, sfDir); ()
-    }
-    allNames.filter(lazyBuilds).filterNot(preflightFailed.keySet)
+    val buildSecs = stores.map(st =>
+      st.detailKey -> timedBuild(st.dependents, st.name)(st.ensure(spark, sfDir)))
+    allNames.filter(deferred).filterNot(preflightFailed.keySet)
       .foreach(n => analyzeErr(n).foreach(preflightFailed += _))
     if (preflightFailed.nonEmpty) {
       System.err.println(s"[bench] PREFLIGHT: ${preflightFailed.size}/${allNames.size} queries fail analysis — excluded from sweeps:")
@@ -379,8 +300,6 @@ object Bench {
           }
       case _ => None
     }.toMap
-    def value(name: String, med: Double, ok: Boolean): Double =
-      sweepValue(name, med, ok)
     def fmt(v: Double): String =
       if (v < 0) "-1" else "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def obj(pairs: Seq[(String, Double)]): String =
@@ -391,12 +310,12 @@ object Bench {
     // "failed", so the driver-visible line carries the breakage even
     // though the sweeps never ran them.
     val preflightEntries = preflightFailed.keys.toSeq.map(k => k -> -1.0)
-    val qsFull = (prelim.map { case (k, med, _, _, ok) => k -> value(k, med, ok) } ++ preflightEntries).sortBy(_._1)
+    val qsFull = (prelim.map { case (k, med, _, _, ok) => k -> sweepValue(k, med, ok) } ++ preflightEntries).sortBy(_._1)
     val qsMax = (prelim.map { case (k, _, _, mx, ok) => k -> (if (ok) mx else -1.0) } ++ preflightEntries).sortBy(_._1)
     val qsMed = (prelim.map { case (k, med, _, _, ok) => k -> (if (ok) med else -1.0) } ++ preflightEntries).sortBy(_._1)
     val failed = (prelim.collect { case (k, _, _, _, false) => k } ++ preflightFailed.keys)
       .sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = prelim.collect { case (k, med, _, _, true) => value(k, med, ok = true) }.sum
+    val total = prelim.collect { case (k, med, _, _, true) => sweepValue(k, med, ok = true) }.sum
 
     // Full-fidelity record (full query names, sweep medians/maxima,
     // EVERY isolated re-time attempt, prior-round adjudications) for
@@ -408,12 +327,11 @@ object Bench {
       val dir = if (b > p) "regression" else "improvement"
       s""""$k":{"prior":${fmt(p)},"before":${fmt(b)},"after":${fmt(a)},"direction":"$dir"}"""
     }.mkString("{", ",", "}")
-    def qstr(s: String): String =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString } + "\""
     val preflightDetail = preflightFailed.toSeq.sortBy(_._1)
-      .map { case (k, m) => s"${qstr(k)}:${qstr(m)}" }.mkString("{", ",", "}")
+      .map { case (k, m) => s"${Verify.jsonString(k)}:${Verify.jsonString(m)}" }.mkString("{", ",", "}")
+    val buildDetail = buildSecs.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString(",")
     val detail =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"q94_sigstore_build":${fmt(sigStoreBuildSec)},"q239_ivfstore_build":${fmt(ivfStoreBuildSec)},"q75_labelstore_build":${fmt(labelStoreBuildSec)},"q134_bucketstore_build":${fmt(bucketStoreBuildSec)},"q151_partstore_build":${fmt(partStoreBuildSec)},"q153_aggstore_build":${fmt(aggStoreBuildSec)},"q156_rawstore_build":${fmt(rawStoreBuildSec)},"q162_prevstore_build":${fmt(prevStoreBuildSec)},"q166_orcstore_build":${fmt(orcStoreBuildSec)},"q167_robotsstore_build":${fmt(robotsStoreBuildSec)},"queries":${obj(qsFull)},"queries_median":${obj(qsMed)},"queries_max":${obj(qsMax)},"queries_retimed":${obj(retimed.toSeq.sortBy(_._1))},"retime_attempts":${objArr(retimeAttempts.toSeq.sortBy(_._1))},"queries_adjudicated":$adjDetail,"preflight_failed":$preflightDetail,"failed":$failed,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,$buildDetail,"queries":${obj(qsFull)},"queries_median":${obj(qsMed)},"queries_max":${obj(qsMax)},"queries_retimed":${obj(retimed.toSeq.sortBy(_._1))},"retime_attempts":${objArr(retimeAttempts.toSeq.sortBy(_._1))},"queries_adjudicated":$adjDetail,"preflight_failed":$preflightDetail,"failed":$failed,"sf":"$sfDir"}"""
     val detailPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json"))
     java.nio.file.Files.write(detailPath, (detail + "\n").getBytes("UTF-8"))

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import graft.core.ScratchCache
+import graft.core.{ScratchCache, Sessions}
 
 /** Fixed quiet-box CANARY set for bench-drift adjudication.
   *
@@ -41,7 +40,9 @@ import graft.core.ScratchCache
   * Verify, and a DRIFT verdict's meaning depends on whether the box
   * was actually quiet, which only the operator knows.
   *
-  * Protocol: CANARY.md at the repo root.
+  * Usage: sbt "runMain graft.Canary [--stamp]" (SPARK_GRAFT_SF_DIR,
+  * SPARK_GRAFT_BENCH_RUNS), on [[graft.core.Sessions.local]]:
+  * SPARK_GRAFT_CPUS cores, else all. Protocol: CANARY.md at the repo root.
   */
 object Canary {
   /** Frozen set — do NOT grow it casually: baselines are only
@@ -71,16 +72,7 @@ object Canary {
     val basePath = sys.env.getOrElse("SPARK_GRAFT_CANARY_BASELINE",
       "CANARY_BASELINE.json")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     def timeOnce(name: String): Double = {
       ScratchCache.drain()

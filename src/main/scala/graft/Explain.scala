@@ -1,25 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Dev tool: print the formatted physical plan and isolated timings for
   * named catalog queries. Usage:
   *   sbt "runMain graft.Explain <sfDir> <query> [query ...]"
-  * With no query names: lists the catalog.
+  * With no query names: lists the catalog. Runs on
+  * [[graft.core.Sessions.local]]: SPARK_GRAFT_CPUS cores, else all.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     if (names.isEmpty) {
       SparkEntry.queries.keys.toSeq.sorted.foreach(println)
     } else names.foreach { name =>

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Sessions
 
 /** Dev tool: replicate a driver SF directory `factor`× into a local
   * bench directory, so scale claims can be validated one order of
@@ -21,6 +22,7 @@ import org.apache.spark.sql.functions._
   *    under q40 and stress nothing else.
   *
   * Usage: sbt "runMain graft.ScaleUp /root/testdata/sf0.1 /tmp/graft_sf1 10"
+  * (on [[graft.core.Sessions.local]]: SPARK_GRAFT_CPUS cores, else all)
   */
 object ScaleUp {
 
@@ -87,15 +89,7 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     write(spark, src, dst, factor)
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Sessions
 
 /** Dev tool: write an ADVERSARIALLY SKEWED variant of a testdata SF
   * directory, so the scale claims behind the dedup/similarity caps are
@@ -28,6 +29,7 @@ import org.apache.spark.sql.functions._
   * only), so spec assertions on the output are exact.
   *
   * Usage: sbt "runMain graft.SkewUp /root/testdata/sf0.1 /tmp/graft_skew 2000 1000 500 20000"
+  * (on [[graft.core.Sessions.local]]: SPARK_GRAFT_CPUS cores, else all)
   */
 object SkewUp {
 
@@ -90,15 +92,7 @@ object SkewUp {
     val templateN = args.lift(3).map(_.toInt).getOrElse(1000)
     val stopN = args.lift(4).map(_.toInt).getOrElse(500)
     val domN = args.lift(5).map(_.toInt).getOrElse(20000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     write(spark, src, dst, spamN, templateN, stopN, domN)
     Seq("documents", "embeddings").foreach { t =>
       println(s"[skewup] $t: ${spark.read.parquet(s"$dst/$t.parquet").count()} rows")

@@ -1,7 +1,7 @@
 package graft.apps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.EngineConfig
+import graft.core.{EngineConfig, Sessions}
 import graft.mr.MapReduce
 import graft.sinks.TextKVSink
 
@@ -16,6 +16,8 @@ import graft.sinks.TextKVSink
   *
   * Usage: `sbt "runMain graft.apps.WordCountMain <configFile>"`
   *        `sbt "runMain graft.apps.InvertedIndexMain <configFile>"`
+  * The session is [[graft.core.Sessions.builder]] on SPARK_GRAFT_MASTER,
+  * else `local[N_WORKER]`, with N_WORKER shuffle partitions.
   */
 private[apps] object AppRunner {
 
@@ -32,20 +34,17 @@ private[apps] object AppRunner {
     // runtime conf with EVERY builder config it can apply, so each
     // key the builder sets is saved first (value or absence) and
     // restored after the job — a shared session must not come back
-    // from a config-file-driven app with its parallelism or UI conf
-    // silently changed (the N_WORKER output-file contract — at most
+    // from a config-file-driven app with its parallelism, time zone or
+    // UI conf silently changed (the N_WORKER output-file contract — at most
     // N key-sorted files, merged output as the parity contract — is
     // TextKVSink's, not this conf's).
-    val builderConfs = Seq("spark.sql.shuffle.partitions", "spark.ui.enabled")
     val existing = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
       .filter(s => !s.sparkContext.isStopped)
     val preexisting = existing.isDefined
-    val saved = existing.map(s => builderConfs.map(k => k -> s.conf.getOption(k)))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${cfg.nWorker}]"))
-      .config("spark.sql.shuffle.partitions", cfg.nWorker)
-      .config("spark.ui.enabled", "false")
+    val saved = existing.map(s => Sessions.Confs.map(k => k -> s.conf.getOption(k)))
+    val spark = Sessions.builder(
+        sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${cfg.nWorker}]"), cfg.nWorker)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

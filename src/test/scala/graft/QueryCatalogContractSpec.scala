@@ -7,6 +7,9 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   *  - catalog names are globally unique (SparkEntry merges maps with
   *    ++, which would silently shadow a duplicate);
   *  - every oracleSql key has a query;
+  *  - the store list names only catalog queries, and its detail keys
+  *    and dependents (BENCH_DETAIL's build keys, Bench's deferred
+  *    preflight) are pinned;
   *  - no catalog output column is array-/map-/struct-typed — the
   *    driver's pandas sort+hash crashes on unhashable cells (the
   *    round-1 q18/q21/q31/q37 failure mode). Library APIs keep typed
@@ -33,6 +36,28 @@ class QueryCatalogContractSpec extends SparkTestBase {
     val reasons = SparkEntry.noOracleReasons.keySet
     assert(noOracle == reasons,
       s"undocumented no-oracle queries: ${noOracle -- reasons}; stale reasons: ${reasons -- noOracle}")
+  }
+
+  test("store list: dependents are catalog queries; detail keys and deferred set are pinned") {
+    val stores = SparkEntry.catalogs.flatMap(_.stores)
+    val unknown = stores.flatMap(_.dependents).toSet -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"store dependents that are not catalog queries: $unknown")
+    // BENCH_DETAIL.json's schema: one *_build key per store
+    assert(stores.map(_.detailKey).toSet == Set(
+      "q94_sigstore_build", "q239_ivfstore_build", "q75_labelstore_build",
+      "q134_bucketstore_build", "q151_partstore_build", "q153_aggstore_build",
+      "q156_rawstore_build", "q162_prevstore_build", "q166_orcstore_build",
+      "q167_robotsstore_build"))
+    // every query Bench preflights only after the store builds
+    assert(stores.flatMap(_.dependents).toSet == Set(
+      "q94_incremental_dedup", "q239_ivf_incremental", "q241_nightly_refresh",
+      "q75_dedup_clusters", "q100_canonical_docs", "q134_bucketed_join",
+      "q151_partition_pruning", "q153_incremental_agg",
+      "q156_jsonl_ingest", "q157_csv_ingest", "q158_crawl_admission",
+      "q159_corpus_build", "q160_policy_admission", "q161_stream_raw_ingest",
+      "q162_snapshot_diff", "q166_orc_roundtrip", "q167_robots_parse",
+      "q169_moved_pages", "q172_crawl_frontier",
+      "q192_recrawl_schedule", "q199_crawl_roi"))
   }
 
   test("no oracle SQL contains an init-order-nulled fragment") {

@@ -34,12 +34,8 @@ object SparkTestBase {
   private lazy val warehouse =
     java.nio.file.Files.createTempDirectory("graft-warehouse").toString
 
-  def session: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
+  def session: SparkSession = graft.core.Sessions.builder("local[4, 2]", 4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.warehouse.dir", warehouse) // keep bucketed-table tests out of the repo tree
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 }

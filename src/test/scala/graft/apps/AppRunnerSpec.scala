@@ -3,6 +3,7 @@ package graft.apps
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
+import graft.core.Sessions
 import graft.sinks.TextKVSink
 
 /** The executable entry points (config file → facade → O8 output dir),
@@ -19,12 +20,19 @@ class AppRunnerSpec extends SparkTestBase {
     val input = write(dir.resolve("input.txt"), "b a\na c\n")
     val cfg = write(dir.resolve("config.txt"),
       s"N_WORKER 2\nINPUTFILE $input\nDATADIR $dir\n")
-    val shuffleBefore = spark.conf.get("spark.sql.shuffle.partitions")
+    // a non-UTC zone, so restoring the factory's UTC zone is observable
+    val tz = "spark.sql.session.timeZone"
+    val tzBefore = spark.conf.get(tz)
+    spark.conf.set(tz, "America/New_York")
+    def confs = Sessions.Confs.map(k => k -> spark.conf.getOption(k))
+    val confsBefore = confs
     val rc = AppRunner.run(cfg, WordCountMain.app)
+    val confsAfter = confs
+    spark.conf.set(tz, tzBefore)
     assert(rc == 0)
-    // reuse path must not leave the shared session's parallelism
-    // mutated to the config file's N_WORKER
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == shuffleBefore)
+    // reuse path must not leave any conf the factory sets mutated —
+    // not the parallelism (N_WORKER), not the time zone, not the UI
+    assert(confsAfter == confsBefore)
     val outFiles = new java.io.File(s"$dir/output").listFiles()
       .filter(_.getName.startsWith("part-"))
     // ≤ N_WORKER files (Spark skips empty reducer partitions — the

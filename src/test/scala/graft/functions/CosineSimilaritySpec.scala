@@ -73,10 +73,8 @@ class CosineSimilaritySpec extends SparkTestBase {
     // rebuilds transparently for later suites).
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val withExt = SparkSession.builder()
-      .master("local[2]").appName("graft-ext-test")
+    val withExt = graft.core.Sessions.builder("local[2]", 2).appName("graft-ext-test")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       val c = withExt.sql("SELECT cosine_similarity(array(1D,0D), array(1D,0D)) AS c").head().getDouble(0)
