@@ -183,7 +183,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     val buildSecs = stores.map(st =>
-      st.detailKey -> timedBuild(st.dependents, st.name)(st.ensure(spark, sfDir)))
+      st.detailKey -> timedBuild(st.dependents, st.name)(st(spark, sfDir)))
     allNames.filter(deferred).filterNot(preflightFailed.keySet)
       .foreach(n => analyzeErr(n).foreach(preflightFailed += _))
     if (preflightFailed.nonEmpty) {

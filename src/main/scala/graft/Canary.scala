@@ -1,6 +1,7 @@
 package graft
 
-import graft.core.{ScratchCache, Sessions}
+import graft.core.{Preflight, ScratchCache, Sessions}
+import org.apache.spark.sql.SparkSession
 
 /** Fixed quiet-box CANARY set for bench-drift adjudication.
   *
@@ -35,10 +36,12 @@ import graft.core.{ScratchCache, Sessions}
   *
   * Output: one compact JSON line on stdout (same contract as Bench —
   * `run / outputStrategy := StdoutOutput` keeps it parseable), with
-  * per-query {secs, base, ratio, verdict}. Exit code 0 always — drift
-  * is a report for a human, not a gate; the correctness gate is
-  * Verify, and a DRIFT verdict's meaning depends on whether the box
-  * was actually quiet, which only the operator knows.
+  * per-query {secs, base, ratio, verdict}. A canary that throws or
+  * hangs is one `"verdict":"failed"` entry with its message, left out
+  * of `n_drift` and `floor_geomean`; the others still run. Exit code 0
+  * always — drift is a report for a human, not a gate; the correctness
+  * gate is Verify, and a DRIFT verdict's meaning depends on whether the
+  * box was actually quiet, which only the operator knows.
   *
   * Usage: sbt "runMain graft.Canary [--stamp]" (SPARK_GRAFT_SF_DIR,
   * SPARK_GRAFT_BENCH_RUNS), on [[graft.core.Sessions.local]]:
@@ -65,6 +68,32 @@ object Canary {
     * above the ±25% single-sample noise measured r7→r8 on byte-
     * identical code, below the 2× a real plan regression produces. */
   val DriftBand = 1.3
+  /** Per-attempt budget (construction + execution), as Verify's
+    * default: a hang detector, not a slowness detector. */
+  val TimeoutMs: Long = 600L * 1000L
+
+  /** One canary's isolated floor: the min over `runs` attempts, each
+    * with caches drained. Every attempt runs under [[Preflight.bounded]]
+    * in a job group that is cancelled on timeout, as Verify does, so a
+    * canary that throws or hangs is `Left(message)` — one failed entry
+    * — and stops after its first failed attempt. */
+  def floor(spark: SparkSession, sfDir: String, runs: Int)(name: String): Either[String, Double] = {
+    val sc = spark.sparkContext
+    def timeOnce(): Either[String, Double] = {
+      ScratchCache.drain()
+      try Preflight.bounded(name, TimeoutMs, onTimeout = () => sc.cancelJobGroup(s"canary-$name")) {
+        sc.setJobGroup(s"canary-$name", name, interruptOnCancel = true)
+        try {
+          val t0 = System.nanoTime()
+          SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } finally sc.clearJobGroup()
+      } finally ScratchCache.drain()
+    }
+    (1 to runs).foldLeft[Either[String, Double]](Right(Double.PositiveInfinity)) { (best, _) =>
+      best.flatMap(b => timeOnce().map(math.min(b, _)))
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val stamp = args.contains("--stamp")
@@ -74,21 +103,15 @@ object Canary {
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val spark = Sessions.local()
 
-    def timeOnce(name: String): Double = {
-      ScratchCache.drain()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val s = (System.nanoTime() - t0) / 1e9
-      ScratchCache.drain()
-      s
-    }
     // warmup: JVM/codegen/parquet-footer costs land here, not on the
     // first canary
-    timeOnce(CanarySet.head)
+    floor(spark, sfDir, runs = 1)(CanarySet.head)
 
-    val floors: Seq[(String, Double)] = CanarySet.map { n =>
-      n -> (1 to runs).map(_ => timeOnce(n)).min
+    val results: Seq[(String, Either[String, Double])] =
+      CanarySet.map(n => n -> floor(spark, sfDir, runs)(n))
+    val floors: Seq[(String, Double)] = results.flatMap {
+      case (n, Left(m)) => System.err.println(s"[canary] $n failed: $m"); None
+      case (n, Right(s)) => Some(n -> s)
     }
 
     def r3(d: Double) = math.rint(d * 1000) / 1000
@@ -137,16 +160,18 @@ object Canary {
         }
       }
 
-    val perQ = floors.map { case (n, s) =>
-      val b = baseline.get(n)
-      val verdict = b match {
-        case None => if (stamp) "stamped" else "no_baseline"
-        case Some(bb) if s > bb * DriftBand => "DRIFT"
-        case Some(bb) if s < bb / DriftBand => "FAST"
-        case Some(_) => "ok"
-      }
-      val extra = b.map(bb => s""","base":${r3(bb)},"ratio":${r3(s / bb)}""").getOrElse("")
-      s""""$n":{"secs":${r3(s)}$extra,"verdict":"$verdict"}"""
+    val perQ = results.map {
+      case (n, Left(m)) => s""""$n":{"verdict":"failed","message":${Verify.jsonString(m.take(300))}}"""
+      case (n, Right(s)) =>
+        val b = baseline.get(n)
+        val verdict = b match {
+          case None => if (stamp) "stamped" else "no_baseline"
+          case Some(bb) if s > bb * DriftBand => "DRIFT"
+          case Some(bb) if s < bb / DriftBand => "FAST"
+          case Some(_) => "ok"
+        }
+        val extra = b.map(bb => s""","base":${r3(bb)},"ratio":${r3(s / bb)}""").getOrElse("")
+        s""""$n":{"secs":${r3(s)}$extra,"verdict":"$verdict"}"""
     }.mkString(",")
 
     if (stamp) {

@@ -20,17 +20,8 @@ trait QueryCatalog {
     * artifact carries the distinction. */
   def noOracleReasons: Map[String, String] = Map.empty
   /** The one-off artifacts this catalog's queries replay (see [[Store]]). */
-  def stores: Seq[Store] = Seq.empty
+  def stores: Seq[Store[_]] = Seq.empty
 }
-
-/** A memoized per-corpus artifact that some catalog queries read at
-  * construction: run N's one-off output, which run N+1 replays.
-  * Bench builds each store once, untimed by the sweeps, and records
-  * the build under `detailKey` in BENCH_DETAIL.json; `dependents` are
-  * analyzed only after the build, and are marked failed if it fails.
-  * `ensure` builds the store (or returns at once when it exists). */
-final case class Store(name: String, detailKey: String, dependents: Seq[String],
-                       ensure: (SparkSession, String) => Unit)
 
 /** Cross-engine determinism helpers.
   *

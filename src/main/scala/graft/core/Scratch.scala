@@ -1,17 +1,16 @@
 package graft.core
 
-/** Scratch-store paths for memoized derived artifacts (sigstore,
-  * labelstore, bucket/part/agg/evo stores).
+/** Scratch paths for the memoized artifact stores.
   *
-  * Each ensure* builder memoizes per process (a ConcurrentHashMap
-  * keyed by corpus dir, plus session identity where the store embeds
-  * session-level read confs) and writes with mode("overwrite"). The
-  * path must therefore be unique PER WRITER, or two concurrent
-  * runners over the same corpus — or two memo keys colliding on a
-  * short hash — overwrite the store another runner is mid-read
-  * (the r12 advice finding). Uniqueness here comes from:
+  * The memo policy lives in [[Store]]: each store builds once per
+  * (session identity, corpus dir) in this process and writes with
+  * mode("overwrite") under `storePath(store name, memo key)`. The path
+  * must therefore be unique PER WRITER, or two concurrent runners over
+  * the same corpus — or two memo keys colliding on a short hash —
+  * overwrite the store another runner is mid-read (the r12 advice
+  * finding). Uniqueness here comes from:
   *  - the JVM pid: concurrent processes never share a path, and a
-  *    fresh process always rebuilds (its memo map starts empty), so a
+  *    fresh process always rebuilds (its memo starts empty), so a
   *    stale half-written store from a crashed run is never read;
   *  - 16 hex chars of md5(memo key): two keys sharing a path within
   *    one process is effectively impossible (vs the previous 32-bit

@@ -3,7 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.{Det, QueryCatalog, Scratch, Store, Tables}
+import graft.core.{Det, QueryCatalog, Store, Tables}
 import graft.dedup.UrlCanon
 
 /** Raw crawl ingest — the one shape a 100 TB curation pipeline hits
@@ -55,72 +55,64 @@ object IngestQueries extends QueryCatalog {
   /** q158's quality gate (chars), ~18% of the fixture below it. */
   private val MinChars = 150L
 
-  /** One raw dump per (process, session, corpus): `jsonl/` renders each
+  /** One raw dump per (session, corpus): `jsonl/` renders each
     * document as a JSON object line (truncated by one char — always
     * the closing brace — for planted-bad docs, so the line is
     * guaranteed malformed), plus one RECRAWL line per planted-dup doc
     * (url + '#dup', exercising fragment-stripping canonicalization and
     * q158's dedup stage); `csv/` renders orders with type garbage
-    * ("N/A" in the DOUBLE price column) for planted-bad keys. */
-  private val rawStores =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  def ensureRawStore(s: SparkSession, dir: String): (String, String) = {
-    val key = s"${System.identityHashCode(s)}|$dir"
-    rawStores.computeIfAbsent(key, _ => {
-      val base = java.nio.file.Paths.get(Scratch.storePath("rawstore", key))
-      val jsonlPath = base.resolve("jsonl").toString
-      val csvPath = base.resolve("csv").toString
-      val docs = Tables.documents(s, dir)
-        .selectExpr("doc_id", "text", "lang", "source", "n_chars",
-          s"${UrlCanon.rawUrlSql} AS url", s"$jsonBadSql AS bad",
-          s"$dupSelSql AS dup")
-      // struct field order is the rendered field order; the reader
-      // binds by NAME, so order is presentation only
-      def render(d: DataFrame) = d.withColumn("line", to_json(struct(
-        col("doc_id"), col("url"), col("lang"), col("source"),
-        col("n_chars"), col("text"))))
-      val originals = render(docs)
-        .select(when(col("bad"),
-            expr("substring(line, 1, length(line) - 1)")).otherwise(col("line"))
-          .as("value"))
-      // recrawls: a clean second fetch of the same page, raw url noisier
-      // by one fragment (stripped by canonicalization → same dedup key)
-      val recrawls = render(docs.filter(!col("bad") && col("dup"))
-          .withColumn("url", concat(col("url"), lit("#dup"))))
-        .select(col("line").as("value"))
-      originals.unionAll(recrawls).write.mode("overwrite").text(jsonlPath)
-      val orders = Tables.orders(s, dir)
-        .selectExpr("o_orderkey", "o_custkey", "o_orderstatus",
-          "o_totalprice", "o_orderpriority", s"$csvBadSql AS bad")
-      // render guard (r13 advice): concat_ws silently SKIPS null
-      // columns — a null would shift fields left and mis-parse the row
-      // into unplanned quarantine — and the unquoted render breaks on
-      // embedded commas. Fail loudly at build time instead.
-      val badRender = orders.filter(
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderpriority").map(col(_).isNull).reduce(_ || _) ||
-          col("o_orderstatus").contains(",") || col("o_orderpriority").contains(","))
-        .count()
-      require(badRender == 0,
-        s"$badRender orders rows have null or comma-bearing render columns — " +
-          "the unquoted CSV render would silently mis-parse them")
-      orders.select(concat_ws(",",
-          col("o_orderkey").cast("string"), col("o_custkey").cast("string"),
-          col("o_orderstatus"),
-          when(col("bad"), lit("N/A")).otherwise(col("o_totalprice").cast("string")),
-          col("o_orderpriority")).as("value"))
-        .write.mode("overwrite").text(csvPath)
-      (jsonlPath, csvPath)
-    })
-  }
-  /** The corpus RENDER is test scaffolding (a real pipeline receives
-    * the raw files), so its cost must not land on the timed ingest
-    * queries that read the dump. */
-  private val rawStore = Store("rawstore", "q156_rawstore_build",
-    Seq("q156_jsonl_ingest", "q157_csv_ingest", "q158_crawl_admission",
-      "q159_corpus_build", "q160_policy_admission", "q161_stream_raw_ingest"),
-    ensureRawStore(_, _))
+    * ("N/A" in the DOUBLE price column) for planted-bad keys. The
+    * corpus RENDER is test scaffolding (a real pipeline receives the
+    * raw files), so its cost must not land on the timed ingest queries
+    * that read the dump. q200 and q208 read it through [[fetches]]. */
+  val rawStore = new Store[(String, String)]("rawstore", "q156_rawstore_build",
+      Seq("q156_jsonl_ingest", "q157_csv_ingest", "q158_crawl_admission",
+        "q159_corpus_build", "q160_policy_admission", "q161_stream_raw_ingest",
+        "q200_policy_churn", "q208_fetch_drain"))((s, dir, base) => {
+    val jsonlPath = base.resolve("jsonl").toString
+    val csvPath = base.resolve("csv").toString
+    val docs = Tables.documents(s, dir)
+      .selectExpr("doc_id", "text", "lang", "source", "n_chars",
+        s"${UrlCanon.rawUrlSql} AS url", s"$jsonBadSql AS bad",
+        s"$dupSelSql AS dup")
+    // struct field order is the rendered field order; the reader
+    // binds by NAME, so order is presentation only
+    def render(d: DataFrame) = d.withColumn("line", to_json(struct(
+      col("doc_id"), col("url"), col("lang"), col("source"),
+      col("n_chars"), col("text"))))
+    val originals = render(docs)
+      .select(when(col("bad"),
+          expr("substring(line, 1, length(line) - 1)")).otherwise(col("line"))
+        .as("value"))
+    // recrawls: a clean second fetch of the same page, raw url noisier
+    // by one fragment (stripped by canonicalization → same dedup key)
+    val recrawls = render(docs.filter(!col("bad") && col("dup"))
+        .withColumn("url", concat(col("url"), lit("#dup"))))
+      .select(col("line").as("value"))
+    originals.unionAll(recrawls).write.mode("overwrite").text(jsonlPath)
+    val orders = Tables.orders(s, dir)
+      .selectExpr("o_orderkey", "o_custkey", "o_orderstatus",
+        "o_totalprice", "o_orderpriority", s"$csvBadSql AS bad")
+    // render guard (r13 advice): concat_ws silently SKIPS null
+    // columns — a null would shift fields left and mis-parse the row
+    // into unplanned quarantine — and the unquoted render breaks on
+    // embedded commas. Fail loudly at build time instead.
+    val badRender = orders.filter(
+      Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderpriority").map(col(_).isNull).reduce(_ || _) ||
+        col("o_orderstatus").contains(",") || col("o_orderpriority").contains(","))
+      .count()
+    require(badRender == 0,
+      s"$badRender orders rows have null or comma-bearing render columns — " +
+        "the unquoted CSV render would silently mis-parse them")
+    orders.select(concat_ws(",",
+        col("o_orderkey").cast("string"), col("o_custkey").cast("string"),
+        col("o_orderstatus"),
+        when(col("bad"), lit("N/A")).otherwise(col("o_totalprice").cast("string")),
+        col("o_orderpriority")).as("value"))
+      .write.mode("overwrite").text(csvPath)
+    (jsonlPath, csvPath)
+  })
 
   private val jsonlSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("url", StringType),
@@ -132,7 +124,7 @@ object IngestQueries extends QueryCatalog {
     s.read.schema(jsonlSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
-      .json(ensureRawStore(s, dir)._1)
+      .json(rawStore(s, dir)._1)
 
   /** Streaming twin of [[readJsonl]]: the same schema'd permissive
     * parse over a FILE-SOURCE stream — the continuous crawl loader
@@ -146,7 +138,7 @@ object IngestQueries extends QueryCatalog {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
       .option("maxFilesPerTrigger", 1)
-      .json(ensureRawStore(s, dir)._1)
+      .json(rawStore(s, dir)._1)
 
   private val csvSchema = StructType(Seq(
     StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
@@ -157,7 +149,7 @@ object IngestQueries extends QueryCatalog {
     s.read.schema(csvSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
-      .csv(ensureRawStore(s, dir)._2)
+      .csv(rawStore(s, dir)._2)
 
   // ---------------------------------------------------------------- q156
   /** JSONL ingest roll-up: per-language doc counts + char volume over
@@ -684,38 +676,28 @@ object IngestQueries extends QueryCatalog {
     s"NOT ($prevSelSql) AND substring(md5('move|' || doc_id), 1, 1) < '8'"
   private val GhostOffset = 1000000000L
 
-  private val prevStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The previous-crawl digest artifact, memoized per (session,
-    * corpus) and written once — the persisted state a daily re-crawl
-    * diffs against. */
-  def ensurePrevStore(s: SparkSession, dir: String): String = {
-    val key = s"${System.identityHashCode(s)}|$dir"
-    prevStores.computeIfAbsent(key, _ => {
-      val path = Scratch.storePath("prevcrawl", key)
-      val docs = Tables.documents(s, dir)
-      docs.filter(expr(prevSelSql))
-        .selectExpr("doc_id", "source", s"$prevDigestSql AS digest")
-        .unionAll(docs.filter(expr(moveSelSql))
-          .selectExpr(s"doc_id + ${GhostOffset}L AS doc_id", "source",
-            "md5(text) AS digest"))
-        .write.mode("overwrite").parquet(path)
-      path
-    })
-  }
-  /** Snapshot N-1's one-off output; timed runs of its readers measure
-    * the diff joins only. q192 and q199 read it through
-    * [[snapshotVerdictCounts]]. */
-  private val prevStore = Store("prevcrawl", "q162_prevstore_build",
-    Seq("q162_snapshot_diff", "q169_moved_pages", "q172_crawl_frontier",
-      "q192_recrawl_schedule", "q199_crawl_roi"), ensurePrevStore(_, _))
+  /** The previous-crawl digest artifact — the persisted state a daily
+    * re-crawl diffs against. Snapshot N-1's one-off output; timed runs
+    * of its readers measure the diff joins only. q192 and q199 read it
+    * through [[snapshotVerdictCounts]]. */
+  val prevStore = new Store[String]("prevcrawl", "q162_prevstore_build",
+      Seq("q162_snapshot_diff", "q169_moved_pages", "q172_crawl_frontier",
+        "q192_recrawl_schedule", "q199_crawl_roi"))((s, dir, path) => {
+    val docs = Tables.documents(s, dir)
+    docs.filter(expr(prevSelSql))
+      .selectExpr("doc_id", "source", s"$prevDigestSql AS digest")
+      .unionAll(docs.filter(expr(moveSelSql))
+        .selectExpr(s"doc_id + ${GhostOffset}L AS doc_id", "source",
+          "md5(text) AS digest"))
+      .write.mode("overwrite").parquet(path.toString)
+    path.toString
+  })
 
   /** Per-source verdict counts of the id-keyed snapshot diff — shared
     * by q162's report and q192's recrawl schedule. */
   private def snapshotVerdictCounts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val prev = s.read.parquet(ensurePrevStore(s, dir))
+    val prev = s.read.parquet(prevStore(s, dir))
       .select($"doc_id".as("p_id"), $"source".as("p_source"), $"digest".as("p_digest"))
     val cur = Tables.documents(s, dir)
       .filter(expr(curSelSql))
@@ -934,7 +916,7 @@ object IngestQueries extends QueryCatalog {
     * 100 TB. */
   private def q169(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val prev = s.read.parquet(ensurePrevStore(s, dir))
+    val prev = s.read.parquet(prevStore(s, dir))
     val added = Tables.documents(s, dir)
       .filter(expr(curSelSql))
       .selectExpr("doc_id", "source", "md5(text) AS digest")
@@ -1074,7 +1056,7 @@ object IngestQueries extends QueryCatalog {
   private def q172(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val prev = s.read.parquet(ensurePrevStore(s, dir))
+    val prev = s.read.parquet(prevStore(s, dir))
     val cls = graft.core.ScratchCache.persist(Tables.documents(s, dir)
       .filter(expr(curSelSql))
       .selectExpr("doc_id", "source", "md5(text) AS digest")
@@ -1195,46 +1177,38 @@ object IngestQueries extends QueryCatalog {
   private val delayValSql =
     "(instr('0123456789abcdef', substring(md5('delay|' || domain), 2, 1)))"
 
-  private val robotsStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def ensureRobotsStore(s: SparkSession, dir: String): String = {
-    val key = s"${System.identityHashCode(s)}|$dir"
-    robotsStores.computeIfAbsent(key, _ => {
-      val path = Scratch.storePath("robots", key)
-      Tables.documents(s, dir)
-        .selectExpr(s"${UrlCanon.rawUrlSql} AS raw_url")
-        .selectExpr(s"${UrlCanon.strippedSql("raw_url")} AS u")
-        .selectExpr(s"${UrlCanon.hostSql("u")} AS host")
-        .selectExpr(s"${UrlCanon.domainSql("host")} AS domain")
-        .distinct()
-        // concat_ws's null-skip is INTENTIONAL here: the absent
-        // Crawl-delay line simply doesn't render (unlike the CSV
-        // store, where a skipped field would shift columns)
-        .selectExpr("domain", s"""concat_ws('\\n',
-          |  '# robots.txt for ' || domain,
-          |  'User-agent: *',
-          |  CASE WHEN $robotsSelSql THEN 'Disallow: $RobotsPrefix' ELSE 'Allow: /' END,
-          |  CASE WHEN $delaySelSql THEN 'Crawl-delay: ' || $delayValSql END,
-          |  '',
-          |  'User-agent: badbot',
-          |  'Disallow: /') AS body""".stripMargin)
-        .select(to_json(struct(col("domain"), col("body"))).as("value"))
-        .write.mode("overwrite").text(path)
-      path
-    })
-  }
   /** A crawl fetches robots.txt bodies once per domain; timed q167
     * runs measure the PARSE. */
-  private val robotsStore = Store("robots", "q167_robotsstore_build",
-    Seq("q167_robots_parse"), ensureRobotsStore(_, _))
+  val robotsStore = new Store[String]("robots", "q167_robotsstore_build",
+      Seq("q167_robots_parse"))((s, dir, path) => {
+    Tables.documents(s, dir)
+      .selectExpr(s"${UrlCanon.rawUrlSql} AS raw_url")
+      .selectExpr(s"${UrlCanon.strippedSql("raw_url")} AS u")
+      .selectExpr(s"${UrlCanon.hostSql("u")} AS host")
+      .selectExpr(s"${UrlCanon.domainSql("host")} AS domain")
+      .distinct()
+      // concat_ws's null-skip is INTENTIONAL here: the absent
+      // Crawl-delay line simply doesn't render (unlike the CSV
+      // store, where a skipped field would shift columns)
+      .selectExpr("domain", s"""concat_ws('\\n',
+        |  '# robots.txt for ' || domain,
+        |  'User-agent: *',
+        |  CASE WHEN $robotsSelSql THEN 'Disallow: $RobotsPrefix' ELSE 'Allow: /' END,
+        |  CASE WHEN $delaySelSql THEN 'Crawl-delay: ' || $delayValSql END,
+        |  '',
+        |  'User-agent: badbot',
+        |  'Disallow: /') AS body""".stripMargin)
+      .select(to_json(struct(col("domain"), col("body"))).as("value"))
+      .write.mode("overwrite").text(path.toString)
+    path.toString
+  })
 
   private def q167(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val rob = s.read.schema(StructType(Seq(
         StructField("domain", StringType), StructField("body", StringType))))
-      .json(ensureRobotsStore(s, dir))
+      .json(robotsStore(s, dir))
     val attributed = rob
       .select($"domain", posexplode(split($"body", "\n")).as(Seq("ln", "line")))
       .selectExpr("domain", "ln",
@@ -1406,7 +1380,7 @@ object IngestQueries extends QueryCatalog {
        |FROM cells, t ORDER BY license, lang""".stripMargin
   }
 
-  override val stores: Seq[Store] = Seq(rawStore, prevStore, robotsStore)
+  override val stores: Seq[Store[_]] = Seq(rawStore, prevStore, robotsStore)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q221_license_mix" -> q221,

@@ -3,13 +3,15 @@ package graft
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 /** Driver-contract regression net over the whole catalog (analysis
-  * only — no query executes):
+  * only — apart from the Canary and entry() checks, no query executes):
   *  - catalog names are globally unique (SparkEntry merges maps with
   *    ++, which would silently shadow a duplicate);
   *  - every oracleSql key has a query;
   *  - the store list names only catalog queries, and its detail keys
   *    and dependents (BENCH_DETAIL's build keys, Bench's deferred
-  *    preflight) are pinned;
+  *    preflight) are pinned; no query outside a store's dependents
+  *    builds that store;
+  *  - Canary turns a canary that throws into one failed entry;
   *  - no catalog output column is array-/map-/struct-typed — the
   *    driver's pandas sort+hash crashes on unhashable cells (the
   *    round-1 q18/q21/q31/q37 failure mode). Library APIs keep typed
@@ -47,15 +49,16 @@ class QueryCatalogContractSpec extends SparkTestBase {
       "q94_sigstore_build", "q239_ivfstore_build", "q75_labelstore_build",
       "q134_bucketstore_build", "q151_partstore_build", "q153_aggstore_build",
       "q156_rawstore_build", "q162_prevstore_build", "q166_orcstore_build",
-      "q167_robotsstore_build"))
+      "q167_robotsstore_build", "q142_evostore_build"))
     // every query Bench preflights only after the store builds
     assert(stores.flatMap(_.dependents).toSet == Set(
       "q94_incremental_dedup", "q239_ivf_incremental", "q241_nightly_refresh",
-      "q75_dedup_clusters", "q100_canonical_docs", "q134_bucketed_join",
+      "q75_dedup_clusters", "q100_canonical_docs", "q222_cluster_size_histogram",
+      "q134_bucketed_join", "q142_schema_evolution",
       "q151_partition_pruning", "q153_incremental_agg",
       "q156_jsonl_ingest", "q157_csv_ingest", "q158_crawl_admission",
       "q159_corpus_build", "q160_policy_admission", "q161_stream_raw_ingest",
-      "q162_snapshot_diff", "q166_orc_roundtrip", "q167_robots_parse",
+      "q200_policy_churn", "q208_fetch_drain", "q162_snapshot_diff", "q166_orc_roundtrip", "q167_robots_parse",
       "q169_moved_pages", "q172_crawl_frontier",
       "q192_recrawl_schedule", "q199_crawl_roi"))
   }
@@ -85,11 +88,22 @@ class QueryCatalogContractSpec extends SparkTestBase {
 
   test("no catalog output column is array/map/struct typed (driver hashability)") {
     assume(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/lineitem.parquet")))
+    // Every non-dependent query is constructed first, on a session no
+    // store has been built for; a store built by then has a reader its
+    // dependents do not name (Bench would preflight that reader before
+    // the timed build). The session is replaced after each such
+    // builder so every undeclared reader is named, not just the first.
+    val stores = SparkEntry.catalogs.flatMap(_.stores)
+    val (deps, others) = SparkEntry.queries.toSeq.sortBy(_._1)
+      .partition { case (name, _) => stores.exists(_.dependents.contains(name)) }
+    var session = spark.newSession()
+    val undeclared = collection.mutable.Buffer.empty[String]
     // bounded per query (r12: one never-returning builder hung this
     // very test along with Bench/Verify) — a hang or error here is a
     // NAMED offender, not a dead suite
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      graft.core.Preflight.bounded(name) { fn(spark, dir).schema } match {
+    def offendersOf(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): Seq[String] =
+      graft.core.Preflight.bounded(name) { fn(session, dir).schema } match {
         case Left(msg) => Seq(s"$name: builder failed preflight: $msg")
         case Right(schema: StructType) => schema.fields.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
@@ -97,9 +111,28 @@ class QueryCatalogContractSpec extends SparkTestBase {
             f.dataType.isInstanceOf[StructType] => s"$name.${f.name}: ${f.dataType.simpleString}"
         }.toSeq
       }
-    }
+    val offenders = others.flatMap { case (name, fn) =>
+      val found = offendersOf(name, fn)
+      val built = stores.filter(_.built(session, dir))
+      if (built.nonEmpty) {
+        undeclared += s"$name builds ${built.map(_.name).mkString(", ")}"
+        session = spark.newSession()
+      }
+      found
+    } ++ deps.flatMap { case (name, fn) => offendersOf(name, fn) }
+    assert(undeclared.isEmpty,
+      s"store readers missing from the store's dependents: $undeclared")
     assert(offenders.isEmpty,
       s"serialize these with array_join/to_json for the driver harness: $offenders")
+  }
+
+  test("Canary floor step: a throwing query is one failed entry; the next query still times") {
+    assume(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/lineitem.parquet")))
+    val floor = Canary.floor(spark, dir, runs = 2) _
+    val failed = floor("q00_no_such_canary")
+    assert(failed.left.exists(_.contains("q00_no_such_canary")), s"expected a named failure: $failed")
+    val ok = floor("q01_pricing_summary")
+    assert(ok.exists(s => s > 0 && s < Canary.TimeoutMs / 1000.0), s"expected a finite floor: $ok")
   }
 
   test("entry() — the driver's smoke flagship — returns rows on the sf0.001 fixture") {

@@ -18,7 +18,7 @@ class IncrementalDedupSpec extends SparkTestBase {
     val direct = DedupQueries.q94Recompute(spark, dir)
       .collect().map(_.toSeq).toSeq
     graft.core.ScratchCache.drain()
-    // the CATALOG entry is the incremental path (ensureSigStore +
+    // the CATALOG entry is the incremental path (sigStore +
     // q94Incremental) — what verify/bench measure; pin it against the
     // recompute-both-sides twin, which is also the oracle SQL's shape
     val incr = DedupQueries.queries("q94_incremental_dedup")(spark, dir)

@@ -29,8 +29,8 @@ class NightlyRefreshSpec extends SparkTestBase {
 
   test("plan reads both artifacts; funnel narrows; counts conserve; q94 agreement") {
     assume(fixture)
-    val sig = DedupQueries.ensureSigStore(spark, dir)
-    val ivf = graft.sim.SimilarityQueries.ensureIvfStore(spark, dir)
+    val sig = DedupQueries.sigStore(spark, dir)
+    val ivf = graft.sim.SimilarityQueries.ivfStore(spark, dir)
     val df = DedupQueries.queries("q241_nightly_refresh")(spark, dir)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains(sig), s"pipeline must scan the sigstore artifact: $sig")

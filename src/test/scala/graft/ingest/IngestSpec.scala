@@ -443,7 +443,7 @@ class IngestSpec extends SparkTestBase {
 
 object IngestSpec {
   // expose the module's private readers via the same store the queries
-  // use — go through a tiny shim built on the public ensureRawStore
+  // use — go through a tiny shim built on the public rawStore
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.types._
   private val jsonlSchema = StructType(Seq(
@@ -458,9 +458,9 @@ object IngestSpec {
   def readJsonl(s: SparkSession, dir: String): DataFrame =
     s.read.schema(jsonlSchema)
       .option("columnNameOfCorruptRecord", "_corrupt")
-      .json(IngestQueries.ensureRawStore(s, dir)._1)
+      .json(IngestQueries.rawStore(s, dir)._1)
   def readCsv(s: SparkSession, dir: String): DataFrame =
     s.read.schema(csvSchema)
       .option("columnNameOfCorruptRecord", "_corrupt")
-      .csv(IngestQueries.ensureRawStore(s, dir)._2)
+      .csv(IngestQueries.rawStore(s, dir)._2)
 }

@@ -139,7 +139,7 @@ class LayoutSpec extends SparkTestBase {
   test("q142: mergeSchema unifies vintages — old rows back-fill NULL for the added column") {
     assume(fixture)
     import org.apache.spark.sql.functions._
-    val (oldPath, newPath) = LayoutQueries.ensureEvoStore(spark, dir)
+    val (oldPath, newPath) = LayoutQueries.evoStore(spark, dir)
     val v1 = spark.read.parquet(oldPath)
     assert(!v1.columns.contains("o_channel"), "old vintage must not carry the new column")
     val merged = spark.read.option("mergeSchema", "true").parquet(oldPath, newPath)
@@ -209,7 +209,7 @@ class LayoutSpec extends SparkTestBase {
     val scan = scans.head
     assert(scan.partitionFilters.nonEmpty,
       s"event_date filter must be a PARTITION filter, got:\n${scan.metadata}")
-    val (storePath, _) = LayoutQueries.ensurePartStore(spark, dir)
+    val (storePath, _) = LayoutQueries.partStore(spark, dir)
     val totalDays = new java.io.File(storePath).listFiles()
       .count(_.getName.startsWith("event_date="))
     val scannedFiles = scan.metrics("numFiles").value

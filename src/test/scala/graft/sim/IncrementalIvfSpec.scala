@@ -57,7 +57,7 @@ class IncrementalIvfSpec extends SparkTestBase {
 
   test("stored centroids round-trip the live training frame exactly") {
     assume(fixture)
-    val store = SimilarityQueries.ensureIvfStore(spark, dir)
+    val store = SimilarityQueries.ivfStore(spark, dir)
     val stored = spark.read.parquet(s"$store/cents")
       .select(col("cent_id").cast("long"), col("cv"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toVector).toMap
@@ -71,7 +71,7 @@ class IncrementalIvfSpec extends SparkTestBase {
 
   test("the replay's corpus side comes from the store, and the gate has ground truth") {
     assume(fixture)
-    val store = SimilarityQueries.ensureIvfStore(spark, dir)
+    val store = SimilarityQueries.ivfStore(spark, dir)
     val natural = SimilarityQueries.q239Plan(spark, dir)
     // (3) the executed plan reads the persisted index for both
     // centroids and loads — the corpus never re-enters the plan except
@@ -113,7 +113,7 @@ class IncrementalIvfSpec extends SparkTestBase {
     assume(fixture)
     val storeB = tmp()
     try {
-      val storeA = SimilarityQueries.ensureIvfStore(spark, dir)
+      val storeA = SimilarityQueries.ivfStore(spark, dir)
       // day N: a model shift arrives with the batch and the monitor flags
       val shifted = SimilarityQueries.withVec(spark, dir)
         .filter(expr(SimilarityQueries.q239CarveExpr))
