@@ -1,5 +1,6 @@
 package graft.apps
 
+import scala.collection.immutable.ArraySeq
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
@@ -30,6 +31,22 @@ object InvertedIndex {
   def viaFacade(lines: Dataset[String], numPartitions: Int): Dataset[(String, Seq[String])] =
     MapReduce.run(lines,
       (no, line) => { val pos = no.toString; Tokens(line).map(w => (w, pos)) },
-      (_, vs) => vs.toSeq.distinct.sorted, // string sort + unique, src/InvertedIndex.cpp:35-36
+      (_, vs) => sortUnique(vs),
       numPartitions)
+
+  /** The reference reducer's `sort` + `unique` (`src/InvertedIndex.cpp:35-36`):
+    * the values sorted by `String.compareTo` (so "10" < "2"), adjacent
+    * duplicates dropped. Equal to `vs.toSeq.distinct.sorted`, with one
+    * array and no hash set. */
+  private[apps] def sortUnique(vs: Iterator[String]): Seq[String] = {
+    val a = vs.toArray
+    java.util.Arrays.sort(a.asInstanceOf[Array[AnyRef]])
+    var n = 0
+    var i = 0
+    while (i < a.length) {
+      if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
+      i += 1
+    }
+    ArraySeq.unsafeWrapArray(if (n == a.length) a else java.util.Arrays.copyOf(a, n))
+  }
 }

@@ -1,7 +1,7 @@
 package graft.mr
 
 import java.nio.charset.StandardCharsets.UTF_8
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -33,8 +33,10 @@ import org.apache.spark.sql.functions._
   * Scale note: both paths keep the shuffle far below one row per
   * emitted pair, and Catalyst never sees a raw pair. Each map task runs
   * one bounded combiner ([[combine]]) over its pairs: it folds each
-  * key's values into a buffer and flushes one `(key, buffer)` row per
-  * buffered key every [[CombineCap]] pairs and at the end of the task.
+  * key's values into a buffer, held in a String-keyed hash table of
+  * mutable cells (one lookup per pair, an insert only for a key new to
+  * the flush), and flushes one `(key, buffer)` row per buffered key
+  * every [[CombineCap]] pairs and at the end of the task.
   * [[run]] cannot combine an arbitrary reducer, so its buffer is the
   * key's values encoded into one byte array ([[ValueBuffer]]);
   * [[runFold]]'s is the user fold's state, so Catalyst only merges
@@ -98,27 +100,31 @@ object MapReduce {
     * per key, each starting from a fresh `zero`, and flushes one
     * `(key, buffer)` row per buffered key each time `cap` pairs are
     * folded, and once more at the end. Per key, the flushed buffers
-    * together fold exactly the key's values. One hash lookup per pair.
-    * `zero` is evaluated once per key per flush, so `step` may update a
-    * mutable buffer in place and return it. */
+    * together fold exactly the key's values. `zero` is evaluated once
+    * per key per flush, so `step` may update a mutable buffer in place
+    * and return it.
+    *
+    * The table is a `java.util.HashMap` from the key to a [[Cell]]
+    * holding its buffer: a pair costs one `get` and an update of the
+    * cell in place; only a key new to this flush costs a `put`. A
+    * `null` key is a key like any other. */
   private[mr] def combine[B](pairs: Iterator[(String, String)],
                              zero: => B,
                              step: (B, String) => B,
                              cap: Int): Iterator[(String, B)] = {
     require(cap >= 1, s"combine cap must be positive, got $cap")
     Iterator.continually {
-      val buffer = mutable.HashMap.empty[String, B]
+      val table = new java.util.HashMap[String, Cell[B]]()
       var n = 0
       while (n < cap && pairs.hasNext) {
         val (k, v) = pairs.next()
-        buffer.updateWith(k) {
-          case Some(b) => Some(step(b, v))
-          case None => Some(step(zero, v))
-        }
+        val cell = table.get(k)
+        if (cell == null) table.put(k, new Cell(step(zero, v)))
+        else cell.b = step(cell.b, v)
         n += 1
       }
-      buffer
-    }.takeWhile(_.nonEmpty).flatMap(_.iterator)
+      table
+    }.takeWhile(!_.isEmpty).flatMap(_.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.b)))
   }
 
   /** The intermediate pairs: `mapFn(lineNo, line)` over every line,
@@ -170,6 +176,10 @@ private[mr] final class FoldAggregator[B](foldZero: B,
   override def bufferEncoder: Encoder[B] = benc
   override def outputEncoder: Encoder[Seq[String]] = ExpressionEncoder[Seq[String]]()
 }
+
+/** One key's buffer in [[MapReduce.combine]]'s table, updated in place
+  * as the key's pairs are folded. */
+private[mr] final class Cell[B](var b: B)
 
 /** [[MapReduce.run]]'s per-key value buffer: the values appended to one
   * growable byte array, each as a varint length code followed by its

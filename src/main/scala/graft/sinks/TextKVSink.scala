@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's text KV sink (O8), reproduced byte-for-byte.
@@ -24,6 +24,10 @@ import org.apache.spark.sql.functions._
   * exchange for the repartition, and adaptive execution may coalesce
   * the aggregate's shuffle into fewer partitions: the output can land
   * in fewer than n files, even a single one.
+  *
+  * Each line is formatted in one pass: `concat_ws(" ", k, vs, "")`
+  * joins the key, the values and an empty last token, which yields the
+  * trailing space, into one string with a single copy of each value.
   */
 object TextKVSink {
 
@@ -33,8 +37,17 @@ object TextKVSink {
     df.select(col(keyCol).cast("string").as("k"), col(valuesCol).as("vs"))
       .repartition(numPartitions, col("k"))
       .sortWithinPartitions(col("k"))
-      .select(concat(array_join(concat(array(col("k")), col("vs")), " "), lit(" ")).as("value"))
+      .select(line(col("k"), col("vs")).as("value"))
       .write.mode("overwrite").text(dir)
+
+  /** One output line: `k` and the values of `vs`, nulls skipped, joined
+    * by spaces, plus the trailing space (so a row with no non-null
+    * token is `" "`). A null `vs` gives a null line, which the text
+    * writer writes as an empty one. */
+  private[sinks] def line(k: Column, vs: Column): Column =
+    when(vs.isNull, lit(null).cast("string"))
+      .when(k.isNull, concat(concat_ws(" ", vs), lit(" ")))
+      .otherwise(concat_ws(" ", k, vs, lit("")))
 
   /** Format a single row the way `write_key_val_vector` does — exposed
     * for golden tests. */

@@ -58,4 +58,25 @@ class MapReducePropertySpec extends SparkTestBase {
       assert(got == expected, s"n=$n corpus=$corpus")
     }
   }
+
+  test("shuffle partition count is invisible in results (run and runFold)") {
+    import spark.implicits._
+    val count = (_: String, vs: Iterator[String]) => Seq(vs.size.toString)
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    samples(corpusGen, 3).foreach { corpus =>
+      val expected = naive(corpus, count)
+      Seq(1, 3, 7).foreach { n =>
+        spark.conf.set(key, n.toLong)
+        try {
+          val ds = spark.createDataset(corpus)
+          val ran = MapReduce.run(ds, tokenMap, count, 2).collect().toSeq
+          val folded = MapReduce.runFold[Long](ds, tokenMap, 0L, (b, _) => b + 1, _ + _, b => Seq(b.toString))
+            .collect().toSeq
+          assert(ran == expected, s"run, $n shuffle partitions, corpus=$corpus")
+          assert(folded == expected, s"runFold, $n shuffle partitions, corpus=$corpus")
+        } finally spark.conf.set(key, before)
+      }
+    }
+  }
 }

@@ -63,6 +63,33 @@ class MapReduceSpec extends SparkTestBase {
     assert(results.distinct.size == 1)
   }
 
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n` on the
+    * shared session, restoring the previous value afterwards. */
+  private def withShufflePartitions[A](n: Int)(body: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body finally spark.conf.set(key, before)
+  }
+
+  test("shuffle partition count never changes the answer: run and runFold == naive") {
+    import spark.implicits._
+    val ds = spark.createDataset(corpus)
+    val positions = (_: String, vs: Iterator[String]) => vs.toSeq.distinct.sorted
+    val sum = (_: String, vs: Iterator[String]) => Seq(vs.map(_.toLong).sum.toString)
+    val wantPositions = naive(corpus, tokenMap, positions)
+    val wantSum = naive(corpus, mapOnes, sum)
+    Seq(1, 3, 7).foreach { n =>
+      withShufflePartitions(n) {
+        val ran = MapReduce.run(ds, tokenMap, positions, 2)
+        val folded = MapReduce.runFold[Long](ds, mapOnes, 0L, (b, v) => b + v.toLong, _ + _, b => Seq(b.toString))
+        assert(ran.collect().toSeq == wantPositions, s"run, $n shuffle partitions")
+        assert(folded.collect().toSeq == wantSum, s"runFold, $n shuffle partitions")
+        assert(ran.rdd.getNumPartitions <= n, s"run's shuffle is not $n wide")
+      }
+    }
+  }
+
   test("runFold (algebraic) == run (generic) for a sum reducer") {
     import spark.implicits._
     val ds = spark.createDataset(corpus)
@@ -114,6 +141,27 @@ class MapReduceSpec extends SparkTestBase {
       val packed = MapReduce.combine(pairs.iterator, new ValueBuffer, (b: ValueBuffer, v: String) => b.add(v), cap)
         .map { case (k, b) => (k, ValueBuffer.decode(b.toBytes).toList) }.toSeq.groupMapReduce(_._1)(_._2)(_ ++ _)
       assert(packed.map { case (k, vs) => (k, vs.sorted) } == want, s"buffer, cap $cap")
+    }
+  }
+
+  test("combine folds colliding, null and ordinary keys as groupMap does") {
+    // 16 distinct keys with one hashCode ("Aa" and "BB" hash alike), so
+    // one bin of the table holds them all and turns into a tree
+    val colliding = Seq("Aa", "BB").flatMap(a => Seq("Aa", "BB").flatMap(b =>
+      Seq("Aa", "BB").flatMap(c => Seq("Aa", "BB").map(d => a + b + c + d))))
+    assert(colliding.distinct.size == 16 && colliding.map(_.hashCode).distinct.size == 1)
+    val keys = colliding ++ Seq(null, "", "k", "\u00e9")
+    val pairs = (0 until 997).map(i => (keys(i * 7 % keys.size), (i % 11).toString))
+    val want = pairs.groupMap(_._1)(_._2)
+    assert(want.size == keys.size && want.contains(null))
+    val step = (b: Long, v: String) => b + v.toLong
+    Seq(1, 3, 10000).foreach { cap =>
+      val summed = MapReduce.combine(pairs.iterator, 0L, step, cap).toSeq.groupMapReduce(_._1)(_._2)(_ + _)
+      assert(summed == want.map { case (k, vs) => (k, vs.map(_.toLong).sum) }, s"Long state, cap $cap")
+      val packed = MapReduce.combine(pairs.iterator, new ValueBuffer, (b: ValueBuffer, v: String) => b.add(v), cap)
+        .map { case (k, b) => (k, ValueBuffer.decode(b.toBytes).toList) }.toSeq.groupMapReduce(_._1)(_._2)(_ ++ _)
+      assert(packed.map { case (k, vs) => (k, vs.sorted) } == want.map { case (k, vs) => (k, vs.sorted) },
+        s"ValueBuffer state, cap $cap")
     }
   }
 
