@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.{EngineConfig, Sessions}
 import graft.mr.MapReduce
 import graft.sinks.TextKVSink
+import graft.sources.Sources
 
 /** Executable parity with the reference's two shipped binaries
   * (`./WordCounter config_WordCounter.txt`, `./InvertedIndex
@@ -68,7 +69,7 @@ private[apps] object AppRunner {
 /** Reference app 1 as an executable (`src/WordCounter.cpp:45`). */
 object WordCountMain {
   private[apps] val app: (SparkSession, String, Int) => DataFrame = (spark, input, _) =>
-    WordCount.viaFacade(spark.read.textFile(input)).toDF("key", "values")
+    WordCount.viaFacade(Sources.textLines(spark, input)).toDF("key", "values")
 
   def main(args: Array[String]): Unit = {
     val rc = AppRunner.run(args.headOption.getOrElse("config_WordCounter.txt"), app)
@@ -79,7 +80,7 @@ object WordCountMain {
 /** Reference app 2 as an executable (`src/InvertedIndex.cpp:43`). */
 object InvertedIndexMain {
   private[apps] val app: (SparkSession, String, Int) => DataFrame = (spark, input, n) =>
-    InvertedIndex.viaFacade(spark.read.textFile(input), n).toDF("key", "values")
+    InvertedIndex.viaFacade(Sources.textLines(spark, input), n).toDF("key", "values")
 
   def main(args: Array[String]): Unit = {
     val rc = AppRunner.run(args.headOption.getOrElse("config_InvertedIndex.txt"), app)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** The reference engine's API, re-expressed as a Spark library.
   *
@@ -128,9 +129,13 @@ object MapReduce {
   }
 
   /** The intermediate pairs: `mapFn(lineNo, line)` over every line,
-    * lineNo being the 0-based global line number. */
+    * lineNo being the 0-based global line number of
+    * [[graft.sources.Sources.numberedLines]]. Over a plain
+    * `spark.read.textFile` scan, the files are numbered in path order
+    * and no job runs until the facade's Dataset executes; any other
+    * `lines` falls back to `zipWithIndex`, whose counting job runs here. */
   private def pairs(lines: Dataset[String], mapFn: (Long, String) => Iterator[(String, String)]) =
-    lines.rdd.zipWithIndex().flatMap { case (line, no) => mapFn(no, line) }
+    Sources.numberedLines(lines).flatMap { case (no, line) => mapFn(no, line) }
 
   /** Algebraic variant: when the user reduce is a fold (zero/step/merge),
     * each map task folds its pairs itself ([[combine]] with `foldStep`)

@@ -1,5 +1,6 @@
 package graft.mr
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{Encoders, Observation}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -189,23 +190,31 @@ class MapReduceSpec extends SparkTestBase {
   test("InvertedIndex through the sink with N = shuffle partitions runs one exchange") {
     import spark.implicits._
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
-    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    val textDir = java.nio.file.Files.createTempDirectory("onexchange-in")
+    java.nio.file.Files.write(textDir.resolve("corpus.txt"), corpus.mkString("", "\n", "\n").getBytes("UTF-8"))
+    for (lines <- Seq(spark.createDataset(corpus), spark.read.textFile(textDir.toString))) {
+      val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val dir = java.nio.file.Files.createTempDirectory("onexchange").toString
+      try TextKVSink.write(InvertedIndex.viaFacade(lines, 4).toDF("key", "values"), "key", "values", dir, 4)
+      finally {
+        // the bus delivers the plans after the write returns: drain it
+        // before the listener goes
+        ListenerBusDrain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+      // the in-memory input's zipWithIndex job over `lines.rdd` reports its own plan first
+      val plan = Iterator.continually(plans.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .map(p => Option(p).getOrElse(fail("no write plan")))
+        .find(p => nodes(p).exists(_.isInstanceOf[DataWritingCommandExec])).get
+      val exchanges = nodes(plan).collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, plan.toString)
+      assert(!exchanges.exists(_.shuffleOrigin == REPARTITION_BY_NUM), plan.toString)
     }
-    spark.listenerManager.register(listener)
-    val dir = java.nio.file.Files.createTempDirectory("onexchange").toString
-    try TextKVSink.write(InvertedIndex.viaFacade(spark.createDataset(corpus), 4).toDF("key", "values"),
-      "key", "values", dir, 4)
-    finally spark.listenerManager.unregister(listener)
-    // the zipWithIndex job over `lines.rdd` reports its own plan first
-    val plan = Iterator.continually(plans.poll(30, java.util.concurrent.TimeUnit.SECONDS))
-      .map(p => Option(p).getOrElse(fail("no write plan")))
-      .find(p => nodes(p).exists(_.isInstanceOf[DataWritingCommandExec])).get
-    val exchanges = nodes(plan).collect { case e: ShuffleExchangeExec => e }
-    assert(exchanges.size == 1, plan.toString)
-    assert(!exchanges.exists(_.shuffleOrigin == REPARTITION_BY_NUM), plan.toString)
   }
 
   test("run == naive when one map task emits more pairs than the pack cap") {
