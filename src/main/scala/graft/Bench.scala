@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{ScratchCache, Sessions}
+import graft.core.{Preflight, Sessions}
 
 /** Benchmark main: runs every catalog query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line for the driver.
@@ -82,9 +82,12 @@ import graft.core.{ScratchCache, Sessions}
   *     downward, the exact failure mode the re-time attempts exist to
   *     expose.
   *
-  * Scratch caches registered by catalog queries are drained after
-  * every run so no storage leaks across the catalog and every run
-  * rebuilds its own cache (uniform work per run).
+  * Every analysis, store build and timed run goes through
+  * [[Preflight.bounded]]: each gets its own job group and a time budget
+  * (the analysis budget for the preflight, the run budget for the
+  * rest), and the scratch caches are drained after it, so nothing
+  * leaks across the catalog and every run rebuilds its own cache. A
+  * query that throws or hangs is one failed entry.
   *
   * Usage: sbt "runMain graft.Bench [query ...]" (SPARK_GRAFT_SF_DIR,
   * SPARK_GRAFT_BENCH_RUNS), on [[graft.core.Sessions.local]]:
@@ -97,56 +100,24 @@ object Bench {
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val spark = Sessions.local()
 
-    // NonFatal: a query failure is a per-query "failed" entry; a fatal
-    // error must abort the bench rather than keep timing in a broken JVM
-    def runNoop(name: String): Boolean =
-      try { SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      finally ScratchCache.drain()
-
-    def timeOne(name: String): (Double, Boolean) = {
+    def timeOne(phase: String, name: String): (Double, Boolean) = {
       val t0 = System.nanoTime()
-      val ok = runNoop(name)
-      ((System.nanoTime() - t0) / 1e9, ok)
+      val r = Preflight.bounded(spark, s"bench-$phase-$name", Preflight.RunBudgetMs) {
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
+      r.left.foreach(m => System.err.println(s"[bench] $name failed: $m"))
+      ((System.nanoTime() - t0) / 1e9, r.isRight)
     }
 
-    // PREFLIGHT (r10 lesson): analyze the whole catalog BEFORE the
-    // store builds, the warmup, and the R timed sweeps. A regenerated
-    // testdata file that breaks a loader (r10: events.ts switched
-    // parquet vintage and 18 queries died at analysis) is caught here
-    // in seconds instead of burning a 20-minute sweep on exception
-    // churn that also contaminates every surviving query's timings.
-    // Analysis-failed queries are excluded from the sweeps and still
-    // reported (-1 + "failed" + per-query message in BENCH_DETAIL's
-    // "preflight_failed"). Dataset construction analyzes the plan
-    // eagerly, so building the DataFrame and touching .schema is a
+    // PREFLIGHT (scaladoc point 0). Dataset construction analyzes the
+    // plan eagerly, so building the DataFrame and touching .schema is a
     // full analyzer+resolver pass without executing the query.
     val allNames = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))
-    // Preflight.bounded gives each construction+analysis a time budget
-    // (r12 lesson: a builder that never RETURNS — q155's un-checkpointed
-    // plan spun the analyzer — starved the whole bench; exceptions were
-    // already handled, hangs were not). A timed-out builder becomes a
-    // named preflight_failed entry and the sweep continues. NonFatal
-    // only (inside bounded): a fatal error (OOM, linkage) during
-    // preflight must abort the run, not be recorded as a per-query
-    // analysis failure while the bench keeps timing queries in a
-    // corrupted JVM — the exact contamination the preflight exists to
-    // prevent.
-    // On timeout the builder's in-flight Spark jobs are cancelled via
-    // job group (as Verify does) — eager builders run real jobs at
-    // construction, and a timed-out build left running would compete
-    // with every subsequent timed sweep.
-    val sc = spark.sparkContext
     def analyzeErr(name: String): Option[(String, String)] =
-      try graft.core.Preflight.bounded(name,
-          onTimeout = () => sc.cancelJobGroup(s"bench-preflight-$name")) {
-          sc.setJobGroup(s"bench-preflight-$name", name, interruptOnCancel = true)
-          try { SparkEntry.queries(name)(spark, sfDir).schema; () }
-          finally sc.clearJobGroup()
-        }.left.toOption.map(m => name -> m.take(300))
-      finally ScratchCache.drain()
+      Preflight.bounded(spark, s"bench-preflight-$name", Preflight.AnalysisBudgetMs) {
+        SparkEntry.queries(name)(spark, sfDir).schema
+      }.left.toOption.map(m => name -> m.take(300))
     // Queries that construct against a store artifact trigger its lazy
     // build — they are preflighted AFTER the timed builds below so the
     // build cost lands in the store's detail key, not the preflight.
@@ -158,32 +129,16 @@ object Bench {
     // Each store (see graft.core.Store) is built before the timed
     // sweeps, and the build is timed and emitted in BENCH_DETAIL under
     // the store's detail key, so the cost moved out of the catalog stays
-    // visible in the artifact. Guarded like every other failure mode: an
-    // environment break in a build marks its dependents preflight-failed
-    // (visible in BENCH_DETAIL) instead of crashing the whole bench
+    // visible in the artifact. A failed or hung build marks its
+    // dependents preflight-failed instead of crashing the whole bench
     // before any record is written.
-    // Builds get the same hang guard as the analysis preflight (r13
-    // advice: an unbounded artifact build that hangs starves the whole
-    // bench — the exact r12 failure mode). Budget is build-scale (these
-    // legitimately run sf-sized jobs), the body runs under a job group
-    // cancelled on timeout, and the dependent queries become named
-    // preflight_failed entries either way.
-    val buildTimeoutMs =
-      sys.env.getOrElse("SPARK_GRAFT_BUILD_TIMEOUT_SEC", "600").toLong * 1000L
-    def timedBuild(markFailed: Seq[String], what: String)(build: => Unit): Double = {
+    val buildSecs = stores.map { st =>
       val t0 = System.nanoTime()
-      try {
-        graft.core.Preflight.bounded(s"build-$what", timeoutMs = buildTimeoutMs,
-            onTimeout = () => sc.cancelJobGroup(s"bench-build-$what")) {
-          sc.setJobGroup(s"bench-build-$what", what, interruptOnCancel = true)
-          try build finally sc.clearJobGroup()
-        }.left.foreach(m => markFailed.foreach(q => preflightFailed += (q ->
-          s"$what build failed: $m".take(300))))
-      } finally ScratchCache.drain()
-      (System.nanoTime() - t0) / 1e9
+      Preflight.bounded(spark, s"bench-build-${st.name}", Preflight.RunBudgetMs)(st(spark, sfDir))
+        .left.foreach(m => st.dependents.foreach(q =>
+          preflightFailed += (q -> s"${st.name} build failed: $m".take(300))))
+      st.detailKey -> (System.nanoTime() - t0) / 1e9
     }
-    val buildSecs = stores.map(st =>
-      st.detailKey -> timedBuild(st.dependents, st.name)(st(spark, sfDir)))
     allNames.filter(deferred).filterNot(preflightFailed.keySet)
       .foreach(n => analyzeErr(n).foreach(preflightFailed += _))
     if (preflightFailed.nonEmpty) {
@@ -192,14 +147,14 @@ object Bench {
     }
 
     // warmup (untimed): touches the fact table + one agg + one join path
-    runNoop("q01_pricing_summary")
+    timeOne("warmup", "q01_pricing_summary")
 
     val names = allNames.filterNot(preflightFailed.keySet)
 
     // R interleaved catalog sweeps (see scaladoc point 1)
     val samples = collection.mutable.Map.empty[String, Vector[(Double, Boolean)]]
     for (_ <- 1 to runs; name <- names)
-      samples(name) = samples.getOrElse(name, Vector.empty) :+ timeOne(name)
+      samples(name) = samples.getOrElse(name, Vector.empty) :+ timeOne("sweep", name)
 
     val prelim = names.map { name =>
       val ts = samples(name)
@@ -221,11 +176,11 @@ object Bench {
       case (name, med, best, _, true)
         if (runs > 1 && med > 2 * best) || med > retimeFloor =>
         System.gc()
-        val (t1, ok1) = timeOne(name)
+        val (t1, ok1) = timeOne("retime", name)
         // a re-time that itself stayed suspicious (the query's best
         // sweep proves it can run 2× faster) gets one more attempt
         val second = if (ok1 && t1 > 2 * best && runs > 1) {
-          System.gc(); Some(timeOne(name))
+          System.gc(); Some(timeOne("retime", name))
         } else None
         name -> (Seq((t1, ok1)) ++ second).collect { case (t, true) => t }
     }.collect { case (name, ts) if ts.nonEmpty => name -> ts }.toMap
@@ -295,7 +250,7 @@ object Bench {
           .filter(p => before > p * 1.25 || before < p / 1.25)
           .map { p =>
             System.gc()
-            val (t, okA) = timeOne(name)
+            val (t, okA) = timeOne("adjudicate", name)
             name -> ((p, before, if (okA) t else -1.0))
           }
       case _ => None

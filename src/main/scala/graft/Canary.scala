@@ -1,7 +1,8 @@
 package graft
 
-import graft.core.{Preflight, ScratchCache, Sessions}
+import graft.core.{Preflight, Sessions}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Fixed quiet-box CANARY set for bench-drift adjudication.
   *
@@ -21,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   *    the queries BENCH_DRIFT.md has had to adjudicate by hand in
   *    past rounds; they are canaries because they are the ones that
   *    move when the box is noisy.
-  *  - Each canary is timed ISOLATED — caches drained before every
+  *  - Each canary is timed ISOLATED — caches drained after every
   *    attempt, N attempts (default 3), min taken. Isolation is the
   *    point: the full sweep measures catalog-resident behavior, the
   *    canary measures the query's reproducible floor. The gap between
@@ -68,30 +69,51 @@ object Canary {
     * above the ±25% single-sample noise measured r7→r8 on byte-
     * identical code, below the 2× a real plan regression produces. */
   val DriftBand = 1.3
-  /** Per-attempt budget (construction + execution), as Verify's
-    * default: a hang detector, not a slowness detector. */
-  val TimeoutMs: Long = 600L * 1000L
-
-  /** One canary's isolated floor: the min over `runs` attempts, each
-    * with caches drained. Every attempt runs under [[Preflight.bounded]]
-    * in a job group that is cancelled on timeout, as Verify does, so a
-    * canary that throws or hangs is `Left(message)` — one failed entry
-    * — and stops after its first failed attempt. */
+  /** One canary's isolated floor: the min over `runs` attempts. Each
+    * attempt runs under [[Preflight.bounded]] with the run budget, which
+    * drains the scratch caches after it, so a canary that throws or
+    * hangs is `Left(message)` — one failed entry — and stops after its
+    * first failed attempt. */
   def floor(spark: SparkSession, sfDir: String, runs: Int)(name: String): Either[String, Double] = {
-    val sc = spark.sparkContext
-    def timeOnce(): Either[String, Double] = {
-      ScratchCache.drain()
-      try Preflight.bounded(name, TimeoutMs, onTimeout = () => sc.cancelJobGroup(s"canary-$name")) {
-        sc.setJobGroup(s"canary-$name", name, interruptOnCancel = true)
-        try {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } finally sc.clearJobGroup()
-      } finally ScratchCache.drain()
-    }
+    def timeOnce(): Either[String, Double] =
+      Preflight.bounded(spark, s"canary-$name", Preflight.RunBudgetMs) {
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
     (1 to runs).foldLeft[Either[String, Double]](Right(Double.PositiveInfinity)) { (best, _) =>
       best.flatMap(b => timeOnce().map(math.min(b, _)))
+    }
+  }
+
+  /** The stamped floors this run may judge against, and the fragment the
+    * output line carries about them. A stamp is only comparable under
+    * the SAME settings: one taken at sf0.1 read against an sf1 run would
+    * flag every canary DRIFT against the wrong floor. So an sf mismatch,
+    * or a stamp with no "sf" field (it predates sf tagging and could
+    * come from any scale), yields no floors — verdicts downgrade to
+    * no_baseline. A runs/band difference only warps the floor mildly,
+    * so it is kept and surfaced as a `baseline_warning`. */
+  def readBaseline(json: String, sfDir: String, runs: Int): (Map[String, Double], String) = {
+    import scala.jdk.CollectionConverters._
+    // unreadable text reads as an untagged stamp
+    val root = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      catch { case NonFatal(_) => com.fasterxml.jackson.databind.node.MissingNode.getInstance }
+    def field(k: String) = Option(root.get(k))
+    val stampSf = field("sf").filter(_.isTextual).map(_.asText)
+    if (stampSf.forall(_ != sfDir))
+      (Map.empty, s""","baseline_mismatch":"stamped at sf=${stampSf.getOrElse("<untagged legacy stamp>")}, running sf=$sfDir -- verdicts downgraded to no_baseline"""")
+    else {
+      val warns = Seq(
+        field("runs").filter(_.isNumber).map(_.asInt).filter(_ != runs)
+          .map(r => s"stamped runs=$r, running runs=$runs"),
+        field("band").filter(_.isNumber).map(_.asDouble).filter(_ != DriftBand)
+          .map(b => s"stamped band=$b, judging with band=$DriftBand")
+      ).flatten
+      val floors = field("queries").map(_.properties().asScala
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap)
+        .getOrElse(Map.empty[String, Double])
+      (floors, if (warns.isEmpty) "" else s""","baseline_warning":"${warns.mkString("; ")}"""")
     }
   }
 
@@ -115,50 +137,10 @@ object Canary {
     }
 
     def r3(d: Double) = math.rint(d * 1000) / 1000
-    // Baseline stamps are only comparable under the SAME settings: a
-    // stamp taken at sf0.1 read against an sf1 run would flag every
-    // canary DRIFT against the wrong floor. Parse the stamp's own
-    // sf/runs/band and refuse (→ no_baseline) on an sf mismatch; a
-    // runs/band difference only warps the floor mildly, so it is
-    // surfaced as a warning in the output JSON rather than discarded.
-    var baselineNote = ""
-    val baseline: Map[String, Double] =
-      if (stamp) Map.empty
-      else {
-        val p = java.nio.file.Paths.get(basePath)
-        if (!java.nio.file.Files.exists(p)) Map.empty
-        else {
-          // flat {"sf":...,"runs":N,"band":B,"queries":{"name":secs,..}}
-          // — parse with regexes, no JSON dep in the build (the query
-          // regex only matches q-prefixed keys, so the meta fields
-          // never collide with it)
-          val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          val stampSf = raw""""sf"\s*:\s*"([^"]*)"""".r
-            .findFirstMatchIn(txt).map(_.group(1))
-          val stampRuns = raw""""runs"\s*:\s*(\d+)""".r
-            .findFirstMatchIn(txt).map(_.group(1).toInt)
-          val stampBand = raw""""band"\s*:\s*([0-9.]+)""".r
-            .findFirstMatchIn(txt).map(_.group(1).toDouble)
-          if (stampSf.forall(_ != sfDir)) {
-            // a stamp with NO "sf" field predates sf tagging — it could
-            // have been taken at any scale, so it is just as unusable as
-            // an explicit mismatch: downgrade to no_baseline rather than
-            // silently judging drift against a floor from an unknown sf
-            baselineNote =
-              s""","baseline_mismatch":"stamped at sf=${stampSf.getOrElse("<untagged legacy stamp>")}, running sf=$sfDir -- verdicts downgraded to no_baseline""""
-            Map.empty
-          } else {
-            val warns = Seq(
-              stampRuns.filter(_ != runs).map(r => s"stamped runs=$r, running runs=$runs"),
-              stampBand.filter(_ != DriftBand).map(b => s"stamped band=$b, judging with band=$DriftBand")
-            ).flatten
-            if (warns.nonEmpty)
-              baselineNote = s""","baseline_warning":"${warns.mkString("; ")}""""
-            raw""""(q\d+[a-z0-9_]*)"\s*:\s*([0-9.]+)""".r
-              .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }
-        }
-      }
+    val p = java.nio.file.Paths.get(basePath)
+    val (baseline, baselineNote) =
+      if (stamp || !java.nio.file.Files.exists(p)) (Map.empty[String, Double], "")
+      else readBaseline(java.nio.file.Files.readString(p), sfDir, runs)
 
     val perQ = results.map {
       case (n, Left(m)) => s""""$n":{"verdict":"failed","message":${Verify.jsonString(m.take(300))}}"""

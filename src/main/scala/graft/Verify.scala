@@ -1,38 +1,25 @@
 package graft
 import java.nio.file.{Files, Paths}
-import graft.core.Sessions
+import graft.core.{Preflight, Sessions}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB oracle compare. Usage:
   *   sbt "runMain graft.Verify <sfDir> <outDir> [query ...]"
-  * Runs on [[graft.core.Sessions.local]]: SPARK_GRAFT_CPUS cores, else all. */
+  * Runs on [[graft.core.Sessions.local]]: SPARK_GRAFT_CPUS cores, else all.
+  * Each query runs under [[Preflight.bounded]] with the run budget: a
+  * query that throws or hangs is one `[verify] <name> failed` line. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional query-name filter (local dev)
     val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
-    // Per-query time budget (construction + execution + write), r12
-    // lesson: one builder that never returns must become ONE failed
-    // entry, not zero the whole correctness artifact. On timeout the
-    // query's job group is cancelled so its half-run Spark jobs don't
-    // keep competing with the remaining sweep; NonFatal exceptions stay
-    // per-query failures, fatal errors abort the run (Preflight
-    // rethrows them).
-    val timeoutMs =
-      sys.env.getOrElse("SPARK_GRAFT_VERIFY_TIMEOUT_SEC", "600").toLong * 1000L
-    val sc = spark.sparkContext
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      graft.core.Preflight.bounded(name, timeoutMs,
-          onTimeout = () => sc.cancelJobGroup(s"verify-$name")) {
-        sc.setJobGroup(s"verify-$name", name, interruptOnCancel = true)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        finally sc.clearJobGroup()
-      }.left.foreach(m => System.err.println(s"[verify] $name failed: $m"))
-      graft.core.ScratchCache.drain()
-    }
+        Preflight.bounded(spark, s"verify-$name", Preflight.RunBudgetMs) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }.left.foreach(m => System.err.println(s"[verify] $name failed: $m"))
+      }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -9,10 +9,11 @@ import org.apache.spark.sql.DataFrame
   *
   * Catalog query builders return UNEXECUTED frames, so they cannot
   * unpersist at build time (the cache would be gone before the action
-  * runs) — instead they register the frame here and every runner calls
-  * [[drain]] once the action completes. At 100 TB the same discipline
-  * applies: a pipeline that leaks its checkpoint cache re-reads it from
-  * disk after eviction.
+  * runs) — instead they register the frame here, and
+  * [[Preflight.bounded]], which every runner runs its queries through,
+  * calls [[drain]] once the query's work ends. At 100 TB the same
+  * discipline applies: a pipeline that leaks its checkpoint cache
+  * re-reads it from disk after eviction.
   *
   * The registry is process-global and assumes ONE runner executes
   * catalog queries at a time (true for Bench/Verify/Explain and the

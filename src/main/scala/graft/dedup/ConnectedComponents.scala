@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Lineage.truncate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,48 +35,15 @@ object ConnectedComponents {
     * round 8 that is a 2⁸-node tree whose AQE explain strings alone
     * OOM the driver. Checkpointing replaces the lineage with the
     * materialized rows, keeping every round's plan constant size —
-    * the standard discipline for iterative DataFrame algorithms.
-    *
-    * `checkpointDir` picks the truncation mechanism:
-    *  - None (default): `localCheckpoint` — blocks live on executors.
-    *    Right for local mode and dev loops (no filesystem round-trip),
-    *    but an executor loss mid-iteration kills the job because the
-    *    checkpointed blocks have no lineage to recompute from.
-    *  - Some(dir): reliable `checkpoint()` to `dir` (HDFS/object
-    *    store on a cluster) — each round's labels are persisted to
-    *    storage that survives executor loss, the production-grade
-    *    variant for long-running 100 TB dedup jobs. Costs one
-    *    write+read of O(|V|) rows per round. STORAGE NOTE: Spark does
-    *    not delete reliable checkpoint files on its own — without
-    *    cleanup `dir` accumulates one O(|V|) copy per round until the
-    *    application exits. This loop drops its reference to each
-    *    previous round, so setting
-    *    `spark.cleaner.referenceTracking.cleanCheckpoints=true` (a
-    *    context-creation conf) lets the ContextCleaner GC-delete
-    *    superseded rounds; otherwise reap `dir` after the job. The
-    *    context's previous checkpoint dir (a PROCESS-GLOBAL setting)
-    *    is restored on exit when one was set; if none was set, `dir`
-    *    remains the context's checkpoint dir — Spark has no unset.
-    *    CONCURRENCY: because `setCheckpointDir` mutates that global,
-    *    the `Some(dir)` path MUST NOT run concurrently with another
-    *    `components(checkpointDir = Some(...))` call or any other job
-    *    using `checkpoint()` on the same context — toggle and restore
-    *    can interleave and leave the context checkpointing into the
-    *    wrong directory. Concurrent callers should instead set the
-    *    context checkpoint dir ONCE at session creation and pass that
-    *    SAME dir here (setCheckpointDir is then idempotent and the
-    *    restore writes back the identical value). */
+    * the standard discipline for iterative DataFrame algorithms. The
+    * cut is [[graft.core.Lineage.truncate]]: `localCheckpoint`, or a
+    * reliable `checkpoint()` when the context has a checkpoint dir. */
   def components(vertices: DataFrame, idCol: String,
                  edges: DataFrame, srcCol: String, dstCol: String,
-                 maxIter: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    val sc = vertices.sparkSession.sparkContext
-    val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
-    // both variants are EAGER: the round must materialize before its
+                 maxIter: Int = 50): DataFrame = {
+    // truncate is EAGER: the round must materialize before its
     // changed-count is read, and lineage must be cut before the next
     // round's plan is built on top
-    val truncate: DataFrame => DataFrame =
-      if (checkpointDir.isDefined) _.checkpoint() else _.localCheckpoint()
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val eBoth = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))).persist()
     try {
@@ -101,9 +69,6 @@ object ConnectedComponents {
         s"connected components did not converge within $maxIter rounds " +
           s"($changed labels still changing); raise maxIter for graphs of larger diameter")
       labels
-    } finally {
-      eBoth.unpersist(blocking = false)
-      if (checkpointDir.isDefined) prevCheckpointDir.foreach(sc.setCheckpointDir)
-    }
+    } finally eBoth.unpersist(blocking = false)
   }
 }

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{QueryCatalog, ScratchCache, Tables}
+import graft.core.Lineage.truncate
 
 /** Link-graph analytics over the document corpus — the web-curation
   * signals (who links whom, which pages carry authority) a crawl
@@ -180,66 +181,51 @@ object GraphQueries extends QueryCatalog {
     * in all 2·Iters joins, and only node-sized score frames move per
     * round. Normalization totals are 1-row aggregates broadcast back
     * by crossJoin — which references the round's raw frame TWICE, so
-    * each raw frame is EAGERLY localCheckpoint'ed first (the q155
-    * discipline): without the cut, the double reference doubles the
+    * each raw frame is EAGERLY truncated first (the q155 discipline,
+    * [[graft.core.Lineage.truncate]]): without the cut, the double reference doubles the
     * plan per half-round and the analyzer walk is 4^Iters by round 8
     * — the exact r12 driver hang. Cost is 2·Iters node-sized
     * checkpoint jobs, the price every iterative-with-normalization
     * DataFrame algorithm pays. */
-  /** Checkpoint mode mirrors [[kcoreTrajectory]]: `None` →
-    * `localCheckpoint` (executor-local — an executor loss mid-run
-    * kills the 2·Iters-round job), `Some(dir)` → reliable
-    * `checkpoint()` to cluster storage, the production mode. Same
-    * caveats as ConnectedComponents. */
-  private[graph] def hitsScores(s: SparkSession, dir: String,
-      checkpointDir: Option[String] = None): DataFrame = {
+  private[graph] def hitsScores(s: SparkSession, dir: String): DataFrame = {
     // `auth` is first assigned inside the loop
     require(Iters >= 1, s"HITS needs at least one round, got $Iters")
     import s.implicits._
-    val sc = s.sparkContext
-    val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
-    val truncate: DataFrame => DataFrame =
-      if (checkpointDir.isDefined) _.checkpoint() else _.localCheckpoint()
-    try {
-      val links = ScratchCache.persist(linksOf(s, dir))
-      val bySrc = ScratchCache.persist(links.repartition($"src"))
-      val byDst = ScratchCache.persist(links.repartition($"dst"))
-      val nodes = ScratchCache.persist(
-        Tables.documents(s, dir).select($"doc_id".as("page_id")))
-      // r22 (guide §2.3/§2.4): the per-round frames carry ONLY nodes
-      // with a non-zero raw score — a node absent from the in-link
-      // (out-link) aggregate had a = 0, so its normalized score was
-      // (0 · Scale) DIV t = 0 and it contributed exactly 0 to every
-      // downstream sum. Dropping those rows inside the loop removes
-      // the 2·Iters node-frame left joins the old loop paid per run
-      // (the O(V) nodes frame re-joined before every checkpoint),
-      // shrinks each checkpointed frame to the reachable nodes, and
-      // leaves the totals unchanged (missing rows summed as 0). The
-      // full node frame is reconstructed ONCE at the end with the same
-      // coalesce-to-0 the loop used to apply per round.
-      var hub = nodes.withColumn("hub", lit(Scale))
-      var auth: DataFrame = null
-      for (_ <- 1 to Iters) {
-        val aRaw = truncate(
-          bySrc.join(hub.withColumnRenamed("page_id", "src"), "src")
-            .groupBy($"dst".as("page_id")).agg(sum($"hub").as("a")))
-        auth = aRaw.crossJoin(broadcast(aRaw.agg(sum($"a").as("t"))))
-          .selectExpr("page_id", s"CAST((a * $Scale) DIV t AS BIGINT) AS auth")
-        val hRaw = truncate(
-          byDst.join(auth.withColumnRenamed("page_id", "dst"), "dst")
-            .groupBy($"src".as("page_id")).agg(sum($"auth").as("h")))
-        hub = hRaw.crossJoin(broadcast(hRaw.agg(sum($"h").as("t"))))
-          .selectExpr("page_id", s"CAST((h * $Scale) DIV t AS BIGINT) AS hub")
-      }
-      nodes.join(auth, Seq("page_id"), "left")
-        .join(hub, Seq("page_id"), "left")
-        .select($"page_id", coalesce($"auth", lit(0L)).as("auth"),
-          coalesce($"hub", lit(0L)).as("hub"))
-        .orderBy($"page_id")
-    } finally {
-      if (checkpointDir.isDefined) prevCheckpointDir.foreach(sc.setCheckpointDir)
+    val links = ScratchCache.persist(linksOf(s, dir))
+    val bySrc = ScratchCache.persist(links.repartition($"src"))
+    val byDst = ScratchCache.persist(links.repartition($"dst"))
+    val nodes = ScratchCache.persist(
+      Tables.documents(s, dir).select($"doc_id".as("page_id")))
+    // r22 (guide §2.3/§2.4): the per-round frames carry ONLY nodes
+    // with a non-zero raw score — a node absent from the in-link
+    // (out-link) aggregate had a = 0, so its normalized score was
+    // (0 · Scale) DIV t = 0 and it contributed exactly 0 to every
+    // downstream sum. Dropping those rows inside the loop removes
+    // the 2·Iters node-frame left joins the old loop paid per run
+    // (the O(V) nodes frame re-joined before every checkpoint),
+    // shrinks each checkpointed frame to the reachable nodes, and
+    // leaves the totals unchanged (missing rows summed as 0). The
+    // full node frame is reconstructed ONCE at the end with the same
+    // coalesce-to-0 the loop used to apply per round.
+    var hub = nodes.withColumn("hub", lit(Scale))
+    var auth: DataFrame = null
+    for (_ <- 1 to Iters) {
+      val aRaw = truncate(
+        bySrc.join(hub.withColumnRenamed("page_id", "src"), "src")
+          .groupBy($"dst".as("page_id")).agg(sum($"hub").as("a")))
+      auth = aRaw.crossJoin(broadcast(aRaw.agg(sum($"a").as("t"))))
+        .selectExpr("page_id", s"CAST((a * $Scale) DIV t AS BIGINT) AS auth")
+      val hRaw = truncate(
+        byDst.join(auth.withColumnRenamed("page_id", "dst"), "dst")
+          .groupBy($"src".as("page_id")).agg(sum($"auth").as("h")))
+      hub = hRaw.crossJoin(broadcast(hRaw.agg(sum($"h").as("t"))))
+        .selectExpr("page_id", s"CAST((h * $Scale) DIV t AS BIGINT) AS hub")
     }
+    nodes.join(auth, Seq("page_id"), "left")
+      .join(hub, Seq("page_id"), "left")
+      .select($"page_id", coalesce($"auth", lit(0L)).as("auth"),
+        coalesce($"hub", lit(0L)).as("hub"))
+      .orderBy($"page_id")
   }
   private def q164(s: SparkSession, dir: String): DataFrame =
     hitsScores(s, dir)
@@ -505,7 +491,7 @@ object GraphQueries extends QueryCatalog {
     * Scale shape: the [[graft.dedup.ConnectedComponents]] loop
     * discipline — every round is two id-keyed semi-joins (edges
     * restricted to survivors) plus one degree aggregate, with ONE
-    * eager `localCheckpoint` per round: the NODE-sized degree frame
+    * eager truncation per round: the NODE-sized degree frame
     * (r21 — previously both the survivor and edge frames were
     * checkpointed; materializing O(V) per round instead of O(E) halves
     * the eager jobs and, at web scale, stops writing the edge set to
@@ -527,99 +513,78 @@ object GraphQueries extends QueryCatalog {
   private val CoreRounds = 8
   private val CliqueN = 10
 
-  /** The k-core peeling, parameterized by lineage-truncation mechanism
-    * exactly like [[graft.dedup.ConnectedComponents.components]]:
-    * `checkpointDir = None` → `localCheckpoint` (executor-local blocks
-    * — right for local mode, but an executor loss mid-peel kills the
-    * job because the blocks have no lineage to recompute from);
-    * `Some(dir)` → reliable `checkpoint()` to `dir` (HDFS/object store
-    * on a cluster) — each round's survivor/edge frames persist to
-    * storage that survives executor loss, the production-grade mode
-    * for an 8-round peel over a 100 TB link graph. Same storage and
-    * concurrency caveats as ConnectedComponents (Spark never unsets a
-    * context checkpoint dir; concurrent reliable-checkpoint callers
-    * must share one dir set at session creation). */
-  def kcoreTrajectory(s: SparkSession, dir: String,
-                      checkpointDir: Option[String] = None): DataFrame = {
+  /** The k-core peeling; each round's cut is
+    * [[graft.core.Lineage.truncate]], as in
+    * [[graft.dedup.ConnectedComponents.components]]. */
+  def kcoreTrajectory(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sc = s.sparkContext
-    val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
-    // both variants are EAGER: lineage must be cut before the next
-    // round's plan is built on top
-    val truncate: DataFrame => DataFrame =
-      if (checkpointDir.isDefined) _.checkpoint() else _.localCheckpoint()
-    try {
-      // the planted link farm: all 45 pairs over docs 0..9 — two 10-row
-      // range leaves, broadcast-joined; a constant-size frame at any SF
-      val clique = s.range(CliqueN).toDF("a")
-        .crossJoin(s.range(CliqueN).toDF("b")).filter($"a" < $"b")
-      val und = ScratchCache.persist(linksOf(s, dir)
-        .selectExpr("least(src, dst) AS a", "greatest(src, dst) AS b")
-        .unionAll(clique)
-        .distinct())
-      // EAGER truncation per round, never bare persist: see the
-      // scaladoc — persist caches blocks but the plan still nests
-      // 2^rounds deep and analysis hangs the driver. After each
-      // checkpoint the frame is a leaf, so every downstream plan is
-      // constant-size. localCheckpoint blocks are freed by the
-      // ContextCleaner once the returned frame is dropped (same
-      // lifetime story as ConnectedComponents' rounds).
-      //
-      // r21 (guide §2.4/§5): ONE checkpoint per round instead of two,
-      // and it is the NODE-sized degree frame, not the EDGE-sized
-      // survivor frame — at web scale that materializes O(V) per round
-      // instead of O(E). alive(i) and edges(i) stay LAZY one-step plans
-      // over the previous round's checkpointed deg (constant plan
-      // depth, the same driver-analyzer guarantee as before: deg is a
-      // leaf, edges references it twice, deg(i+1) references edges
-      // once). The trajectory row for round i counts the same lazy
-      // frames the next round consumes — identical values, half the
-      // eager materialization jobs (17 → 9 per run).
-      def degOf(e: DataFrame): DataFrame =
-        e.select($"a".as("v")).unionAll(e.select($"b".as("v")))
-          .groupBy($"v").agg(count(lit(1)).as("deg"))
-      // deg(i) is the ONLY checkpointed frame of round i; alive(i+1)
-      // and edges(i+1) are one-step lazy plans over that leaf.
-      // n_alive(0) = |distinct endpoints| = |deg(0)| keys.
-      //
-      // r22 (guide §2.4, ADVICE item): the trajectory row for round
-      // i < CoreRounds derives BOTH counts from checkpointed degree
-      // leaves — n_alive(i) = |{v : deg(i-1)(v) ≥ k}| and n_edges(i) =
-      // Σ deg(i) DIV 2 (each surviving edge contributes one to each
-      // endpoint) — instead of re-counting the lazy `edges` plan. The
-      // O(E) edge-restriction semi-joins of round i now execute exactly
-      // ONCE (eagerly, inside the deg(i) checkpoint job) rather than
-      // twice (again in the final unioned trajectory job): the final
-      // job reads only checkpoint blocks, plus the single live edge
-      // count of round CoreRounds, which checkpoints no degree frame.
-      // coalesce: an empty round would make sum(deg) NULL where the
-      // old count(*) said 0 (unreachable here — the planted clique has
-      // degree 9 ≥ k and survives every round — but kept exact).
-      def edgesFromDeg(d: DataFrame): DataFrame =
-        d.agg(expr("coalesce(sum(deg), 0L) DIV 2").cast("long").as("n_edges"))
-      var deg = truncate(degOf(und))
-      val rows = collection.mutable.Buffer.empty[DataFrame]
-      rows += deg.agg(count(lit(1)).as("n_alive")).crossJoin(edgesFromDeg(deg))
-        .select(lit(0L).as("round"), $"n_alive", $"n_edges")
-      for (i <- 1 to CoreRounds) {
-        val alive = deg.filter($"deg" >= CoreK).select($"v") // from deg(i-1)
-        val edges = und
-          .join(alive.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
-          .join(alive.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-          .select($"a", $"b")
-        val aliveCnt = alive.agg(count(lit(1)).as("n_alive"))
-        val edgeCnt = if (i < CoreRounds) {
-          deg = truncate(degOf(edges))
-          edgesFromDeg(deg)
-        } else edges.agg(count(lit(1)).as("n_edges"))
-        rows += aliveCnt.crossJoin(edgeCnt)
-          .select(lit(i.toLong).as("round"), $"n_alive", $"n_edges")
-      }
-      rows.reduce(_ unionAll _).orderBy($"round")
-    } finally {
-      if (checkpointDir.isDefined) prevCheckpointDir.foreach(sc.setCheckpointDir)
+    // the planted link farm: all 45 pairs over docs 0..9 — two 10-row
+    // range leaves, broadcast-joined; a constant-size frame at any SF
+    val clique = s.range(CliqueN).toDF("a")
+      .crossJoin(s.range(CliqueN).toDF("b")).filter($"a" < $"b")
+    val und = ScratchCache.persist(linksOf(s, dir)
+      .selectExpr("least(src, dst) AS a", "greatest(src, dst) AS b")
+      .unionAll(clique)
+      .distinct())
+    // EAGER truncation per round, never bare persist: see the
+    // scaladoc — persist caches blocks but the plan still nests
+    // 2^rounds deep and analysis hangs the driver. After each
+    // checkpoint the frame is a leaf, so every downstream plan is
+    // constant-size. localCheckpoint blocks are freed by the
+    // ContextCleaner once the returned frame is dropped (same
+    // lifetime story as ConnectedComponents' rounds).
+    //
+    // r21 (guide §2.4/§5): ONE checkpoint per round instead of two,
+    // and it is the NODE-sized degree frame, not the EDGE-sized
+    // survivor frame — at web scale that materializes O(V) per round
+    // instead of O(E). alive(i) and edges(i) stay LAZY one-step plans
+    // over the previous round's checkpointed deg (constant plan
+    // depth, the same driver-analyzer guarantee as before: deg is a
+    // leaf, edges references it twice, deg(i+1) references edges
+    // once). The trajectory row for round i counts the same lazy
+    // frames the next round consumes — identical values, half the
+    // eager materialization jobs (17 → 9 per run).
+    def degOf(e: DataFrame): DataFrame =
+      e.select($"a".as("v")).unionAll(e.select($"b".as("v")))
+        .groupBy($"v").agg(count(lit(1)).as("deg"))
+    // deg(i) is the ONLY checkpointed frame of round i; alive(i+1)
+    // and edges(i+1) are one-step lazy plans over that leaf.
+    // n_alive(0) = |distinct endpoints| = |deg(0)| keys.
+    //
+    // r22 (guide §2.4, ADVICE item): the trajectory row for round
+    // i < CoreRounds derives BOTH counts from checkpointed degree
+    // leaves — n_alive(i) = |{v : deg(i-1)(v) ≥ k}| and n_edges(i) =
+    // Σ deg(i) DIV 2 (each surviving edge contributes one to each
+    // endpoint) — instead of re-counting the lazy `edges` plan. The
+    // O(E) edge-restriction semi-joins of round i now execute exactly
+    // ONCE (eagerly, inside the deg(i) checkpoint job) rather than
+    // twice (again in the final unioned trajectory job): the final
+    // job reads only checkpoint blocks, plus the single live edge
+    // count of round CoreRounds, which checkpoints no degree frame.
+    // coalesce: an empty round would make sum(deg) NULL where the
+    // old count(*) said 0 (unreachable here — the planted clique has
+    // degree 9 ≥ k and survives every round — but kept exact).
+    def edgesFromDeg(d: DataFrame): DataFrame =
+      d.agg(expr("coalesce(sum(deg), 0L) DIV 2").cast("long").as("n_edges"))
+    var deg = truncate(degOf(und))
+    val rows = collection.mutable.Buffer.empty[DataFrame]
+    rows += deg.agg(count(lit(1)).as("n_alive")).crossJoin(edgesFromDeg(deg))
+      .select(lit(0L).as("round"), $"n_alive", $"n_edges")
+    for (i <- 1 to CoreRounds) {
+      val alive = deg.filter($"deg" >= CoreK).select($"v") // from deg(i-1)
+      val edges = und
+        .join(alive.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
+        .join(alive.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
+        .select($"a", $"b")
+      val aliveCnt = alive.agg(count(lit(1)).as("n_alive"))
+      val edgeCnt = if (i < CoreRounds) {
+        deg = truncate(degOf(edges))
+        edgesFromDeg(deg)
+      } else edges.agg(count(lit(1)).as("n_edges"))
+      rows += aliveCnt.crossJoin(edgeCnt)
+        .select(lit(i.toLong).as("round"), $"n_alive", $"n_edges")
     }
+    rows.reduce(_ unionAll _).orderBy($"round")
   }
 
   private def q155(s: SparkSession, dir: String): DataFrame =

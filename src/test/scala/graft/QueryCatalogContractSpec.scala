@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   *    and dependents (BENCH_DETAIL's build keys, Bench's deferred
   *    preflight) are pinned; no query outside a store's dependents
   *    builds that store;
-  *  - Canary turns a canary that throws into one failed entry;
+  *  - Canary and Explain turn a query that throws into one failed
+  *    entry, and the next query still runs;
   *  - no catalog output column is array-/map-/struct-typed — the
   *    driver's pandas sort+hash crashes on unhashable cells (the
   *    round-1 q18/q21/q31/q37 failure mode). Library APIs keep typed
@@ -103,7 +104,8 @@ class QueryCatalogContractSpec extends SparkTestBase {
     // NAMED offender, not a dead suite
     def offendersOf(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Seq[String] =
-      graft.core.Preflight.bounded(name) { fn(session, dir).schema } match {
+      graft.core.Preflight.bounded(session, s"contract-$name",
+          graft.core.Preflight.AnalysisBudgetMs) { fn(session, dir).schema } match {
         case Left(msg) => Seq(s"$name: builder failed preflight: $msg")
         case Right(schema: StructType) => schema.fields.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
@@ -132,7 +134,22 @@ class QueryCatalogContractSpec extends SparkTestBase {
     val failed = floor("q00_no_such_canary")
     assert(failed.left.exists(_.contains("q00_no_such_canary")), s"expected a named failure: $failed")
     val ok = floor("q01_pricing_summary")
-    assert(ok.exists(s => s > 0 && s < Canary.TimeoutMs / 1000.0), s"expected a finite floor: $ok")
+    assert(ok.exists(s => s > 0 && s < graft.core.Preflight.RunBudgetMs / 1000.0), s"expected a finite floor: $ok")
+  }
+
+  test("Explain: an unknown query prints one failure and the next name still runs") {
+    assume(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/lineitem.parquet")))
+    val out = new java.io.ByteArrayOutputStream()
+    val err = new java.io.ByteArrayOutputStream()
+    val res = Console.withOut(out) { Console.withErr(err) {
+      Explain.run(spark, dir, Seq("q00_no_such_query", "q01_pricing_summary"))
+    } }
+    val failures = err.toString("UTF-8").linesIterator.filter(_.startsWith("[explain]")).toSeq
+    assert(failures.size == 1 && failures.head.contains("q00_no_such_query failed"), s"failure lines: $failures")
+    assert(res.map(_._1) == Seq("q00_no_such_query", "q01_pricing_summary"))
+    assert(res.head._2.isLeft)
+    assert(res(1)._2.exists(ts => ts.size == 2 && ts.forall(_ > 0)), s"expected two timed runs: ${res(1)}")
+    assert(out.toString("UTF-8").contains("========== q01_pricing_summary =========="))
   }
 
   test("entry() — the driver's smoke flagship — returns rows on the sf0.001 fixture") {

@@ -39,9 +39,10 @@ class ConnectedComponentsSpec extends SparkTestBase {
     try {
       val v = (1L to 9L).toDF("doc_id")
       val e = (2L to 9L).map(i => i -> (i - 1)).toDF("doc_a", "doc_b")
-      val comp = ConnectedComponents.components(v, "doc_id", e, "doc_a", "doc_b",
-          checkpointDir = Some(dir.toString))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val comp = org.apache.spark.CheckpointDirs.withDir(spark.sparkContext, dir.toString) {
+        ConnectedComponents.components(v, "doc_id", e, "doc_a", "doc_b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       assert(comp.values.toSet == Set(1L), comp.toString)
       // the reliable path actually wrote round state to the dir
       val wrote = java.nio.file.Files.walk(dir).filter(java.nio.file.Files.isRegularFile(_)).count()

@@ -115,13 +115,15 @@ class GraphQueriesSpec extends SparkTestBase {
     assume(fixture)
     // the cluster-grade variant (r13 advice): localCheckpoint blocks
     // die with a lost executor mid-peel; checkpoint(dir) survives.
-    // Same flag contract as ConnectedComponents.components.
+    // The context's checkpoint dir picks it, as for
+    // ConnectedComponents.components.
     val ckDir = java.nio.file.Files.createTempDirectory("graft-kcore-ck")
     try {
       val local = GraphQueries.kcoreTrajectory(spark, dir).collect()
       graft.core.ScratchCache.drain()
-      val reliable = GraphQueries.kcoreTrajectory(spark, dir,
-        checkpointDir = Some(ckDir.toString)).collect()
+      val reliable = org.apache.spark.CheckpointDirs.withDir(spark.sparkContext, ckDir.toString) {
+        GraphQueries.kcoreTrajectory(spark, dir).collect()
+      }
       graft.core.ScratchCache.drain()
       def traj(rows: Array[org.apache.spark.sql.Row]) =
         rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -146,7 +148,7 @@ class GraphQueriesSpec extends SparkTestBase {
 
   test("q164: reliable-checkpoint mode computes the identical scores and writes real checkpoints") {
     assume(fixture)
-    // same flag contract as kcoreTrajectory / ConnectedComponents:
+    // same checkpoint-dir contract as kcoreTrajectory / ConnectedComponents:
     // localCheckpoint blocks die with a lost executor mid-run;
     // checkpoint(dir) survives — the cluster-grade mode for 2·Iters
     // normalization rounds.
@@ -154,8 +156,9 @@ class GraphQueriesSpec extends SparkTestBase {
     try {
       val local = GraphQueries.hitsScores(spark, dir).collect()
       graft.core.ScratchCache.drain()
-      val reliable = GraphQueries.hitsScores(spark, dir,
-        checkpointDir = Some(ckDir.toString)).collect()
+      val reliable = org.apache.spark.CheckpointDirs.withDir(spark.sparkContext, ckDir.toString) {
+        GraphQueries.hitsScores(spark, dir).collect()
+      }
       graft.core.ScratchCache.drain()
       def scores(rows: Array[org.apache.spark.sql.Row]) =
         rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
