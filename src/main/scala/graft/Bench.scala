@@ -42,7 +42,7 @@ import graft.core.{Preflight, Sessions}
   *     re-timed alone, with caches drained, when EITHER (a) its
   *     median exceeds 2× its own best sweep (the query demonstrably
   *     CAN run that fast — classic transient spike), or (b) its median
-  *     exceeds SPARK_GRAFT_RETIME_FLOOR seconds (default 3) — the case
+  *     exceeds [[RetimeFloorSec]] (3 s) — the case
   *     (a) misses when contention poisons ALL R sweeps of a heavy
   *     query (r4: three queries sat at 10–15 s in every sweep vs ~3 s
   *     isolated, and no re-time fired because best ≈ median). The
@@ -94,6 +94,10 @@ import graft.core.{Preflight, Sessions}
   * SPARK_GRAFT_CPUS cores, else all.
   */
 object Bench {
+  /** A query whose sweep median exceeds this many seconds is re-timed
+    * alone (scaladoc point 2b). */
+  val RetimeFloorSec: Double = 3.0
+
   def main(args: Array[String]): Unit = {
     val only = args.toSet // optional query-name subset (local dev)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -121,8 +125,9 @@ object Bench {
     // Queries that construct against a store artifact trigger its lazy
     // build — they are preflighted AFTER the timed builds below so the
     // build cost lands in the store's detail key, not the preflight.
-    val stores = SparkEntry.catalogs.flatMap(_.stores)
-    val deferred = stores.flatMap(_.dependents).toSet
+    val stores = SparkEntry.stores
+    val readers = SparkEntry.declared.filter(_.reads.nonEmpty)
+    val deferred = readers.map(_.name).toSet
     val preflightFailed = collection.mutable.LinkedHashMap.empty[String, String]
     allNames.filterNot(deferred).foreach(n => analyzeErr(n).foreach(preflightFailed += _))
 
@@ -130,13 +135,13 @@ object Bench {
     // sweeps, and the build is timed and emitted in BENCH_DETAIL under
     // the store's detail key, so the cost moved out of the catalog stays
     // visible in the artifact. A failed or hung build marks its
-    // dependents preflight-failed instead of crashing the whole bench
+    // readers preflight-failed instead of crashing the whole bench
     // before any record is written.
     val buildSecs = stores.map { st =>
       val t0 = System.nanoTime()
       Preflight.bounded(spark, s"bench-build-${st.name}", Preflight.RunBudgetMs)(st(spark, sfDir))
-        .left.foreach(m => st.dependents.foreach(q =>
-          preflightFailed += (q -> s"${st.name} build failed: $m".take(300))))
+        .left.foreach(m => readers.filter(_.reads.contains(st)).foreach(q =>
+          preflightFailed += (q.name -> s"${st.name} build failed: $m".take(300))))
       st.detailKey -> (System.nanoTime() - t0) / 1e9
     }
     allNames.filter(deferred).filterNot(preflightFailed.keySet)
@@ -171,10 +176,9 @@ object Bench {
     // first samples were unfavorable, so the raw attempts must stay
     // visible for a consumer to judge whether the headline is a
     // contention correction or noise harvesting.
-    val retimeFloor = sys.env.getOrElse("SPARK_GRAFT_RETIME_FLOOR", "3.0").toDouble
     val retimeAttempts: Map[String, Seq[Double]] = prelim.collect {
       case (name, med, best, _, true)
-        if (runs > 1 && med > 2 * best) || med > retimeFloor =>
+        if (runs > 1 && med > 2 * best) || med > RetimeFloorSec =>
         System.gc()
         val (t1, ok1) = timeOne("retime", name)
         // a re-time that itself stayed suspicious (the query's best

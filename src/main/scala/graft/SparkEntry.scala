@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.QueryCatalog
+import graft.core.{Query, QueryCatalog, Store}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Aggregates every module's query catalog. Each catalog entry is a
-  * (SparkSession, sfDir) => DataFrame; `oracleSql` carries the DuckDB
-  * twin of each query for the driver's hash-match correctness gate.
+  * Aggregates every module's query catalog. Each catalog declares its
+  * queries once ([[graft.core.Query]]); the maps below are derived from
+  * those declarations. Each entry is a (SparkSession, sfDir) =>
+  * DataFrame; `oracleSql` carries the DuckDB twin of each query for the
+  * driver's hash-match correctness gate.
   */
 object SparkEntry {
   /** All query catalogs, in SURVEY.md §7.1 build order. */
@@ -31,6 +33,12 @@ object SparkEntry {
     * sf0.001-sized here). */
   def entry(spark: SparkSession): DataFrame =
     ingest.IngestQueries.queries("q159_corpus_build")(spark, "/root/testdata/sf0.001")
+
+  /** Every catalog query, as declared, in catalog order. */
+  def declared: Seq[Query] = catalogs.flatMap(_.declared)
+
+  /** Every artifact store some catalog query reads, each once. */
+  def stores: Seq[Store[_]] = catalogs.flatMap(_.stores).distinct
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -22,47 +22,33 @@ import graft.sources.Sources
   */
 private[apps] object AppRunner {
 
-  def run(configPath: String,
+  /** Runs `app` on `spark` as the config file at `configPath` says.
+    * The caller owns the session. */
+  def run(spark: SparkSession, configPath: String,
           app: (SparkSession, String, Int) => DataFrame): Int = {
     val cfg = EngineConfig.load(configPath)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(cfg.inputFile))) {
       System.err.println(s"input file not found: ${cfg.inputFile}")
       return -1 // reference: map controller returns -1 on missing input
     }
-    // reuse an already-running session (tests, notebooks); only own —
-    // and therefore stop — a session this runner itself created. On
-    // the reuse path getOrCreate MUTATES the existing session's
-    // runtime conf with EVERY builder config it can apply, so each
-    // key the builder sets is saved first (value or absence) and
-    // restored after the job — a shared session must not come back
-    // from a config-file-driven app with its parallelism, time zone or
-    // UI conf silently changed (the N_WORKER output-file contract — at most
-    // N key-sorted files, merged output as the parity contract — is
-    // TextKVSink's, not this conf's).
-    val existing = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .filter(s => !s.sparkContext.isStopped)
-    val preexisting = existing.isDefined
-    val saved = existing.map(s => Sessions.Confs.map(k => k -> s.conf.getOption(k)))
-    val spark = Sessions.builder(
-        sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[${cfg.nWorker}]"), cfg.nWorker)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     try {
       val out = app(spark, cfg.inputFile, cfg.nWorker)
       TextKVSink.write(out, "key", "values", s"${cfg.dataDir.stripSuffix("/")}/output", cfg.nWorker)
       0
     } catch {
       case e: Throwable => System.err.println(s"job failed: ${e.getMessage}"); -2
-    } finally {
-      saved.foreach(_.foreach { case (k, v) =>
-        // non-modifiable keys (static conf getOrCreate couldn't apply
-        // either) throw on set/unset — nothing was mutated, skip them
-        try v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      })
-      if (!preexisting) spark.stop()
     }
+  }
+
+  /** The executables' entry: [[run]] on the session described above,
+    * which it stops afterwards. */
+  def standalone(configPath: String, app: (SparkSession, String, Int) => DataFrame): Int = {
+    val nWorker = EngineConfig.load(configPath).nWorker
+    val spark = Sessions.builder(
+        sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$nWorker]"), nWorker)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try run(spark, configPath, app) finally spark.stop()
   }
 }
 
@@ -72,7 +58,7 @@ object WordCountMain {
     WordCount.viaFacade(Sources.textLines(spark, input)).toDF("key", "values")
 
   def main(args: Array[String]): Unit = {
-    val rc = AppRunner.run(args.headOption.getOrElse("config_WordCounter.txt"), app)
+    val rc = AppRunner.standalone(args.headOption.getOrElse("config_WordCounter.txt"), app)
     if (rc != 0) sys.exit(rc)
   }
 }
@@ -83,7 +69,7 @@ object InvertedIndexMain {
     InvertedIndex.viaFacade(Sources.textLines(spark, input), n).toDF("key", "values")
 
   def main(args: Array[String]): Unit = {
-    val rc = AppRunner.run(args.headOption.getOrElse("config_InvertedIndex.txt"), app)
+    val rc = AppRunner.standalone(args.headOption.getOrElse("config_InvertedIndex.txt"), app)
     if (rc != 0) sys.exit(rc)
   }
 }

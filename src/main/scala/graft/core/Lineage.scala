@@ -3,10 +3,11 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 
 /** Lineage truncation for the iterative loops (connected components,
-  * q155's k-core peel, q164's HITS rounds). Each round's plan is built
-  * on the previous round's frame, so without an eager cut the logical
-  * plan doubles per round and the driver's analyzer hangs before a
-  * task launches (the round-12 q155 failure).
+  * q155's k-core peel, q164's HITS rounds, the BPE trainers' merge
+  * rounds, the IVF k-means and PQ codebook rounds). Each round's plan
+  * is built on the previous round's frame, so without an eager cut the
+  * logical plan doubles per round and the driver's analyzer hangs
+  * before a task launches (the round-12 q155 failure).
   *
   * The mode comes from the context, not from the caller:
   *  - no checkpoint dir (local runs, the catalog runners, perfbench):

@@ -20,7 +20,11 @@ import scala.util.control.NonFatal
   *  - on timeout the thread is interrupted (best effort — a
   *    plan-explosion loop doesn't poll interrupts, but the thread is a
   *    daemon so it never blocks JVM exit) and the job group is
-  *    cancelled, so half-run jobs stop competing with the next query;
+  *    cancelled together with every job the body submits later, so
+  *    half-run and late jobs stop competing with the next query. The
+  *    group id is the caller's name plus a per-call number
+  *    (`<group>#<n>`): a cancelled id rejects all its future jobs, and
+  *    callers reuse names (Bench's `bench-sweep-<q>` on every sweep);
   *  - whatever the outcome, [[ScratchCache]] is drained, so no
   *    scratch persist outlives its query.
   * A FRESH thread per call, not a pool: a hung body would poison a
@@ -59,9 +63,12 @@ object Preflight {
     * cannot poison later suites in the same JVM. */
   private[core] def resetEscapedFatal(): Unit = escapedFatal.set(null)
 
+  private val calls = new java.util.concurrent.atomic.AtomicLong()
+
   def bounded[T](spark: SparkSession, group: String, timeoutMs: Long)(body: => T): Either[String, T] = {
     Option(escapedFatal.get()).foreach(throw _)
     val sc = spark.sparkContext
+    val jobGroup = s"$group#${calls.incrementAndGet()}"
     @volatile var outcome: Option[Either[Throwable, T]] = None
     val t = new Thread(
       { () =>
@@ -72,7 +79,7 @@ object Preflight {
         // InterruptedException here is the EXPECTED result of our own
         // post-timeout interrupt, not contamination.
         outcome = Some(try {
-          sc.setJobGroup(group, group, interruptOnCancel = true)
+          sc.setJobGroup(jobGroup, group, interruptOnCancel = true)
           Right(body)
         } catch { case e: Throwable =>
           if (e.isInstanceOf[VirtualMachineError] || e.isInstanceOf[LinkageError])
@@ -93,7 +100,7 @@ object Preflight {
           Left(Option(e.getMessage).getOrElse(e.getClass.getName))
         case None =>
           t.interrupt()
-          try sc.cancelJobGroup(group) catch { case NonFatal(_) => () }
+          try sc.cancelJobGroupAndFutureJobs(jobGroup) catch { case NonFatal(_) => () }
           Left(s"$group timed out: still running after its ${timeoutMs / 1000.0} s budget")
       }
     } finally ScratchCache.drain()

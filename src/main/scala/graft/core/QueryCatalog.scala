@@ -3,24 +3,42 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** A named set of queries plus their DuckDB oracle SQL.
-  *
-  * Contract (mirrors `graft.SparkEntry`): every key in `oracleSql` must
-  * exist in `queries`; column names must match between the Spark result
-  * and the oracle result (the driver sorts columns by name and hashes
-  * values). Queries without an oracle entry get a weaker rows-only check.
-  */
+/** What a catalog query's answer is checked against: exactly one of
+  * DuckDB SQL or a documented reason why no such SQL can exist. */
+sealed trait Oracle
+object Oracle {
+  /** ANSI SQL DuckDB runs on the same parquet tables; the driver sorts
+    * both results' columns by name and hash-matches the values, so the
+    * column names must match the Spark result's. */
+  final case class Sql(sql: String) extends Oracle
+  /** Why the query is UNVERIFIABLE BY DESIGN (not merely unverified),
+    * plus a pointer to the spec that gates it instead. The query gets
+    * the driver's weaker rows-only check. */
+  final case class Unverifiable(reason: String) extends Oracle
+}
+
+/** One catalog query, declared once: its name, its builder, its oracle
+  * and the artifact stores ([[Store]]) its builder reads. */
+final case class Query(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: Oracle,
+    reads: Seq[Store[_]] = Seq.empty)
+
+/** A named set of queries. Everything the runners read is derived from
+  * [[declared]]. The derived members are lazy: a strict val here would
+  * initialize before the object's own list. */
 trait QueryCatalog {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracleSql: Map[String, String]
-  /** For every key in `queries` with NO `oracleSql` entry: a documented
-    * reason why the query is UNVERIFIABLE BY DESIGN (not merely
-    * unverified) plus a pointer to the spec that gates it instead.
-    * Verify dumps these as `no_oracle_reasons.json` so the correctness
-    * artifact carries the distinction. */
-  def noOracleReasons: Map[String, String] = Map.empty
-  /** The one-off artifacts this catalog's queries replay (see [[Store]]). */
-  def stores: Seq[Store[_]] = Seq.empty
+  def declared: Seq[Query]
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(q => q.name -> q.build).toMap
+  lazy val oracleSql: Map[String, String] =
+    declared.collect { case Query(n, _, Oracle.Sql(sql), _) => n -> sql }.toMap
+  lazy val noOracleReasons: Map[String, String] =
+    declared.collect { case Query(n, _, Oracle.Unverifiable(why), _) => n -> why }.toMap
+  /** The one-off artifacts this catalog's queries read, each once. */
+  lazy val stores: Seq[Store[_]] = declared.flatMap(_.reads).distinct
 }
 
 /** Cross-engine determinism helpers.

@@ -17,11 +17,6 @@ import org.apache.spark.sql.SparkSession
   * instead.
   */
 object Sessions {
-  /** The conf keys [[builder]] sets (besides the master). A runner that
-    * reuses a shared session saves and restores exactly these. */
-  val Confs: Seq[String] = Seq(
-    "spark.sql.shuffle.partitions", "spark.sql.session.timeZone", "spark.ui.enabled")
-
   def builder(master: String, partitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

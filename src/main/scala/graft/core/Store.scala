@@ -14,10 +14,10 @@ import org.apache.spark.sql.SparkSession
   * once.
   *
   * Bench builds each store once, untimed by the sweeps, and records the
-  * build under `detailKey` in BENCH_DETAIL.json; `dependents` (every
-  * catalog query that reads the store) are analyzed only after the
-  * build, and are marked failed if it fails. */
-final class Store[A](val name: String, val detailKey: String, val dependents: Seq[String])(
+  * build under `detailKey` in BENCH_DETAIL.json; the queries that
+  * declare the store in their [[Query.reads]] are analyzed only after
+  * the build, and are marked failed if it fails. */
+final class Store[A](val name: String, val detailKey: String)(
     build: (SparkSession, String, Path) => A) {
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, A]()
 

@@ -36,7 +36,7 @@ object ConnectedComponents {
     * OOM the driver. Checkpointing replaces the lineage with the
     * materialized rows, keeping every round's plan constant size —
     * the standard discipline for iterative DataFrame algorithms. The
-    * cut is [[graft.core.Lineage.truncate]]: `localCheckpoint`, or a
+    * cut is [[graft.core.Lineage.truncate]]: a local checkpoint, or a
     * reliable `checkpoint()` when the context has a checkpoint dir. */
   def components(vertices: DataFrame, idCol: String,
                  edges: DataFrame, srcCol: String, dstCol: String,

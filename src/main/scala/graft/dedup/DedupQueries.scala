@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{QueryCatalog, ScratchCache, Store, Tables}
+import graft.core.{Oracle, Query, QueryCatalog, ScratchCache, Store, Tables}
 
 /** Deduplication surface (training-data-pipeline operators): exact,
   * MinHash signatures + LSH band candidate pairs, SimHash, n-gram
@@ -330,8 +330,7 @@ object DedupQueries extends QueryCatalog {
     * every timed q94 execution measures the incremental REPLAY — the
     * plan a daily-ingest user actually runs (Verify builds it lazily on
     * q94's first run). q241's nightly refresh replays it too. */
-  val sigStore = new Store[String]("sigstore", "q94_sigstore_build",
-      Seq("q94_incremental_dedup", "q241_nightly_refresh"))((s, dir, path) => {
+  val sigStore = new Store[String]("sigstore", "q94_sigstore_build")((s, dir, path) => {
     writeCorpusSignatures(s, dir, path.toString)
     path.toString
   })
@@ -681,9 +680,7 @@ object DedupQueries extends QueryCatalog {
     * independent — so artifact ≡ recompute bit-for-bit; the recompute
     * path itself stays oracle-checked through the recursive-CTE twin
     * and ConnectedComponentsSpec. */
-  val labelStore = new Store[String]("labelstore", "q75_labelstore_build",
-      Seq("q75_dedup_clusters", "q100_canonical_docs",
-        "q222_cluster_size_histogram"))((s, dir, path) => {
+  val labelStore = new Store[String]("labelstore", "q75_labelstore_build")((s, dir, path) => {
     clusterLabels(s, dir).write.mode("overwrite").parquet(path.toString)
     path.toString
   })
@@ -2376,92 +2373,51 @@ object DedupQueries extends QueryCatalog {
        |ORDER BY b.source""".stripMargin
   }
 
-  override val stores: Seq[Store[_]] = Seq(sigStore, labelStore)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q241_nightly_refresh" -> q241,
-    "q237_bitext_mining" -> q237,
-    "q234_incremental_novelty" -> q234,
-    "q231_sig_width_sweep" -> q231,
-    "q229_retro_contamination" -> q229,
-    "q222_cluster_size_histogram" -> q222,
-    "q216_ngram_novelty" -> q216,
-    "q40_dedup_exact" -> q40,
-    "q41_dedup_minhash_sigs" -> q41,
-    "q42_dedup_lsh_pairs" -> q42,
-    "q43_dedup_simhash32" -> q43,
-    "q44_dedup_jaccard_verify" -> q44,
-    "q45_dedup_embed_cosine" -> q45,
-    "q46_dedup_pipeline" -> q46,
-    "q47_dedup_simhash64_pairs" -> q47,
-    "q55_dedup_minhash64_pairs" -> q55,
-    "q73_cross_modal_dedup" -> q73,
-    "q75_dedup_clusters" -> q75,
-    "q190_split_leakage" -> q190,
-    "q81_decontaminate" -> q81,
-    "q194_corpus_funnel" -> q194,
-    "q195_dedup_savings" -> q195,
-    "q197_decontam_attribution" -> q197,
-    "q82_repetition_filter" -> q82,
-    "q86_span_dedup" -> q86,
-    "q94_incremental_dedup" -> ((s: SparkSession, dir: String) =>
-      q94Incremental(s, dir, sigStore(s, dir))),
-    "q98_containment_dedup" -> q98,
-    "q100_canonical_docs" -> q100,
-    "q106_sig_jaccard_est" -> q106,
-    "q129_url_dedup_policy" -> (UrlCanon.q129 _),
-    "q154_group_split" -> (UrlCanon.q154 _),
-    "q163_domain_reputation" -> (UrlCanon.q163 _),
-    "q165_crawl_budget" -> (UrlCanon.q165 _),
-    "q130_decontaminate_bloom" -> q130,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q241_nightly_refresh" -> q241Sql,
-    "q237_bitext_mining" -> q237Sql,
-    "q234_incremental_novelty" -> q234Sql,
-    "q231_sig_width_sweep" -> q231Sql,
-    "q229_retro_contamination" -> q229Sql,
-    "q222_cluster_size_histogram" -> q222Sql,
-    "q216_ngram_novelty" -> q216Sql,
-    "q40_dedup_exact" -> q40Sql,
-    "q41_dedup_minhash_sigs" -> q41Sql,
-    "q42_dedup_lsh_pairs" -> q42Sql,
-    "q43_dedup_simhash32" -> q43Sql,
-    "q44_dedup_jaccard_verify" -> q44Sql,
-    "q45_dedup_embed_cosine" -> q45Sql,
-    "q46_dedup_pipeline" -> q46Sql,
-    "q73_cross_modal_dedup" -> q73Sql,
-    "q75_dedup_clusters" -> q75Sql,
-    "q190_split_leakage" -> q190Sql,
-    "q81_decontaminate" -> q81Sql,
-    "q194_corpus_funnel" -> q194Sql,
-    "q195_dedup_savings" -> q195Sql,
-    "q197_decontam_attribution" -> q197Sql,
-    "q82_repetition_filter" -> q82Sql,
-    "q86_span_dedup" -> q86Sql,
-    "q94_incremental_dedup" -> q94Sql,
-    "q98_containment_dedup" -> q98Sql,
-    "q100_canonical_docs" -> q100Sql,
-    "q106_sig_jaccard_est" -> q106Sql,
-    "q129_url_dedup_policy" -> UrlCanon.q129Sql,
-    "q154_group_split" -> UrlCanon.q154Sql,
-    "q163_domain_reputation" -> UrlCanon.q163Sql,
-    "q165_crawl_budget" -> UrlCanon.q165Sql,
+  val declared: Seq[Query] = Seq(
+    Query("q241_nightly_refresh", q241, Oracle.Sql(q241Sql),
+      reads = Seq(sigStore, graft.sim.SimilarityQueries.ivfStore)),
+    Query("q237_bitext_mining", q237, Oracle.Sql(q237Sql)),
+    Query("q234_incremental_novelty", q234, Oracle.Sql(q234Sql)),
+    Query("q231_sig_width_sweep", q231, Oracle.Sql(q231Sql)),
+    Query("q229_retro_contamination", q229, Oracle.Sql(q229Sql)),
+    Query("q222_cluster_size_histogram", q222, Oracle.Sql(q222Sql), reads = Seq(labelStore)),
+    Query("q216_ngram_novelty", q216, Oracle.Sql(q216Sql)),
+    Query("q40_dedup_exact", q40, Oracle.Sql(q40Sql)),
+    Query("q41_dedup_minhash_sigs", q41, Oracle.Sql(q41Sql)),
+    Query("q42_dedup_lsh_pairs", q42, Oracle.Sql(q42Sql)),
+    Query("q43_dedup_simhash32", q43, Oracle.Sql(q43Sql)),
+    Query("q44_dedup_jaccard_verify", q44, Oracle.Sql(q44Sql)),
+    Query("q45_dedup_embed_cosine", q45, Oracle.Sql(q45Sql)),
+    Query("q46_dedup_pipeline", q46, Oracle.Sql(q46Sql)),
+    Query("q47_dedup_simhash64_pairs", q47, Oracle.Unverifiable(
+      "UNVERIFIABLE BY DESIGN: the production path hashes with Spark-native xxhash64, " +
+      "which DuckDB does not implement, so no SQL twin can reproduce the fingerprints. " +
+      "Gated instead by q43 (the md5-based algorithm twin, hash-green vs DuckDB) and " +
+      "SimHash64Spec's brute-force-oracle exactness test (complete recall at Hamming<=7).")),
+    Query("q55_dedup_minhash64_pairs", q55, Oracle.Unverifiable(
+      "UNVERIFIABLE BY DESIGN: xxhash64 MinHash signatures have no DuckDB twin " +
+      "(same reason as q47). Gated instead by q42 (the md5-based algorithm twin, " +
+      "hash-green vs DuckDB) and MinHash64Spec.")),
+    Query("q73_cross_modal_dedup", q73, Oracle.Sql(q73Sql)),
+    Query("q75_dedup_clusters", q75, Oracle.Sql(q75Sql), reads = Seq(labelStore)),
+    Query("q190_split_leakage", q190, Oracle.Sql(q190Sql)),
+    Query("q81_decontaminate", q81, Oracle.Sql(q81Sql)),
+    Query("q194_corpus_funnel", q194, Oracle.Sql(q194Sql)),
+    Query("q195_dedup_savings", q195, Oracle.Sql(q195Sql)),
+    Query("q197_decontam_attribution", q197, Oracle.Sql(q197Sql)),
+    Query("q82_repetition_filter", q82, Oracle.Sql(q82Sql)),
+    Query("q86_span_dedup", q86, Oracle.Sql(q86Sql)),
+    Query("q94_incremental_dedup", (s, dir) => q94Incremental(s, dir, sigStore(s, dir)),
+      Oracle.Sql(q94Sql), reads = Seq(sigStore)),
+    Query("q98_containment_dedup", q98, Oracle.Sql(q98Sql)),
+    Query("q100_canonical_docs", q100, Oracle.Sql(q100Sql), reads = Seq(labelStore)),
+    Query("q106_sig_jaccard_est", q106, Oracle.Sql(q106Sql)),
+    Query("q129_url_dedup_policy", UrlCanon.q129, Oracle.Sql(UrlCanon.q129Sql)),
+    Query("q154_group_split", UrlCanon.q154, Oracle.Sql(UrlCanon.q154Sql)),
+    Query("q163_domain_reputation", UrlCanon.q163, Oracle.Sql(UrlCanon.q163Sql)),
+    Query("q165_crawl_budget", UrlCanon.q165, Oracle.Sql(UrlCanon.q165Sql)),
     // q81's oracle verbatim: the Bloom path must produce byte-identical
     // output — two engine paths, one oracle, is the exactness proof
-    "q130_decontaminate_bloom" -> q81Sql,
-  )
-
-  override val noOracleReasons: Map[String, String] = Map(
-    "q47_dedup_simhash64_pairs" ->
-      ("UNVERIFIABLE BY DESIGN: the production path hashes with Spark-native xxhash64, " +
-       "which DuckDB does not implement, so no SQL twin can reproduce the fingerprints. " +
-       "Gated instead by q43 (the md5-based algorithm twin, hash-green vs DuckDB) and " +
-       "SimHash64Spec's brute-force-oracle exactness test (complete recall at Hamming<=7)."),
-    "q55_dedup_minhash64_pairs" ->
-      ("UNVERIFIABLE BY DESIGN: xxhash64 MinHash signatures have no DuckDB twin " +
-       "(same reason as q47). Gated instead by q42 (the md5-based algorithm twin, " +
-       "hash-green vs DuckDB) and MinHash64Spec."),
+    Query("q130_decontaminate_bloom", q130, Oracle.Sql(q81Sql)),
   )
 }

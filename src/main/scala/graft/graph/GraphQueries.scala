@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{QueryCatalog, ScratchCache, Tables}
+import graft.core.{Oracle, Query, QueryCatalog, ScratchCache, Tables}
 import graft.core.Lineage.truncate
 
 /** Link-graph analytics over the document corpus — the web-curation
@@ -530,7 +530,7 @@ object GraphQueries extends QueryCatalog {
     // scaladoc — persist caches blocks but the plan still nests
     // 2^rounds deep and analysis hangs the driver. After each
     // checkpoint the frame is a leaf, so every downstream plan is
-    // constant-size. localCheckpoint blocks are freed by the
+    // constant-size. Checkpointed blocks are freed by the
     // ContextCleaner once the returned frame is dropped (same
     // lifetime story as ConnectedComponents' rounds).
     //
@@ -594,7 +594,7 @@ object GraphQueries extends QueryCatalog {
   // 2–3 times, so the un-materialized plan nests ~2^rounds copies of
   // `und` (measured: 8 rounds exhausts the fd limit opening the same
   // parquet file thousands of times) — the exact blowup the Spark side
-  // solves with localCheckpoint, solved the DuckDB way.
+  // solves with Lineage.truncate, solved the DuckDB way.
   private val q155Sql = {
     val rounds = (1 to CoreRounds).map { i =>
       s"""d$i AS MATERIALIZED (
@@ -896,27 +896,15 @@ object GraphQueries extends QueryCatalog {
        |FROM mass m LEFT JOIN intra i ON m.community = i.community, tm
        |ORDER BY q_num DESC, m.community""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q213_anchor_terms" -> q213,
-    "q214_modularity" -> q214,
-    "q132_reverse_links" -> q132,
-    "q133_pagerank" -> q133,
-    "q143_triangle_count" -> q143,
-    "q155_kcore" -> q155,
-    "q164_hits" -> q164,
-    "q196_trustrank" -> q196,
-    "q202_label_propagation" -> q202,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q213_anchor_terms" -> q213Sql,
-    "q214_modularity" -> q214Sql,
-    "q132_reverse_links" -> q132Sql,
-    "q133_pagerank" -> q133Sql,
-    "q143_triangle_count" -> q143Sql,
-    "q155_kcore" -> q155Sql,
-    "q164_hits" -> q164Sql,
-    "q196_trustrank" -> q196Sql,
-    "q202_label_propagation" -> q202Sql,
+  val declared: Seq[Query] = Seq(
+    Query("q213_anchor_terms", q213, Oracle.Sql(q213Sql)),
+    Query("q214_modularity", q214, Oracle.Sql(q214Sql)),
+    Query("q132_reverse_links", q132, Oracle.Sql(q132Sql)),
+    Query("q133_pagerank", q133, Oracle.Sql(q133Sql)),
+    Query("q143_triangle_count", q143, Oracle.Sql(q143Sql)),
+    Query("q155_kcore", q155, Oracle.Sql(q155Sql)),
+    Query("q164_hits", q164, Oracle.Sql(q164Sql)),
+    Query("q196_trustrank", q196, Oracle.Sql(q196Sql)),
+    Query("q202_label_propagation", q202, Oracle.Sql(q202Sql)),
   )
 }

@@ -3,7 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.{Det, QueryCatalog, Store, Tables}
+import graft.core.{Det, Oracle, Query, QueryCatalog, Store, Tables}
 import graft.dedup.UrlCanon
 
 /** Raw crawl ingest — the one shape a 100 TB curation pipeline hits
@@ -65,10 +65,7 @@ object IngestQueries extends QueryCatalog {
     * corpus RENDER is test scaffolding (a real pipeline receives the
     * raw files), so its cost must not land on the timed ingest queries
     * that read the dump. q200 and q208 read it through [[fetches]]. */
-  val rawStore = new Store[(String, String)]("rawstore", "q156_rawstore_build",
-      Seq("q156_jsonl_ingest", "q157_csv_ingest", "q158_crawl_admission",
-        "q159_corpus_build", "q160_policy_admission", "q161_stream_raw_ingest",
-        "q200_policy_churn", "q208_fetch_drain"))((s, dir, base) => {
+  val rawStore = new Store[(String, String)]("rawstore", "q156_rawstore_build")((s, dir, base) => {
     val jsonlPath = base.resolve("jsonl").toString
     val csvPath = base.resolve("csv").toString
     val docs = Tables.documents(s, dir)
@@ -680,9 +677,7 @@ object IngestQueries extends QueryCatalog {
     * re-crawl diffs against. Snapshot N-1's one-off output; timed runs
     * of its readers measure the diff joins only. q192 and q199 read it
     * through [[snapshotVerdictCounts]]. */
-  val prevStore = new Store[String]("prevcrawl", "q162_prevstore_build",
-      Seq("q162_snapshot_diff", "q169_moved_pages", "q172_crawl_frontier",
-        "q192_recrawl_schedule", "q199_crawl_roi"))((s, dir, path) => {
+  val prevStore = new Store[String]("prevcrawl", "q162_prevstore_build")((s, dir, path) => {
     val docs = Tables.documents(s, dir)
     docs.filter(expr(prevSelSql))
       .selectExpr("doc_id", "source", s"$prevDigestSql AS digest")
@@ -1179,8 +1174,7 @@ object IngestQueries extends QueryCatalog {
 
   /** A crawl fetches robots.txt bodies once per domain; timed q167
     * runs measure the PARSE. */
-  val robotsStore = new Store[String]("robots", "q167_robotsstore_build",
-      Seq("q167_robots_parse"))((s, dir, path) => {
+  val robotsStore = new Store[String]("robots", "q167_robotsstore_build")((s, dir, path) => {
     Tables.documents(s, dir)
       .selectExpr(s"${UrlCanon.rawUrlSql} AS raw_url")
       .selectExpr(s"${UrlCanon.strippedSql("raw_url")} AS u")
@@ -1380,45 +1374,23 @@ object IngestQueries extends QueryCatalog {
        |FROM cells, t ORDER BY license, lang""".stripMargin
   }
 
-  override val stores: Seq[Store[_]] = Seq(rawStore, prevStore, robotsStore)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q221_license_mix" -> q221,
-    "q156_jsonl_ingest" -> q156,
-    "q157_csv_ingest" -> q157,
-    "q158_crawl_admission" -> q158,
-    "q159_corpus_build" -> q159,
-    "q160_policy_admission" -> q160,
-    "q161_stream_raw_ingest" -> q161,
-    "q162_snapshot_diff" -> q162,
-    "q192_recrawl_schedule" -> q192,
-    "q199_crawl_roi" -> q199,
-    "q200_policy_churn" -> q200,
-    "q208_fetch_drain" -> q208,
-    "q167_robots_parse" -> q167,
-    "q169_moved_pages" -> q169,
-    "q171_html_extract" -> q171,
-    "q172_crawl_frontier" -> q172,
-    "q174_site_boilerplate" -> q174,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q221_license_mix" -> q221Sql,
-    "q156_jsonl_ingest" -> q156Sql,
-    "q157_csv_ingest" -> q157Sql,
-    "q158_crawl_admission" -> q158Sql,
-    "q159_corpus_build" -> q159Sql,
-    "q160_policy_admission" -> q160Sql,
-    "q161_stream_raw_ingest" -> q161Sql,
-    "q162_snapshot_diff" -> q162Sql,
-    "q192_recrawl_schedule" -> q192Sql,
-    "q199_crawl_roi" -> q199Sql,
-    "q200_policy_churn" -> q200Sql,
-    "q208_fetch_drain" -> q208Sql,
-    "q167_robots_parse" -> q167Sql,
-    "q169_moved_pages" -> q169Sql,
-    "q171_html_extract" -> q171Sql,
-    "q172_crawl_frontier" -> q172Sql,
-    "q174_site_boilerplate" -> q174Sql,
+  val declared: Seq[Query] = Seq(
+    Query("q221_license_mix", q221, Oracle.Sql(q221Sql)),
+    Query("q156_jsonl_ingest", q156, Oracle.Sql(q156Sql), reads = Seq(rawStore)),
+    Query("q157_csv_ingest", q157, Oracle.Sql(q157Sql), reads = Seq(rawStore)),
+    Query("q158_crawl_admission", q158, Oracle.Sql(q158Sql), reads = Seq(rawStore)),
+    Query("q159_corpus_build", q159, Oracle.Sql(q159Sql), reads = Seq(rawStore)),
+    Query("q160_policy_admission", q160, Oracle.Sql(q160Sql), reads = Seq(rawStore)),
+    Query("q161_stream_raw_ingest", q161, Oracle.Sql(q161Sql), reads = Seq(rawStore)),
+    Query("q162_snapshot_diff", q162, Oracle.Sql(q162Sql), reads = Seq(prevStore)),
+    Query("q192_recrawl_schedule", q192, Oracle.Sql(q192Sql), reads = Seq(prevStore)),
+    Query("q199_crawl_roi", q199, Oracle.Sql(q199Sql), reads = Seq(prevStore)),
+    Query("q200_policy_churn", q200, Oracle.Sql(q200Sql), reads = Seq(rawStore)),
+    Query("q208_fetch_drain", q208, Oracle.Sql(q208Sql), reads = Seq(rawStore)),
+    Query("q167_robots_parse", q167, Oracle.Sql(q167Sql), reads = Seq(robotsStore)),
+    Query("q169_moved_pages", q169, Oracle.Sql(q169Sql), reads = Seq(prevStore)),
+    Query("q171_html_extract", q171, Oracle.Sql(q171Sql)),
+    Query("q172_crawl_frontier", q172, Oracle.Sql(q172Sql), reads = Seq(prevStore)),
+    Query("q174_site_boilerplate", q174, Oracle.Sql(q174Sql)),
   )
 }

@@ -2,7 +2,7 @@ package graft.layout
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Det, PrefixSum, QueryCatalog, ScratchCache, Store, Tables}
+import graft.core.{Det, Oracle, PrefixSum, Query, QueryCatalog, ScratchCache, Store, Tables}
 
 /** Physical-data-layout operators — the table-maintenance surface a
   * 100 TB lakehouse pipeline runs BETWEEN queries so the queries
@@ -70,8 +70,7 @@ object LayoutQueries extends QueryCatalog {
     * measures the JOIN. saveAsTable is required (bucket metadata lives
     * in the catalog, not the files), so the tables are session-scoped
     * and named after the store's path. */
-  val bucketStore = new Store[(String, String)]("bucketstore", "q134_bucketstore_build",
-      Seq("q134_bucketed_join"))((s, dir, base) => {
+  val bucketStore = new Store[(String, String)]("bucketstore", "q134_bucketstore_build")((s, dir, base) => {
     val slug = graft.core.Scratch.slug(base.toString)
     val oTbl = s"graft_bkt_orders_$slug"
     val lTbl = s"graft_bkt_lineitem_$slug"
@@ -368,8 +367,7 @@ object LayoutQueries extends QueryCatalog {
     * (there is no metadata-only min() path), which diluted the
     * "day-scoped read lists one directory" measurement the query
     * exists to make. */
-  val partStore = new Store[(String, java.sql.Date)]("partstore", "q151_partstore_build",
-      Seq("q151_partition_pruning"))((s, dir, base) => {
+  val partStore = new Store[(String, java.sql.Date)]("partstore", "q151_partstore_build")((s, dir, base) => {
     import s.implicits._
     val path = base.toString
     val ev = Tables.events(s, dir).withColumn("event_date", to_date(col("ts")))
@@ -418,8 +416,7 @@ object LayoutQueries extends QueryCatalog {
 
   /** q153's materialized history aggregate is nightly ETL's one full
     * scan, paid once; timed q153 runs measure the delta merge only. */
-  val aggStore = new Store[String]("aggstore", "q153_aggstore_build",
-      Seq("q153_incremental_agg"))((s, dir, base) => {
+  val aggStore = new Store[String]("aggstore", "q153_aggstore_build")((s, dir, base) => {
     import s.implicits._
     val path = base.toString
     val ev = Tables.events(s, dir)
@@ -656,8 +653,7 @@ object LayoutQueries extends QueryCatalog {
     * from the base table — the mergeSchema MECHANICS (unified schema,
     * null back-fill) are LayoutSpec's job, the values are the
     * oracle's. */
-  val evoStore = new Store[(String, String)]("evostore", "q142_evostore_build",
-      Seq("q142_schema_evolution"))((s, dir, base) => {
+  val evoStore = new Store[(String, String)]("evostore", "q142_evostore_build")((s, dir, base) => {
     import s.implicits._
     val orders = Tables.orders(s, dir)
       .select($"o_orderkey", $"o_orderpriority",
@@ -713,8 +709,7 @@ object LayoutQueries extends QueryCatalog {
     * pruning discipline the parquet scans are held to. */
   /** q166's ORC lake table is the write-once format conversion; timed
     * q166 runs measure the selective ORC read. */
-  val orcStore = new Store[String]("orcstore", "q166_orcstore_build",
-      Seq("q166_orc_roundtrip"))((s, dir, path) => {
+  val orcStore = new Store[String]("orcstore", "q166_orcstore_build")((s, dir, path) => {
     Tables.orders(s, dir).write.mode("overwrite").orc(path.toString)
     path.toString
   })
@@ -1342,56 +1337,30 @@ object LayoutQueries extends QueryCatalog {
       .orderBy($"col")
   }
 
-  override val noOracleReasons: Map[String, String] = Map(
-    "q238_column_stats_approx" ->
-      ("UNVERIFIABLE BY DESIGN: approx_count_distinct is a HyperLogLog++ sketch whose " +
-        "estimate DuckDB cannot reproduce (its approx_distinct is a different sketch) — " +
-        "gated instead by ApproxStatsSpec, which calibrates every ndv_approx against " +
-        "q217's exact NDVs (the oracle-checked md5 twin for the non-sketch columns) and " +
-        "pins the no-Expand single-pass plan that is this query's reason to exist."))
-
-  override val stores: Seq[Store[_]] = Seq(bucketStore, partStore, aggStore, evoStore, orcStore)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q238_column_stats_approx" -> q238,
-    "q226_cardinality_audit" -> q226,
-    "q224_partition_key_audit" -> q224,
-    "q215_shard_plan" -> q215,
-    "q217_column_stats" -> q217,
-    "q134_bucketed_join" -> q134,
-    "q135_zorder_layout" -> q135,
-    "q136_compaction_plan" -> q136,
-    "q137_hist_quantiles" -> q137,
-    "q149_grouped_quantiles" -> q149,
-    "q151_partition_pruning" -> q151,
-    "q153_incremental_agg" -> q153,
-    "q141_cdc_upsert" -> q141,
-    "q142_schema_evolution" -> q142,
-    "q166_orc_roundtrip" -> q166,
-    "q168_source_length_quantiles" -> q168,
-    "q180_corpus_manifest" -> q180,
-    "q185_manifest_incremental" -> q185,
-    "q187_drift_monitor" -> q187,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q226_cardinality_audit" -> q226Sql,
-    "q224_partition_key_audit" -> q224Sql,
-    "q215_shard_plan" -> q215Sql,
-    "q217_column_stats" -> q217Sql,
-    "q134_bucketed_join" -> q134Sql,
-    "q135_zorder_layout" -> q135Sql,
-    "q136_compaction_plan" -> q136Sql,
-    "q137_hist_quantiles" -> q137Sql,
-    "q149_grouped_quantiles" -> q149Sql,
-    "q151_partition_pruning" -> q151Sql,
-    "q153_incremental_agg" -> q153Sql,
-    "q141_cdc_upsert" -> q141Sql,
-    "q142_schema_evolution" -> q142Sql,
-    "q166_orc_roundtrip" -> q166Sql,
-    "q168_source_length_quantiles" -> q168Sql,
-    "q180_corpus_manifest" -> q180Sql,
-    "q185_manifest_incremental" -> q185Sql,
-    "q187_drift_monitor" -> q187Sql,
+  val declared: Seq[Query] = Seq(
+    Query("q238_column_stats_approx", q238, Oracle.Unverifiable(
+      "UNVERIFIABLE BY DESIGN: approx_count_distinct is a HyperLogLog++ sketch whose " +
+      "estimate DuckDB cannot reproduce (its approx_distinct is a different sketch) — " +
+      "gated instead by ApproxStatsSpec, which calibrates every ndv_approx against " +
+      "q217's exact NDVs (the oracle-checked md5 twin for the non-sketch columns) and " +
+      "pins the no-Expand single-pass plan that is this query's reason to exist.")),
+    Query("q226_cardinality_audit", q226, Oracle.Sql(q226Sql)),
+    Query("q224_partition_key_audit", q224, Oracle.Sql(q224Sql)),
+    Query("q215_shard_plan", q215, Oracle.Sql(q215Sql)),
+    Query("q217_column_stats", q217, Oracle.Sql(q217Sql)),
+    Query("q134_bucketed_join", q134, Oracle.Sql(q134Sql), reads = Seq(bucketStore)),
+    Query("q135_zorder_layout", q135, Oracle.Sql(q135Sql)),
+    Query("q136_compaction_plan", q136, Oracle.Sql(q136Sql)),
+    Query("q137_hist_quantiles", q137, Oracle.Sql(q137Sql)),
+    Query("q149_grouped_quantiles", q149, Oracle.Sql(q149Sql)),
+    Query("q151_partition_pruning", q151, Oracle.Sql(q151Sql), reads = Seq(partStore)),
+    Query("q153_incremental_agg", q153, Oracle.Sql(q153Sql), reads = Seq(aggStore)),
+    Query("q141_cdc_upsert", q141, Oracle.Sql(q141Sql)),
+    Query("q142_schema_evolution", q142, Oracle.Sql(q142Sql), reads = Seq(evoStore)),
+    Query("q166_orc_roundtrip", q166, Oracle.Sql(q166Sql), reads = Seq(orcStore)),
+    Query("q168_source_length_quantiles", q168, Oracle.Sql(q168Sql)),
+    Query("q180_corpus_manifest", q180, Oracle.Sql(q180Sql)),
+    Query("q185_manifest_incremental", q185, Oracle.Sql(q185Sql)),
+    Query("q187_drift_monitor", q187, Oracle.Sql(q187Sql)),
   )
 }

@@ -2,7 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{QueryCatalog, Tables}
+import graft.core.{Oracle, Query, QueryCatalog, Tables}
 import graft.dedup.Banding
 
 /** Oracle-checkable slice of the multimodal surface: media bytes are
@@ -784,29 +784,16 @@ object MultimodalQueries extends QueryCatalog {
        |FROM v GROUP BY media_type, verdict
        |ORDER BY media_type, verdict""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q212_media_integrity" -> q212,
-    "q70_multimodal_meta" -> q70,
-    "q71_multimodal_frames" -> q71,
-    "q72_multimodal_decode" -> q72,
-    "q108_frame_dedup" -> q108,
-    "q113_audio_silence" -> q113,
-    "q124_frame_neardup" -> q124,
-    "q126_media_neardup_rollup" -> q126,
-    "q152_scene_cuts" -> q152,
-    "q179_asr_windows" -> q179,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q212_media_integrity" -> q212Sql,
-    "q70_multimodal_meta" -> q70Sql,
-    "q71_multimodal_frames" -> q71Sql,
-    "q72_multimodal_decode" -> q72Sql,
-    "q108_frame_dedup" -> q108Sql,
-    "q113_audio_silence" -> q113Sql,
-    "q124_frame_neardup" -> q124Sql,
-    "q126_media_neardup_rollup" -> q126Sql,
-    "q152_scene_cuts" -> q152Sql,
-    "q179_asr_windows" -> q179Sql,
+  val declared: Seq[Query] = Seq(
+    Query("q212_media_integrity", q212, Oracle.Sql(q212Sql)),
+    Query("q70_multimodal_meta", q70, Oracle.Sql(q70Sql)),
+    Query("q71_multimodal_frames", q71, Oracle.Sql(q71Sql)),
+    Query("q72_multimodal_decode", q72, Oracle.Sql(q72Sql)),
+    Query("q108_frame_dedup", q108, Oracle.Sql(q108Sql)),
+    Query("q113_audio_silence", q113, Oracle.Sql(q113Sql)),
+    Query("q124_frame_neardup", q124, Oracle.Sql(q124Sql)),
+    Query("q126_media_neardup_rollup", q126, Oracle.Sql(q126Sql)),
+    Query("q152_scene_cuts", q152, Oracle.Sql(q152Sql)),
+    Query("q179_asr_windows", q179, Oracle.Sql(q179Sql)),
   )
 }

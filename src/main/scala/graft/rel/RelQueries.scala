@@ -3,7 +3,7 @@ package graft.rel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Det, QueryCatalog, Tables}
+import graft.core.{Det, Oracle, Query, QueryCatalog, Tables}
 
 /** Relational query surface (SURVEY.md §2.3: projection/filter, joins,
   * aggregation, window functions, sort/limit, set ops, scalar fns,
@@ -1911,128 +1911,67 @@ object RelQueries extends QueryCatalog {
        |FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2 UNION ALL SELECT * FROM e3)
        |ORDER BY fk_edge""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q225_stickiness" -> q225,
-    "q227_conversion_latency" -> q227,
-    "q228_fk_integrity" -> q228,
-    "q01_pricing_summary" -> q01,
-    "q02_filter_project" -> q02,
-    "q03_join_star_revenue" -> q03,
-    "q04_join_left_orders" -> q04,
-    "q05_join_semi_open" -> q05,
-    "q06_join_anti_noorders" -> q06,
-    "q07_join_full_nation" -> q07,
-    "q08_join_cross_dims" -> q08,
-    "q09_window_rank_topk" -> q09,
-    "q10_window_lag_lead" -> q10,
-    "q11_window_running_sum" -> q11,
-    "q12_sort_limit_topk" -> q12,
-    "q13_set_ops" -> q13,
-    "q14_distinct" -> q14,
-    "q15_scalar_string" -> q15,
-    "q16_scalar_date" -> q16,
-    "q17_scalar_math" -> q17,
-    "q18_scalar_array" -> q18,
-    "q19_json_events" -> q19,
-    "q20_agg_distinct" -> q20,
-    "q21_collect_set" -> q21,
-    "q22_group_derived_key" -> q22,
-    "q23_rollup" -> q23,
-    "q24_cube" -> q24,
-    "q25_approx_distinct" -> q25,
-    "q26_sort_nulls" -> q26,
-    "q27_stats_moments" -> q27,
-    "q28_percentiles" -> q28,
-    "q29_pivot" -> q29,
-    "q178_unpivot" -> q178,
-    "q181_key_profile" -> q181,
-    "q189_join_size_profile" -> q189,
-    "q38_join_right_orders" -> q38,
-    "q39_asof_join" -> q39,
-    "q127_asof_modal" -> q127,
-    "q48_map_functions" -> q48,
-    "q49_scalar_string_ext" -> q49,
-    "q57_grouping_sets" -> q57,
-    "q58_array_hof" -> q58,
-    "q59_scalar_subquery" -> q59,
-    "q65_range_join_pairs" -> q65,
-    "q107_salted_join" -> q107,
-    "q109_window_distribution" -> q109,
-    "q115_corr_stats" -> q115,
-    "q118_funnel" -> q118,
-    "q119_retention" -> q119,
-    "q121_anomaly_hours" -> q121,
-    "q138_transition_matrix" -> q138,
-    "q144_resample_ffill" -> q144,
-    "q147_not_in_null_aware" -> q147,
-    "q148_trailing_window" -> q148,
-    "q211_attribution" -> q211,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q225_stickiness" -> q225Sql,
-    "q227_conversion_latency" -> q227Sql,
-    "q228_fk_integrity" -> q228Sql,
-    "q01_pricing_summary" -> q01Sql,
-    "q02_filter_project" -> q02Sql,
-    "q03_join_star_revenue" -> q03Sql,
-    "q04_join_left_orders" -> q04Sql,
-    "q05_join_semi_open" -> q05Sql,
-    "q06_join_anti_noorders" -> q06Sql,
-    "q07_join_full_nation" -> q07Sql,
-    "q08_join_cross_dims" -> q08Sql,
-    "q09_window_rank_topk" -> q09Sql,
-    "q10_window_lag_lead" -> q10Sql,
-    "q11_window_running_sum" -> q11Sql,
-    "q12_sort_limit_topk" -> q12Sql,
-    "q13_set_ops" -> q13Sql,
-    "q14_distinct" -> q14Sql,
-    "q15_scalar_string" -> q15Sql,
-    "q16_scalar_date" -> q16Sql,
-    "q17_scalar_math" -> q17Sql,
-    "q18_scalar_array" -> q18Sql,
-    "q19_json_events" -> q19Sql,
-    "q20_agg_distinct" -> q20Sql,
-    "q21_collect_set" -> q21Sql,
-    "q22_group_derived_key" -> q22Sql,
-    "q23_rollup" -> q23Sql,
-    "q24_cube" -> q24Sql,
+  val declared: Seq[Query] = Seq(
+    Query("q225_stickiness", q225, Oracle.Sql(q225Sql)),
+    Query("q227_conversion_latency", q227, Oracle.Sql(q227Sql)),
+    Query("q228_fk_integrity", q228, Oracle.Sql(q228Sql)),
+    Query("q01_pricing_summary", q01, Oracle.Sql(q01Sql)),
+    Query("q02_filter_project", q02, Oracle.Sql(q02Sql)),
+    Query("q03_join_star_revenue", q03, Oracle.Sql(q03Sql)),
+    Query("q04_join_left_orders", q04, Oracle.Sql(q04Sql)),
+    Query("q05_join_semi_open", q05, Oracle.Sql(q05Sql)),
+    Query("q06_join_anti_noorders", q06, Oracle.Sql(q06Sql)),
+    Query("q07_join_full_nation", q07, Oracle.Sql(q07Sql)),
+    Query("q08_join_cross_dims", q08, Oracle.Sql(q08Sql)),
+    Query("q09_window_rank_topk", q09, Oracle.Sql(q09Sql)),
+    Query("q10_window_lag_lead", q10, Oracle.Sql(q10Sql)),
+    Query("q11_window_running_sum", q11, Oracle.Sql(q11Sql)),
+    Query("q12_sort_limit_topk", q12, Oracle.Sql(q12Sql)),
+    Query("q13_set_ops", q13, Oracle.Sql(q13Sql)),
+    Query("q14_distinct", q14, Oracle.Sql(q14Sql)),
+    Query("q15_scalar_string", q15, Oracle.Sql(q15Sql)),
+    Query("q16_scalar_date", q16, Oracle.Sql(q16Sql)),
+    Query("q17_scalar_math", q17, Oracle.Sql(q17Sql)),
+    Query("q18_scalar_array", q18, Oracle.Sql(q18Sql)),
+    Query("q19_json_events", q19, Oracle.Sql(q19Sql)),
+    Query("q20_agg_distinct", q20, Oracle.Sql(q20Sql)),
+    Query("q21_collect_set", q21, Oracle.Sql(q21Sql)),
+    Query("q22_group_derived_key", q22, Oracle.Sql(q22Sql)),
+    Query("q23_rollup", q23, Oracle.Sql(q23Sql)),
+    Query("q24_cube", q24, Oracle.Sql(q24Sql)),
+    Query("q25_approx_distinct", q25, Oracle.Unverifiable(
+      "UNVERIFIABLE BY DESIGN: approx_count_distinct is a HyperLogLog++ sketch whose " +
+      "estimates are implementation-specific — DuckDB's approx HLL produces different " +
+      "values on identical input, and an exact-count oracle would test a different " +
+      "operator. Gated instead by HllCalibrationSpec (estimate within the published " +
+      "rsd bound of the exact distinct count at every SF).")),
     // q25_approx_distinct: intentionally no oracle (approximate sketch)
-    "q26_sort_nulls" -> q26Sql,
-    "q27_stats_moments" -> q27Sql,
-    "q28_percentiles" -> q28Sql,
-    "q29_pivot" -> q29Sql,
-    "q178_unpivot" -> q178Sql,
-    "q181_key_profile" -> q181Sql,
-    "q189_join_size_profile" -> q189Sql,
-    "q38_join_right_orders" -> q38Sql,
-    "q39_asof_join" -> q39Sql,
-    "q127_asof_modal" -> q127Sql,
-    "q48_map_functions" -> q48Sql,
-    "q49_scalar_string_ext" -> q49Sql,
-    "q57_grouping_sets" -> q57Sql,
-    "q58_array_hof" -> q58Sql,
-    "q59_scalar_subquery" -> q59Sql,
-    "q65_range_join_pairs" -> q65Sql,
-    "q107_salted_join" -> q107Sql,
-    "q109_window_distribution" -> q109Sql,
-    "q115_corr_stats" -> q115Sql,
-    "q118_funnel" -> q118Sql,
-    "q119_retention" -> q119Sql,
-    "q121_anomaly_hours" -> q121Sql,
-    "q138_transition_matrix" -> q138Sql,
-    "q144_resample_ffill" -> q144Sql,
-    "q147_not_in_null_aware" -> q147Sql,
-    "q148_trailing_window" -> q148Sql,
-    "q211_attribution" -> q211Sql,
-  )
-
-  override val noOracleReasons: Map[String, String] = Map(
-    "q25_approx_distinct" ->
-      ("UNVERIFIABLE BY DESIGN: approx_count_distinct is a HyperLogLog++ sketch whose " +
-       "estimates are implementation-specific — DuckDB's approx HLL produces different " +
-       "values on identical input, and an exact-count oracle would test a different " +
-       "operator. Gated instead by HllCalibrationSpec (estimate within the published " +
-       "rsd bound of the exact distinct count at every SF)."),
+    Query("q26_sort_nulls", q26, Oracle.Sql(q26Sql)),
+    Query("q27_stats_moments", q27, Oracle.Sql(q27Sql)),
+    Query("q28_percentiles", q28, Oracle.Sql(q28Sql)),
+    Query("q29_pivot", q29, Oracle.Sql(q29Sql)),
+    Query("q178_unpivot", q178, Oracle.Sql(q178Sql)),
+    Query("q181_key_profile", q181, Oracle.Sql(q181Sql)),
+    Query("q189_join_size_profile", q189, Oracle.Sql(q189Sql)),
+    Query("q38_join_right_orders", q38, Oracle.Sql(q38Sql)),
+    Query("q39_asof_join", q39, Oracle.Sql(q39Sql)),
+    Query("q127_asof_modal", q127, Oracle.Sql(q127Sql)),
+    Query("q48_map_functions", q48, Oracle.Sql(q48Sql)),
+    Query("q49_scalar_string_ext", q49, Oracle.Sql(q49Sql)),
+    Query("q57_grouping_sets", q57, Oracle.Sql(q57Sql)),
+    Query("q58_array_hof", q58, Oracle.Sql(q58Sql)),
+    Query("q59_scalar_subquery", q59, Oracle.Sql(q59Sql)),
+    Query("q65_range_join_pairs", q65, Oracle.Sql(q65Sql)),
+    Query("q107_salted_join", q107, Oracle.Sql(q107Sql)),
+    Query("q109_window_distribution", q109, Oracle.Sql(q109Sql)),
+    Query("q115_corr_stats", q115, Oracle.Sql(q115Sql)),
+    Query("q118_funnel", q118, Oracle.Sql(q118Sql)),
+    Query("q119_retention", q119, Oracle.Sql(q119Sql)),
+    Query("q121_anomaly_hours", q121, Oracle.Sql(q121Sql)),
+    Query("q138_transition_matrix", q138, Oracle.Sql(q138Sql)),
+    Query("q144_resample_ffill", q144, Oracle.Sql(q144Sql)),
+    Query("q147_not_in_null_aware", q147, Oracle.Sql(q147Sql)),
+    Query("q148_trailing_window", q148, Oracle.Sql(q148Sql)),
+    Query("q211_attribution", q211, Oracle.Sql(q211Sql)),
   )
 }

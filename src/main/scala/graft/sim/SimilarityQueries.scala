@@ -3,7 +3,7 @@ package graft.sim
 import java.security.MessageDigest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{QueryCatalog, Store, Tables}
+import graft.core.{Lineage, Oracle, Query, QueryCatalog, Store, Tables}
 
 /** Approximate-nearest-neighbor surface over `embeddings.embedding`
   * (Array[Float], 64-dim).
@@ -120,7 +120,7 @@ object SimilarityQueries extends QueryCatalog {
     graft.functions.GraftFunctions.register(s)
     // ONE corpus scan feeds every training round (persisted, drained by
     // the runners); each round's 16-row centroid frame is eagerly
-    // localCheckpoint'ed so round r+1's plan starts from materialized
+    // cut with Lineage.truncate so round r+1's plan starts from materialized
     // rows instead of re-deriving (and re-scanning) the whole training
     // lineage — without this the unrolled rounds multiply corpus scans
     // per branch (observed: 13 scans in q54's plan; at 100 TB each is
@@ -130,9 +130,8 @@ object SimilarityQueries extends QueryCatalog {
       e.filter(col("norm") > 0)
         .select(col("vec_id"), col("v"),
           expr("transform(v, x -> CAST(floor(x / norm * 1000000D + 0.5D) AS BIGINT))").as("q")))
-    var cents = quant.filter(col("vec_id") < NCells)
-      .select(col("vec_id").as("cent_id"), expr("transform(q, x -> CAST(x AS DOUBLE))").as("cv"))
-      .localCheckpoint()
+    var cents = Lineage.truncate(quant.filter(col("vec_id") < NCells)
+      .select(col("vec_id").as("cent_id"), expr("transform(q, x -> CAST(x AS DOUBLE))").as("cv")))
     for (_ <- 1 to KMeansIters) {
       val live = cents.filter(expr("aggregate(cv, 0D, (a, x) -> a + x * x) > 0D"))
       val w = Window.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cent_id"))
@@ -140,12 +139,11 @@ object SimilarityQueries extends QueryCatalog {
         .withColumn("cs", expr("cosine_similarity(v, cv)"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
-      cents = assigned
+      cents = Lineage.truncate(assigned
         .select(col("cent_id"), posexplode(col("q")).as(Seq("pos", "x")))
         .groupBy(col("cent_id"), col("pos")).agg(sum(col("x")).as("sx"))
         .groupBy(col("cent_id"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, sx))), s -> CAST(s.sx AS DOUBLE))").as("cv"))
-        .localCheckpoint()
+        .agg(expr("transform(array_sort(collect_list(struct(pos, sx))), s -> CAST(s.sx AS DOUBLE))").as("cv")))
     }
     cents.filter(expr("aggregate(cv, 0D, (a, x) -> a + x * x) > 0D"))
   }
@@ -870,9 +868,8 @@ object SimilarityQueries extends QueryCatalog {
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(s)
     val sub = pqSubvecs(s, dir)
-    var cents = sub.filter(col("vec_id") < PqK)
-      .select(col("m"), col("vec_id").as("cent_id"), col("sv").as("cv"))
-      .localCheckpoint()
+    var cents = Lineage.truncate(sub.filter(col("vec_id") < PqK)
+      .select(col("m"), col("vec_id").as("cent_id"), col("sv").as("cv")))
     for (_ <- 1 to PqIters) {
       val w = Window.partitionBy(col("vec_id"), col("m")).orderBy(col("fit").desc, col("cent_id"))
       val assigned = sub.join(broadcast(cents), Seq("m"))
@@ -880,13 +877,12 @@ object SimilarityQueries extends QueryCatalog {
           expr(s"${dotExpr("sv", "cv")} - ${dotExpr("cv", "cv")} / 2D"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
-      cents = assigned
+      cents = Lineage.truncate(assigned
         .select(col("m"), col("cent_id"), posexplode(col("q")).as(Seq("pos", "x")))
         .groupBy(col("m"), col("cent_id"), col("pos"))
         .agg(sum(col("x")).as("sx"), count(lit(1)).as("cnt"))
         .groupBy(col("m"), col("cent_id"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, sx, cnt))), s -> CAST(s.sx AS DOUBLE) / s.cnt)").as("cv"))
-        .localCheckpoint()
+        .agg(expr("transform(array_sort(collect_list(struct(pos, sx, cnt))), s -> CAST(s.sx AS DOUBLE) / s.cnt)").as("cv")))
     }
     cents
   }
@@ -2059,8 +2055,7 @@ object SimilarityQueries extends QueryCatalog {
     * q239 execution measures the incremental REPLAY — the plan a
     * daily-ingest user actually runs. q241's nightly refresh assigns
     * its batch against the same centroids. */
-  val ivfStore = new Store[String]("ivfstore", "q239_ivfstore_build",
-      Seq("q239_ivf_incremental", "q241_nightly_refresh"))((s, dir, path) => {
+  val ivfStore = new Store[String]("ivfstore", "q239_ivfstore_build")((s, dir, path) => {
     writeIvfIndex(s, dir, path.toString)
     path.toString
   })
@@ -2269,53 +2264,27 @@ object SimilarityQueries extends QueryCatalog {
        |FROM scored, l1
        |ORDER BY cell""".stripMargin
 
-  override val stores: Seq[Store[_]] = Seq(ivfStore)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q239_ivf_incremental" -> q239,
-    "q236_crossmodal_topk" -> q236,
-    "q219_ivf_balance" -> q219,
-    "q223_probe_cost_curve" -> q223,
-    "q204_centroid_drift" -> q204,
-    "q50_sim_topk_bruteforce" -> q50,
-    "q51_sim_topk_lsh" -> q51,
-    "q52_sim_topk_lsh_multiprobe" -> q52,
-    "q53_sim_batch_topk" -> q53,
-    "q54_sim_ivf" -> q54,
-    "q114_sim_pq_adc" -> q114,
-    "q116_matryoshka_recall" -> q116,
-    "q186_embedding_hygiene" -> q186,
-    "q66_embed_quantize" -> q66,
-    "q74_sim_topk_lsh_multitable" -> q74,
-    "q78_sim_ivf_nprobe" -> q78,
-    "q87_random_projection" -> q87,
-    "q88_knn_label" -> q88,
-    "q90_semdedup" -> q90,
-    "q99_doc_clusters" -> q99,
-    "q175_embed_outliers" -> q175,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q239_ivf_incremental" -> q239Sql,
-    "q236_crossmodal_topk" -> q236Sql,
-    "q219_ivf_balance" -> q219Sql,
-    "q223_probe_cost_curve" -> q223Sql,
-    "q204_centroid_drift" -> q204Sql,
-    "q50_sim_topk_bruteforce" -> q50Sql,
-    "q51_sim_topk_lsh" -> q51Sql,
-    "q52_sim_topk_lsh_multiprobe" -> q52Sql,
-    "q53_sim_batch_topk" -> q53Sql,
-    "q54_sim_ivf" -> q54Sql,
-    "q114_sim_pq_adc" -> q114Sql,
-    "q116_matryoshka_recall" -> q116Sql,
-    "q186_embedding_hygiene" -> q186Sql,
-    "q66_embed_quantize" -> q66Sql,
-    "q74_sim_topk_lsh_multitable" -> q74Sql,
-    "q78_sim_ivf_nprobe" -> q78Sql,
-    "q87_random_projection" -> q87Sql,
-    "q88_knn_label" -> q88Sql,
-    "q90_semdedup" -> q90Sql,
-    "q99_doc_clusters" -> q99Sql,
-    "q175_embed_outliers" -> q175Sql,
+  val declared: Seq[Query] = Seq(
+    Query("q239_ivf_incremental", q239, Oracle.Sql(q239Sql), reads = Seq(ivfStore)),
+    Query("q236_crossmodal_topk", q236, Oracle.Sql(q236Sql)),
+    Query("q219_ivf_balance", q219, Oracle.Sql(q219Sql)),
+    Query("q223_probe_cost_curve", q223, Oracle.Sql(q223Sql)),
+    Query("q204_centroid_drift", q204, Oracle.Sql(q204Sql)),
+    Query("q50_sim_topk_bruteforce", q50, Oracle.Sql(q50Sql)),
+    Query("q51_sim_topk_lsh", q51, Oracle.Sql(q51Sql)),
+    Query("q52_sim_topk_lsh_multiprobe", q52, Oracle.Sql(q52Sql)),
+    Query("q53_sim_batch_topk", q53, Oracle.Sql(q53Sql)),
+    Query("q54_sim_ivf", q54, Oracle.Sql(q54Sql)),
+    Query("q114_sim_pq_adc", q114, Oracle.Sql(q114Sql)),
+    Query("q116_matryoshka_recall", q116, Oracle.Sql(q116Sql)),
+    Query("q186_embedding_hygiene", q186, Oracle.Sql(q186Sql)),
+    Query("q66_embed_quantize", q66, Oracle.Sql(q66Sql)),
+    Query("q74_sim_topk_lsh_multitable", q74, Oracle.Sql(q74Sql)),
+    Query("q78_sim_ivf_nprobe", q78, Oracle.Sql(q78Sql)),
+    Query("q87_random_projection", q87, Oracle.Sql(q87Sql)),
+    Query("q88_knn_label", q88, Oracle.Sql(q88Sql)),
+    Query("q90_semdedup", q90, Oracle.Sql(q90Sql)),
+    Query("q99_doc_clusters", q99, Oracle.Sql(q99Sql)),
+    Query("q175_embed_outliers", q175, Oracle.Sql(q175Sql)),
   )
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Det, QueryCatalog, Tables}
+import graft.core.{Det, Oracle, Query, QueryCatalog, Tables}
 
 /** Batch-mode oracle checks for the streaming transforms (SURVEY.md
   * §7.5: window() is the same function in batch and streaming, so the
@@ -595,39 +595,21 @@ object StreamQueries extends QueryCatalog {
       |FROM scored WHERE event_type = 'purchase'
       |ORDER BY purchase_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q235_attribution_ledger" -> q235,
-    "q218_session_abandonment" -> q218,
-    "q60_stream_tumbling" -> q60,
-    "q61_stream_sliding" -> q61,
-    "q62_sessionize" -> q62,
-    "q63_stream_interval_join" -> q63,
-    "q64_stream_dedup" -> q64,
-    "q77_stream_threshold_alerts" -> q77,
-    "q102_stream_static_enrich" -> q102,
-    "q103_stream_left_join" -> q103,
-    "q120_funnel_stages" -> q120,
-    "q128_stream_ingest_admission" -> q128,
-    "q139_stream_quota" -> q139,
-    "q184_watermark_sizing" -> q184,
-    "q205_late_data_ledger" -> q205,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q235_attribution_ledger" -> q235Sql,
-    "q218_session_abandonment" -> q218Sql,
-    "q60_stream_tumbling" -> q60Sql,
-    "q61_stream_sliding" -> q61Sql,
-    "q62_sessionize" -> q62Sql,
-    "q63_stream_interval_join" -> q63Sql,
-    "q64_stream_dedup" -> q64Sql,
-    "q77_stream_threshold_alerts" -> q77Sql,
-    "q102_stream_static_enrich" -> q102Sql,
-    "q103_stream_left_join" -> q103Sql,
-    "q120_funnel_stages" -> q120Sql,
-    "q128_stream_ingest_admission" -> q128Sql,
-    "q139_stream_quota" -> q139Sql,
-    "q184_watermark_sizing" -> q184Sql,
-    "q205_late_data_ledger" -> q205Sql,
+  val declared: Seq[Query] = Seq(
+    Query("q235_attribution_ledger", q235, Oracle.Sql(q235Sql)),
+    Query("q218_session_abandonment", q218, Oracle.Sql(q218Sql)),
+    Query("q60_stream_tumbling", q60, Oracle.Sql(q60Sql)),
+    Query("q61_stream_sliding", q61, Oracle.Sql(q61Sql)),
+    Query("q62_sessionize", q62, Oracle.Sql(q62Sql)),
+    Query("q63_stream_interval_join", q63, Oracle.Sql(q63Sql)),
+    Query("q64_stream_dedup", q64, Oracle.Sql(q64Sql)),
+    Query("q77_stream_threshold_alerts", q77, Oracle.Sql(q77Sql)),
+    Query("q102_stream_static_enrich", q102, Oracle.Sql(q102Sql)),
+    Query("q103_stream_left_join", q103, Oracle.Sql(q103Sql)),
+    Query("q120_funnel_stages", q120, Oracle.Sql(q120Sql)),
+    Query("q128_stream_ingest_admission", q128, Oracle.Sql(q128Sql)),
+    Query("q139_stream_quota", q139, Oracle.Sql(q139Sql)),
+    Query("q184_watermark_sizing", q184, Oracle.Sql(q184Sql)),
+    Query("q205_late_data_ledger", q205, Oracle.Sql(q205Sql)),
   )
 }

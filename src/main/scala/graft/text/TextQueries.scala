@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{QueryCatalog, ScratchCache, Tables}
+import graft.core.{Lineage, Oracle, Query, QueryCatalog, ScratchCache, Tables}
 import graft.apps.{InvertedIndex, WordCount}
 
 /** Text-analysis surface over `documents` (SURVEY.md §2.3 "text
@@ -1439,7 +1439,7 @@ object TextQueries extends QueryCatalog {
     * ~|vocab|-row frame (pair explode + one map-side-combined
     * aggregate + a 1-row TakeOrdered) followed by a broadcast 1-row
     * cross join to re-encode. Each round's vocab frame and chosen
-    * merge are eagerly localCheckpoint'ed (the trainedCents /
+    * merge are cut with Lineage.truncate (the trainedCents /
     * ConnectedComponents loop discipline), so round r+1's plan starts
     * from materialized rows instead of r nested replaces — constant
     * driver plans, O(rounds) linear vocab passes, nothing ever
@@ -1452,17 +1452,16 @@ object TextQueries extends QueryCatalog {
   private[text] def bpeTrainStates(s: SparkSession, dir: String,
                                    rounds: Int): (Seq[DataFrame], DataFrame) = {
     import s.implicits._
-    // the eager localCheckpoint alone materializes the vocab frame —
+    // the eager truncation alone materializes the vocab frame —
     // a persist() on top would just hold a second cached copy
-    var v = Tables.documents(s, dir)
+    var v = Lineage.truncate(Tables.documents(s, dir)
       .select(explode(expr(toksExpr)).as("token"))
       .groupBy($"token").agg(count(lit(1)).as("cnt"))
       .filter(expr("instr(token, chr(31)) = 0"))
       .select($"cnt", // q150's boundary encoding; split('') emits a trailing "" under limit=-1
-        expr("concat(chr(31), concat_ws(chr(31), filter(split(token, ''), x -> x != '')), chr(31))").as("enc"))
-      .localCheckpoint()
+        expr("concat(chr(31), concat_ws(chr(31), filter(split(token, ''), x -> x != '')), chr(31))").as("enc")))
     val bests = (1 to rounds).map { i =>
-      val best = v
+      val best = Lineage.truncate(v
         .select($"cnt", expr("filter(split(enc, chr(31)), x -> x != '')").as("segs"))
         .filter(size($"segs") >= 2) // sequence(1, 0) would DESCEND — the q36 gotcha
         .select($"cnt", explode(expr(
@@ -1471,13 +1470,11 @@ object TextQueries extends QueryCatalog {
         .groupBy($"pair").agg(sum($"cnt").as("n_occurrences"))
         .orderBy($"n_occurrences".desc, $"pair")
         .limit(1)
-        .select(lit(i.toLong).as("round"), $"pair", $"n_occurrences")
-        .localCheckpoint()
-      v = v.crossJoin(broadcast(best))
+        .select(lit(i.toLong).as("round"), $"pair", $"n_occurrences"))
+      v = Lineage.truncate(v.crossJoin(broadcast(best))
         .select($"cnt", expr(
           """replace(enc, concat(chr(31), replace(pair, ' ', chr(31)), chr(31)),
-            |              concat(chr(31), replace(pair, ' ', ''), chr(31)))""".stripMargin).as("enc"))
-        .localCheckpoint()
+            |              concat(chr(31), replace(pair, ' ', ''), chr(31)))""".stripMargin).as("enc")))
       best
     }
     (bests, v)
@@ -1525,13 +1522,12 @@ object TextQueries extends QueryCatalog {
   private[text] def bpeTrainBatchedStates(s: SparkSession, dir: String,
       totalMerges: Int, batchM: Int): (Seq[(Long, Long, String, Long)], DataFrame) = {
     import s.implicits._
-    var v = Tables.documents(s, dir)
+    var v = Lineage.truncate(Tables.documents(s, dir)
       .select(explode(expr(toksExpr)).as("token"))
       .groupBy($"token").agg(count(lit(1)).as("cnt"))
       .filter(expr("instr(token, chr(31)) = 0"))
       .select($"cnt",
-        expr("concat(chr(31), concat_ws(chr(31), filter(split(token, ''), x -> x != '')), chr(31))").as("enc"))
-      .localCheckpoint()
+        expr("concat(chr(31), concat_ws(chr(31), filter(split(token, ''), x -> x != '')), chr(31))").as("enc")))
     val traj = collection.mutable.ArrayBuffer.empty[(Long, Long, String, Long)]
     var round = 0L
     while (traj.size < totalMerges) {
@@ -1568,7 +1564,7 @@ object TextQueries extends QueryCatalog {
           concat(lit(SepChar), lit(a), lit(SepChar), lit(b), lit(SepChar)),
           concat(lit(SepChar), lit(a + b), lit(SepChar)))
       }
-      v = v.select($"cnt", encCol.as("enc")).localCheckpoint()
+      v = Lineage.truncate(v.select($"cnt", encCol.as("enc")))
       accepted.foreach { case (pair, n) =>
         traj += ((traj.size + 1L, round, pair, n)) }
     }
@@ -4061,131 +4057,67 @@ object TextQueries extends QueryCatalog {
        |FROM rows_ GROUP BY scheme ORDER BY scheme""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q220_stopword_divergence" -> q220,
-    "q230_score_length_confounder" -> q230,
-    "q232_padding_waste" -> q232,
-    "q233_chunk_stability" -> q233,
-    "q30_wordcount" -> q30,
-    "q31_inverted_index" -> q31,
-    "q32_ngrams" -> q32,
-    "q33_token_stats" -> q33,
-    "q34_langid" -> q34,
-    "q35_quality_score" -> q35,
-    "q36_fingerprint" -> q36,
-    "q37_mr_facade_wordcount" -> q37,
-    "q56_bpe_tokens" -> q56,
-    "q67_doc_chunking" -> q67,
-    "q68_tfidf_topterms" -> q68,
-    "q69_hash_sample" -> q69,
-    "q76_stratified_sample" -> q76,
-    "q79_pii_redact" -> q79,
-    "q80_sequence_packing" -> q80,
-    "q83_mixture_sample" -> q83,
-    "q193_epoch_plan" -> q193,
-    "q198_related_packing" -> q198,
-    "q84_epoch_shuffle" -> q84,
-    "q85_length_batching" -> q85,
-    "q89_source_mixture" -> q89,
-    "q91_cdc_chunks" -> q91,
-    "q92_bm25_search" -> q92,
-    "q145_bm25_champions" -> q145,
-    "q150_bpe_encode" -> q150,
-    "q240_bpe_train" -> q240,
-    "q93_rare_bigram_rate" -> q93,
-    "q95_bpe_merges" -> q95,
-    "q96_quality_classifier" -> q96,
-    "q97_token_surprisal" -> q97,
-    "q101_token_budget" -> q101,
-    "q104_gopher_rules" -> q104,
-    "q146_gate_agreement" -> q146,
-    "q105_quality_quantile" -> q105,
-    "q110_temperature_mixture" -> q110,
-    "q111_line_dedup" -> q111,
-    "q112_dsir_weights" -> q112,
-    "q117_source_overlap" -> q117,
-    "q122_langid_confusion" -> q122,
-    "q123_weighted_sample" -> q123,
-    "q125_split_assign" -> q125,
-    "q131_heavy_hitters_cms" -> (HeavyHitters.q131 _),
-    "q140_collocations" -> q140,
-    "q170_threshold_yield" -> q170,
-    "q173_vocab_coverage" -> q173,
-    "q182_source_datasheet" -> q182,
-    "q183_audit_allocation" -> q183,
-    "q188_uncertainty_sample" -> q188,
-    "q191_gate_roc" -> q191,
-    "q176_score_calibration" -> q176,
-    "q177_mixture_schedule" -> q177,
-    "q201_template_mining" -> q201,
-    "q203_curriculum_phases" -> q203,
-    "q206_pii_risk" -> q206,
-    "q207_encoding_health" -> q207,
-    "q209_oov_rate" -> q209,
-    "q210_tokenizer_fertility" -> q210,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q220_stopword_divergence" -> q220Sql,
-    "q230_score_length_confounder" -> q230Sql,
-    "q232_padding_waste" -> q232Sql,
-    "q233_chunk_stability" -> q233Sql,
-    "q30_wordcount" -> q30Sql,
-    "q31_inverted_index" -> q31Sql,
-    "q32_ngrams" -> q32Sql,
-    "q33_token_stats" -> q33Sql,
-    "q34_langid" -> q34Sql,
-    "q35_quality_score" -> q35Sql,
-    "q36_fingerprint" -> q36Sql,
-    "q37_mr_facade_wordcount" -> q37Sql,
-    "q56_bpe_tokens" -> q56Sql,
-    "q67_doc_chunking" -> q67Sql,
-    "q68_tfidf_topterms" -> q68Sql,
-    "q69_hash_sample" -> q69Sql,
-    "q76_stratified_sample" -> q76Sql,
-    "q79_pii_redact" -> q79Sql,
-    "q80_sequence_packing" -> q80Sql,
-    "q83_mixture_sample" -> q83Sql,
-    "q193_epoch_plan" -> q193Sql,
-    "q198_related_packing" -> q198Sql,
-    "q84_epoch_shuffle" -> q84Sql,
-    "q85_length_batching" -> q85Sql,
-    "q89_source_mixture" -> q89Sql,
-    "q91_cdc_chunks" -> q91Sql,
-    "q92_bm25_search" -> q92Sql,
-    "q145_bm25_champions" -> q145Sql,
-    "q150_bpe_encode" -> q150Sql,
-    "q240_bpe_train" -> q240Sql,
-    "q93_rare_bigram_rate" -> q93Sql,
-    "q95_bpe_merges" -> q95Sql,
-    "q96_quality_classifier" -> q96Sql,
-    "q97_token_surprisal" -> q97Sql,
-    "q101_token_budget" -> q101Sql,
-    "q104_gopher_rules" -> q104Sql,
-    "q146_gate_agreement" -> q146Sql,
-    "q105_quality_quantile" -> q105Sql,
-    "q110_temperature_mixture" -> q110Sql,
-    "q111_line_dedup" -> q111Sql,
-    "q112_dsir_weights" -> q112Sql,
-    "q117_source_overlap" -> q117Sql,
-    "q122_langid_confusion" -> q122Sql,
-    "q123_weighted_sample" -> q123Sql,
-    "q125_split_assign" -> q125Sql,
-    "q131_heavy_hitters_cms" -> HeavyHitters.q131Sql,
-    "q140_collocations" -> q140Sql,
-    "q170_threshold_yield" -> q170Sql,
-    "q173_vocab_coverage" -> q173Sql,
-    "q182_source_datasheet" -> q182Sql,
-    "q183_audit_allocation" -> q183Sql,
-    "q188_uncertainty_sample" -> q188Sql,
-    "q191_gate_roc" -> q191Sql,
-    "q176_score_calibration" -> q176Sql,
-    "q177_mixture_schedule" -> q177Sql,
-    "q201_template_mining" -> q201Sql,
-    "q203_curriculum_phases" -> q203Sql,
-    "q206_pii_risk" -> q206Sql,
-    "q207_encoding_health" -> q207Sql,
-    "q209_oov_rate" -> q209Sql,
-    "q210_tokenizer_fertility" -> q210Sql,
+  val declared: Seq[Query] = Seq(
+    Query("q220_stopword_divergence", q220, Oracle.Sql(q220Sql)),
+    Query("q230_score_length_confounder", q230, Oracle.Sql(q230Sql)),
+    Query("q232_padding_waste", q232, Oracle.Sql(q232Sql)),
+    Query("q233_chunk_stability", q233, Oracle.Sql(q233Sql)),
+    Query("q30_wordcount", q30, Oracle.Sql(q30Sql)),
+    Query("q31_inverted_index", q31, Oracle.Sql(q31Sql)),
+    Query("q32_ngrams", q32, Oracle.Sql(q32Sql)),
+    Query("q33_token_stats", q33, Oracle.Sql(q33Sql)),
+    Query("q34_langid", q34, Oracle.Sql(q34Sql)),
+    Query("q35_quality_score", q35, Oracle.Sql(q35Sql)),
+    Query("q36_fingerprint", q36, Oracle.Sql(q36Sql)),
+    Query("q37_mr_facade_wordcount", q37, Oracle.Sql(q37Sql)),
+    Query("q56_bpe_tokens", q56, Oracle.Sql(q56Sql)),
+    Query("q67_doc_chunking", q67, Oracle.Sql(q67Sql)),
+    Query("q68_tfidf_topterms", q68, Oracle.Sql(q68Sql)),
+    Query("q69_hash_sample", q69, Oracle.Sql(q69Sql)),
+    Query("q76_stratified_sample", q76, Oracle.Sql(q76Sql)),
+    Query("q79_pii_redact", q79, Oracle.Sql(q79Sql)),
+    Query("q80_sequence_packing", q80, Oracle.Sql(q80Sql)),
+    Query("q83_mixture_sample", q83, Oracle.Sql(q83Sql)),
+    Query("q193_epoch_plan", q193, Oracle.Sql(q193Sql)),
+    Query("q198_related_packing", q198, Oracle.Sql(q198Sql)),
+    Query("q84_epoch_shuffle", q84, Oracle.Sql(q84Sql)),
+    Query("q85_length_batching", q85, Oracle.Sql(q85Sql)),
+    Query("q89_source_mixture", q89, Oracle.Sql(q89Sql)),
+    Query("q91_cdc_chunks", q91, Oracle.Sql(q91Sql)),
+    Query("q92_bm25_search", q92, Oracle.Sql(q92Sql)),
+    Query("q145_bm25_champions", q145, Oracle.Sql(q145Sql)),
+    Query("q150_bpe_encode", q150, Oracle.Sql(q150Sql)),
+    Query("q240_bpe_train", q240, Oracle.Sql(q240Sql)),
+    Query("q93_rare_bigram_rate", q93, Oracle.Sql(q93Sql)),
+    Query("q95_bpe_merges", q95, Oracle.Sql(q95Sql)),
+    Query("q96_quality_classifier", q96, Oracle.Sql(q96Sql)),
+    Query("q97_token_surprisal", q97, Oracle.Sql(q97Sql)),
+    Query("q101_token_budget", q101, Oracle.Sql(q101Sql)),
+    Query("q104_gopher_rules", q104, Oracle.Sql(q104Sql)),
+    Query("q146_gate_agreement", q146, Oracle.Sql(q146Sql)),
+    Query("q105_quality_quantile", q105, Oracle.Sql(q105Sql)),
+    Query("q110_temperature_mixture", q110, Oracle.Sql(q110Sql)),
+    Query("q111_line_dedup", q111, Oracle.Sql(q111Sql)),
+    Query("q112_dsir_weights", q112, Oracle.Sql(q112Sql)),
+    Query("q117_source_overlap", q117, Oracle.Sql(q117Sql)),
+    Query("q122_langid_confusion", q122, Oracle.Sql(q122Sql)),
+    Query("q123_weighted_sample", q123, Oracle.Sql(q123Sql)),
+    Query("q125_split_assign", q125, Oracle.Sql(q125Sql)),
+    Query("q131_heavy_hitters_cms", HeavyHitters.q131, Oracle.Sql(HeavyHitters.q131Sql)),
+    Query("q140_collocations", q140, Oracle.Sql(q140Sql)),
+    Query("q170_threshold_yield", q170, Oracle.Sql(q170Sql)),
+    Query("q173_vocab_coverage", q173, Oracle.Sql(q173Sql)),
+    Query("q182_source_datasheet", q182, Oracle.Sql(q182Sql)),
+    Query("q183_audit_allocation", q183, Oracle.Sql(q183Sql)),
+    Query("q188_uncertainty_sample", q188, Oracle.Sql(q188Sql)),
+    Query("q191_gate_roc", q191, Oracle.Sql(q191Sql)),
+    Query("q176_score_calibration", q176, Oracle.Sql(q176Sql)),
+    Query("q177_mixture_schedule", q177, Oracle.Sql(q177Sql)),
+    Query("q201_template_mining", q201, Oracle.Sql(q201Sql)),
+    Query("q203_curriculum_phases", q203, Oracle.Sql(q203Sql)),
+    Query("q206_pii_risk", q206, Oracle.Sql(q206Sql)),
+    Query("q207_encoding_health", q207, Oracle.Sql(q207Sql)),
+    Query("q209_oov_rate", q209, Oracle.Sql(q209Sql)),
+    Query("q210_tokenizer_fertility", q210, Oracle.Sql(q210Sql)),
   )
 }

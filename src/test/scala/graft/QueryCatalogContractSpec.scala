@@ -4,13 +4,12 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 /** Driver-contract regression net over the whole catalog (analysis
   * only — apart from the Canary and entry() checks, no query executes):
-  *  - catalog names are globally unique (SparkEntry merges maps with
-  *    ++, which would silently shadow a duplicate);
+  *  - declared catalog names are unique, within a module and across
+  *    modules (the derived maps would silently drop a duplicate);
   *  - every oracleSql key has a query;
-  *  - the store list names only catalog queries, and its detail keys
-  *    and dependents (BENCH_DETAIL's build keys, Bench's deferred
-  *    preflight) are pinned; no query outside a store's dependents
-  *    builds that store;
+  *  - the stores' detail keys and their declared readers (BENCH_DETAIL's
+  *    build keys, Bench's deferred preflight) are pinned; no query that
+  *    does not declare a store builds it;
   *  - Canary and Explain turn a query that throws into one failed
   *    entry, and the next query still runs;
   *  - no catalog output column is array-/map-/struct-typed — the
@@ -21,10 +20,11 @@ class QueryCatalogContractSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
-  test("catalog names are unique across modules") {
-    val all = SparkEntry.catalogs.flatMap(_.queries.keys)
+  test("catalog names are unique within and across modules") {
+    val all = SparkEntry.declared.map(_.name)
     val dups = all.groupBy(identity).collect { case (n, g) if g.size > 1 => n }
     assert(dups.isEmpty, s"duplicate catalog names: $dups")
+    assert(SparkEntry.queries.size == all.size)
   }
 
   test("every oracleSql key has a catalog query") {
@@ -41,18 +41,17 @@ class QueryCatalogContractSpec extends SparkTestBase {
       s"undocumented no-oracle queries: ${noOracle -- reasons}; stale reasons: ${reasons -- noOracle}")
   }
 
-  test("store list: dependents are catalog queries; detail keys and deferred set are pinned") {
-    val stores = SparkEntry.catalogs.flatMap(_.stores)
-    val unknown = stores.flatMap(_.dependents).toSet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"store dependents that are not catalog queries: $unknown")
+  test("stores: detail keys and the deferred set are pinned") {
+    val stores = SparkEntry.stores
     // BENCH_DETAIL.json's schema: one *_build key per store
+    assert(stores.map(_.detailKey).distinct.size == stores.size)
     assert(stores.map(_.detailKey).toSet == Set(
       "q94_sigstore_build", "q239_ivfstore_build", "q75_labelstore_build",
       "q134_bucketstore_build", "q151_partstore_build", "q153_aggstore_build",
       "q156_rawstore_build", "q162_prevstore_build", "q166_orcstore_build",
       "q167_robotsstore_build", "q142_evostore_build"))
     // every query Bench preflights only after the store builds
-    assert(stores.flatMap(_.dependents).toSet == Set(
+    assert(SparkEntry.declared.filter(_.reads.nonEmpty).map(_.name).toSet == Set(
       "q94_incremental_dedup", "q239_ivf_incremental", "q241_nightly_refresh",
       "q75_dedup_clusters", "q100_canonical_docs", "q222_cluster_size_histogram",
       "q134_bucketed_join", "q142_schema_evolution",
@@ -89,23 +88,22 @@ class QueryCatalogContractSpec extends SparkTestBase {
 
   test("no catalog output column is array/map/struct typed (driver hashability)") {
     assume(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/lineitem.parquet")))
-    // Every non-dependent query is constructed first, on a session no
-    // store has been built for; a store built by then has a reader its
-    // dependents do not name (Bench would preflight that reader before
+    // Every query that declares no store read is constructed first, on
+    // a session no store has been built for; a store built by then has
+    // an undeclared reader (Bench would preflight that reader before
     // the timed build). The session is replaced after each such
     // builder so every undeclared reader is named, not just the first.
-    val stores = SparkEntry.catalogs.flatMap(_.stores)
-    val (deps, others) = SparkEntry.queries.toSeq.sortBy(_._1)
-      .partition { case (name, _) => stores.exists(_.dependents.contains(name)) }
+    val stores = SparkEntry.stores
+    val (readers, others) = SparkEntry.declared.sortBy(_.name).partition(_.reads.nonEmpty)
     var session = spark.newSession()
     val undeclared = collection.mutable.Buffer.empty[String]
     // bounded per query (r12: one never-returning builder hung this
     // very test along with Bench/Verify) — a hang or error here is a
     // NAMED offender, not a dead suite
-    def offendersOf(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Seq[String] =
+    def offendersOf(q: graft.core.Query): Seq[String] = {
+      val name = q.name
       graft.core.Preflight.bounded(session, s"contract-$name",
-          graft.core.Preflight.AnalysisBudgetMs) { fn(session, dir).schema } match {
+          graft.core.Preflight.AnalysisBudgetMs) { q.build(session, dir).schema } match {
         case Left(msg) => Seq(s"$name: builder failed preflight: $msg")
         case Right(schema: StructType) => schema.fields.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
@@ -113,17 +111,18 @@ class QueryCatalogContractSpec extends SparkTestBase {
             f.dataType.isInstanceOf[StructType] => s"$name.${f.name}: ${f.dataType.simpleString}"
         }.toSeq
       }
-    val offenders = others.flatMap { case (name, fn) =>
-      val found = offendersOf(name, fn)
+    }
+    val offenders = others.flatMap { q =>
+      val found = offendersOf(q)
       val built = stores.filter(_.built(session, dir))
       if (built.nonEmpty) {
-        undeclared += s"$name builds ${built.map(_.name).mkString(", ")}"
+        undeclared += s"${q.name} builds ${built.map(_.name).mkString(", ")}"
         session = spark.newSession()
       }
       found
-    } ++ deps.flatMap { case (name, fn) => offendersOf(name, fn) }
+    } ++ readers.flatMap(offendersOf)
     assert(undeclared.isEmpty,
-      s"store readers missing from the store's dependents: $undeclared")
+      s"store readers that do not declare the store: $undeclared")
     assert(offenders.isEmpty,
       s"serialize these with array_join/to_json for the driver harness: $offenders")
   }

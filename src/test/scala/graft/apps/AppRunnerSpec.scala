@@ -3,7 +3,6 @@ package graft.apps
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import graft.SparkTestBase
-import graft.core.Sessions
 import graft.sinks.TextKVSink
 
 /** The executable entry points (config file → facade → O8 output dir),
@@ -15,23 +14,23 @@ class AppRunnerSpec extends SparkTestBase {
   }
 
   test("WordCountMain pipeline: config -> input -> O8 output files") {
-    spark // ensure the shared session exists so the runner reuses it
     val dir = Files.createTempDirectory("apprun")
     val input = write(dir.resolve("input.txt"), "b a\na c\n")
     val cfg = write(dir.resolve("config.txt"),
       s"N_WORKER 2\nINPUTFILE $input\nDATADIR $dir\n")
-    // a non-UTC zone, so restoring the factory's UTC zone is observable
+    // a non-UTC zone, so a runner that reset the session's zone would show
     val tz = "spark.sql.session.timeZone"
     val tzBefore = spark.conf.get(tz)
     spark.conf.set(tz, "America/New_York")
-    def confs = Sessions.Confs.map(k => k -> spark.conf.getOption(k))
+    def confs = Seq("spark.sql.shuffle.partitions", tz, "spark.ui.enabled")
+      .map(k => k -> spark.conf.getOption(k))
     val confsBefore = confs
-    val rc = AppRunner.run(cfg, WordCountMain.app)
+    val rc = AppRunner.run(spark, cfg, WordCountMain.app)
     val confsAfter = confs
     spark.conf.set(tz, tzBefore)
     assert(rc == 0)
-    // reuse path must not leave any conf the factory sets mutated —
-    // not the parallelism (N_WORKER), not the time zone, not the UI
+    // the runner must not change the session it is given — not the
+    // parallelism (N_WORKER), not the time zone, not the UI
     assert(confsAfter == confsBefore)
     val outFiles = new java.io.File(s"$dir/output").listFiles()
       .filter(_.getName.startsWith("part-"))
@@ -43,14 +42,13 @@ class AppRunnerSpec extends SparkTestBase {
   }
 
   test("InvertedIndexMain pipeline: config -> input -> O8 output files") {
-    spark
     val dir = Files.createTempDirectory("apprun-ii")
     // 12 lines, so positions "10" and "11" sort before "2" as strings
     val lines = (0 until 12).map(i => Seq("b a", "a c", "c\td  d", "", "é b")(i % 5))
     val input = write(dir.resolve("input.txt"), lines.mkString("", "\n", "\n"))
     val cfg = write(dir.resolve("config.txt"),
       s"N_WORKER 2\nINPUTFILE $input\nDATADIR $dir\n")
-    assert(AppRunner.run(cfg, InvertedIndexMain.app) == 0)
+    assert(AppRunner.run(spark, cfg, InvertedIndexMain.app) == 0)
     val outFiles = new java.io.File(s"$dir/output").listFiles()
       .filter(_.getName.startsWith("part-")).toSeq
     assert(outFiles.nonEmpty && outFiles.length <= 2, s"${outFiles.length} files")
@@ -72,7 +70,7 @@ class AppRunnerSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("apprun2")
     val cfg = write(dir.resolve("config.txt"),
       s"N_WORKER 2\nINPUTFILE $dir/nope.txt\nDATADIR $dir\n")
-    val rc = AppRunner.run(cfg, (s, in, _) =>
+    val rc = AppRunner.run(spark, cfg, (s, in, _) =>
       WordCount.viaFacade(s.read.textFile(in)).toDF("key", "values"))
     assert(rc == -1)
   }

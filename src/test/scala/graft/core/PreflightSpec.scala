@@ -45,7 +45,7 @@ class PreflightSpec extends SparkTestBase {
     val ended = new java.util.concurrent.LinkedBlockingQueue[JobResult]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.add(e.jobId)
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id").startsWith(s"$group#"))) jobs.add(e.jobId)
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (jobs.contains(e.jobId)) ended.put(e.jobResult)
     }
@@ -72,6 +72,27 @@ class PreflightSpec extends SparkTestBase {
         "the body's scratch frame must be unpersisted")
       assert(Preflight.bounded(spark, "after-cancel", 30000L) { spark.range(10).count() } == Right(10L))
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("a job the body starts after its budget is cancelled; the next call under the same name runs") {
+    val group = "preflight-spec-late"
+    val late = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, Long]]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val sc = spark.sparkContext
+    val r = Preflight.bounded(spark, group, 500L) {
+      // outlive the budget, ignoring the guard's interrupt, then submit
+      // a job whose tasks would run for 5 s each if it were let through
+      val deadline = System.nanoTime() + 1500L * 1000000L
+      while (System.nanoTime() < deadline)
+        try Thread.sleep(50L) catch { case _: InterruptedException => () }
+      try late.set(Right(sc.parallelize(1 to 4, 4).map { x => Thread.sleep(5000L); x.toLong }.reduce(_ + _)))
+      catch { case e: Throwable => late.set(Left(e)) }
+      finally done.countDown()
+    }
+    assert(r.isLeft && r.swap.exists(m => m.contains(group) && m.contains("timed out")), s"expected a timeout, got $r")
+    assert(done.await(30L, java.util.concurrent.TimeUnit.SECONDS), "the late job never returned")
+    assert(late.get.isLeft, s"the job submitted after the timeout ran to the end: ${late.get}")
+    assert(Preflight.bounded(spark, group, 30000L) { spark.range(10).count() } == Right(10L))
   }
 
   test("a fatal thrown AFTER the caller timed out aborts the NEXT bounded call") {

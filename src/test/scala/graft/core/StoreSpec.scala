@@ -12,7 +12,7 @@ class StoreSpec extends graft.SparkTestBase {
 
   private def counting(name: String)(body: (SparkSession, String, Path) => Unit = (_, _, _) => ()) = {
     val builds = new AtomicInteger()
-    val store = new Store[Int](name, s"${name}_build", Seq.empty)((s, dir, path) => {
+    val store = new Store[Int](name, s"${name}_build")((s, dir, path) => {
       body(s, dir, path)
       builds.incrementAndGet()
     })
