@@ -1,23 +1,26 @@
 package graft
 
-import graft.core.{Preflight, Sessions}
+import graft.core.{Json, Preflight, Sessions}
+import scala.collection.immutable.ListMap
 
 /** Benchmark main: runs every catalog query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line for the driver.
   *
   * Output contract — the driver keeps only the last ~2 kB of output and
   * json.loads's the result line, so stdout gets a COMPACT line (unique
-  * "qNN" short keys, millisecond precision, no secondary maps) while
+  * "qNN" short keys, 10 ms precision, at most 8 re-times and
+  * adjudications, no secondary maps) while
   * the full-fidelity record (full query names, per-sweep medians and
   * maxima, isolated re-times) is written to BENCH_DETAIL.json (path
   * overridable via SPARK_GRAFT_BENCH_DETAIL). Requires build.sbt's
   * `run / outputStrategy := StdoutOutput` so sbt does not decorate the
   * line with an "[info] " prefix that breaks JSON parsing.
   *
-  * Queries are fully materialized through the noop sink (count() would
-  * let Catalyst prune projections and under-measure scan-heavy
-  * queries). A warmup query runs first, untimed, so JVM/codegen/parquet
-  * footer costs don't land on the alphabetically-first query.
+  * Every timed run (warm-up, sweeps, re-times, adjudication) is one
+  * [[Preflight.timed]] run: the query is built and written to the noop
+  * sink, timed inside the guard. A warmup query runs first, untimed, so
+  * JVM/codegen/parquet footer costs don't land on the
+  * alphabetically-first query.
   *
   * Methodology — two defenses against the host-contention mode that
   * produced 10–14× phantom spikes in full-catalog runs (measured:
@@ -70,13 +73,15 @@ import graft.core.{Preflight, Sessions}
   *  3. PRIOR-ROUND ADJUDICATION: r7→r8 measured the per-query noise at
   *     ±40% on byte-identical code, so cross-round deltas need in-run
   *     adjudication. The highest-numbered BENCH_r*.json in the cwd
-  *     (override: SPARK_GRAFT_PRIOR_BENCH; skipped on SF mismatch)
-  *     supplies prior per-query values; any query whose post-retime
-  *     value moved >1.25× vs its prior IN EITHER DIRECTION gets ONE
-  *     more isolated re-time, and prior/before/after/direction are
-  *     emitted ("queries_adjudicated" in BENCH_DETAIL, count + top
-  *     corrections on the stdout line). The adjudication sample is an
-  *     ANNOTATION ONLY — it is never folded into the reported value:
+  *     (override: SPARK_GRAFT_PRIOR_BENCH) supplies prior per-query
+  *     values ([[readPrior]]) when it ran at the same sf and, if it
+  *     records `cpus`, on the same core count; any query whose
+  *     post-retime value moved >1.25× vs its prior IN EITHER
+  *     DIRECTION gets ONE more isolated re-time, and
+  *     prior/before/after/direction are emitted ("queries_adjudicated"
+  *     in BENCH_DETAIL, count + top corrections on the stdout line).
+  *     The adjudication sample is an ANNOTATION ONLY — it is never
+  *     folded into the reported value:
   *     stacking min(value, adjudication) on min(median, retime) would
   *     be a second one-sided minimum that harvests noise minima
   *     downward, the exact failure mode the re-time attempts exist to
@@ -87,7 +92,8 @@ import graft.core.{Preflight, Sessions}
   * (the analysis budget for the preflight, the run budget for the
   * rest), and the scratch caches are drained after it, so nothing
   * leaks across the catalog and every run rebuilds its own cache. A
-  * query that throws or hangs is one failed entry.
+  * query that throws or hangs is one failed entry. [[report]] turns
+  * the per-query [[Timing]]s into both outputs.
   *
   * Usage: sbt "runMain graft.Bench [query ...]" (SPARK_GRAFT_SF_DIR,
   * SPARK_GRAFT_BENCH_RUNS), on [[graft.core.Sessions.local]]:
@@ -98,21 +104,109 @@ object Bench {
     * alone (scaladoc point 2b). */
   val RetimeFloorSec: Double = 3.0
 
+  /** The prior's seconds and the isolated re-run's (-1: it failed). */
+  final case class Adjudication(prior: Double, after: Double)
+
+  /** One query's sweep samples (empty when a sweep or its preflight
+    * failed), successful isolated re-times and adjudication. */
+  final case class Timing(name: String, sweeps: Seq[Double], retimes: Seq[Double] = Nil,
+                          adjudication: Option[Adjudication] = None) {
+    def ok: Boolean = sweeps.nonEmpty
+    private lazy val sorted = sweeps.sorted
+    /** The lower median of the sweeps, -1 for a failed query. */
+    def median: Double = if (ok) sorted((sorted.size - 1) / 2) else -1
+    def best: Double = if (ok) sorted.head else -1
+    def max: Double = if (ok) sorted.last else -1
+    /** min(median, best re-time); -1 for a failed query, which the
+      * total leaves out. */
+    def value: Double = if (ok) (median +: retimes).min else -1
+  }
+
+  private def short(n: String): String = n.takeWhile(_ != '_')
+
+  /** `v` with exactly `places` decimals; -1 (a failure) stays -1. */
+  private def fixed(v: Double, places: Int): java.math.BigDecimal =
+    if (v < 0) java.math.BigDecimal.valueOf(-1)
+    else new java.math.BigDecimal(s"%.${places}f".formatLocal(java.util.Locale.ROOT, v))
+
+  /** Bench's two outputs (see the output contract above): the stdout
+    * line, also written to BENCH_LINE.json, and the BENCH_DETAIL.json
+    * record. `builds` pairs each store's detail key with its build
+    * seconds. A preflight-failed query reads -1 in every per-query map
+    * and is listed in "failed". */
+  def report(sfDir: String, runs: Int, builds: Seq[(String, Double)], timings: Seq[Timing],
+             preflightFailed: Map[String, String]): (String, String) = {
+    val all = (timings ++ preflightFailed.keys.map(Timing(_, Nil))).sortBy(_.name)
+    val retimed = all.filter(_.retimes.nonEmpty)
+    val adjudicated = all.flatMap(t => t.adjudication.map(t -> _))
+    val failed = all.filterNot(_.ok).map(_.name)
+    val total = timings.filter(_.ok).map(_.value).sum
+    def d3(ts: Seq[Timing])(f: Timing => Double) = ListMap(ts.map(t => t.name -> fixed(f(t), 3)): _*)
+    val detail = ListMap[String, Any]("metric" -> "total", "value" -> fixed(total, 3), "unit" -> "sec",
+      "runs" -> runs) ++ builds.map { case (k, v) => k -> fixed(v, 3) } ++ ListMap(
+      "queries" -> d3(all)(_.value),
+      "queries_median" -> d3(all)(_.median),
+      "queries_max" -> d3(all)(_.max),
+      "queries_retimed" -> d3(retimed)(_.retimes.min),
+      "retime_attempts" -> ListMap(retimed.map(t => t.name -> t.retimes.map(fixed(_, 3))): _*),
+      "queries_adjudicated" -> ListMap(adjudicated.map { case (t, Adjudication(p, a)) =>
+        t.name -> ListMap("prior" -> fixed(p, 3), "before" -> fixed(t.value, 3), "after" -> fixed(a, 3),
+          "direction" -> (if (t.value > p) "regression" else "improvement"))
+      }: _*),
+      "preflight_failed" -> ListMap(preflightFailed.toSeq.sortBy(_._1): _*),
+      "failed" -> failed,
+      "sf" -> sfDir)
+
+    val shortable = all.map(t => short(t.name)).distinct.size == all.size
+    def d2(ts: Seq[(Timing, Double)]) =
+      ListMap(ts.map { case (t, v) => (if (shortable) short(t.name) else t.name) -> fixed(v, 2) }: _*)
+    val line = ListMap[String, Any]("metric" -> "total", "value" -> fixed(total, 3), "unit" -> "sec",
+      "runs" -> runs,
+      "queries" -> d2(all.map(t => t -> t.value)),
+      // the re-times that corrected their median most
+      "queries_retimed" -> d2(retimed.map(t => t -> t.retimes.min).sortBy { case (t, r) => r - t.median }.take(8)),
+      "retimed_n" -> retimed.size,
+      // the adjudications whose re-run moved furthest below the value
+      "adjudicated" -> d2(adjudicated.map { case (t, a) => t -> a.after }
+        .sortBy { case (t, a) => math.max(a, 0) - t.value }.take(8)),
+      "adjudicated_n" -> adjudicated.size,
+      "failed" -> failed,
+      "sf" -> sfDir)
+    (Json.write(line), Json.write(detail))
+  }
+
+  /** The prior round's per-query seconds to adjudicate against, read
+    * from a driver wrapper (`{"cpus":…,"parsed":<line>}`, a
+    * BENCH_r<N>.json) or a bare stdout line. `Left` says why there is
+    * none: unreadable text, no "queries", a prior run at another sf, or
+    * a wrapper whose `cpus` is not `cores` — a prior taken on another
+    * core count would flag queries that only the machine moved. A bare
+    * line records no core count and is used as it is. */
+  def readPrior(json: String, sfDir: String, cores: Int): Either[String, Map[String, Double]] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Try(Json.mapper.readTree(json)).toEither.left.map(e => s"unreadable: ${e.getMessage}")
+      .flatMap { root =>
+        val line = Option(root.get("parsed")).getOrElse(root)
+        val sf = Option(line.get("sf")).filter(_.isTextual).map(_.asText)
+        val cpus = Option(root.get("cpus")).filter(_.isNumber).map(_.asInt)
+        if (sf.exists(_ != sfDir)) Left(s"ran at ${sf.get}, not $sfDir")
+        else if (cpus.exists(_ != cores)) Left(s"ran on ${cpus.get} cores, not $cores")
+        else Option(line.get("queries")).toRight("holds no queries").map(_.properties().asScala
+          .map(e => e.getKey -> e.getValue.asDouble).filter(_._2 > 0).toMap)
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     val only = args.toSet // optional query-name subset (local dev)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val spark = Sessions.local()
 
-    def timeOne(phase: String, name: String): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val r = Preflight.bounded(spark, s"bench-$phase-$name", Preflight.RunBudgetMs) {
-        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      }
+    def timeOne(phase: String, name: String): Either[String, Double] = {
+      val r = Preflight.timed(spark, s"bench-$phase-$name")(SparkEntry.queries(name)(spark, sfDir))
       r.left.foreach(m => System.err.println(s"[bench] $name failed: $m"))
-      ((System.nanoTime() - t0) / 1e9, r.isRight)
+      r
     }
-
     // PREFLIGHT (scaladoc point 0). Dataset construction analyzes the
     // plan eagerly, so building the DataFrame and touching .schema is a
     // full analyzer+resolver pass without executing the query.
@@ -157,182 +251,70 @@ object Bench {
     val names = allNames.filterNot(preflightFailed.keySet)
 
     // R interleaved catalog sweeps (see scaladoc point 1)
-    val samples = collection.mutable.Map.empty[String, Vector[(Double, Boolean)]]
+    val samples = collection.mutable.Map.empty[String, Vector[Either[String, Double]]]
     for (_ <- 1 to runs; name <- names)
       samples(name) = samples.getOrElse(name, Vector.empty) :+ timeOne("sweep", name)
-
-    val prelim = names.map { name =>
-      val ts = samples(name)
-      val ok = ts.forall(_._2)
-      val sorted = ts.map(_._1).sorted
-      (name, sorted((sorted.size - 1) / 2), sorted.head, sorted.last, ok)
+    val swept = names.map { name =>
+      val ts = samples(name).flatMap(_.toOption)
+      Timing(name, if (ts.size == runs) ts else Nil)
     }
 
-    // isolated re-time of contention suspects (see scaladoc point 2).
-    // A FAILED re-run must not contribute its (meaningless) wall time:
-    // keep the sweep median and drop the sample. ALL attempts are kept
-    // and emitted (retime_attempts in BENCH_DETAIL) — min(median,
-    // retime) is a one-sided estimator that fires exactly when the
-    // first samples were unfavorable, so the raw attempts must stay
-    // visible for a consumer to judge whether the headline is a
-    // contention correction or noise harvesting.
-    val retimeAttempts: Map[String, Seq[Double]] = prelim.collect {
-      case (name, med, best, _, true)
-        if (runs > 1 && med > 2 * best) || med > RetimeFloorSec =>
+    // isolated re-time of contention suspects (see scaladoc point 2);
+    // a FAILED re-run contributes no sample
+    val retimed = swept.map {
+      case t if t.ok && ((runs > 1 && t.median > 2 * t.best) || t.median > RetimeFloorSec) =>
         System.gc()
-        val (t1, ok1) = timeOne("retime", name)
+        val first = timeOne("retime", t.name)
         // a re-time that itself stayed suspicious (the query's best
         // sweep proves it can run 2× faster) gets one more attempt
-        val second = if (ok1 && t1 > 2 * best && runs > 1) {
-          System.gc(); Some(timeOne("retime", name))
+        val second = if (runs > 1 && first.exists(_ > 2 * t.best)) {
+          System.gc(); Some(timeOne("retime", t.name))
         } else None
-        name -> (Seq((t1, ok1)) ++ second).collect { case (t, true) => t }
-    }.collect { case (name, ts) if ts.nonEmpty => name -> ts }.toMap
-    val retimed: Map[String, Double] = retimeAttempts.map { case (k, ts) => k -> ts.min }
+        t.copy(retimes = (first +: second.toSeq).flatMap(_.toOption))
+      case t => t
+    }
 
-    // A failing query must not silently lower the total: it is reported
-    // as -1 in the per-query map and listed in "failed".
-    def sweepValue(name: String, med: Double, ok: Boolean): Double =
-      if (!ok) -1 else retimed.get(name).fold(med)(math.min(med, _))
-
-    // PRIOR-ROUND ADJUDICATION: the round-over-round noise floor is
-    // ±40% per query on identical code (measured r7→r8), so a query
-    // whose value regressed >1.25× vs the prior recorded round gets ONE
-    // isolated re-time here, and both numbers are emitted — drift is
-    // adjudicated inside the run instead of slipping into the next
-    // round's comparison. Prior source: SPARK_GRAFT_PRIOR_BENCH, else
-    // the newest BENCH_r*.json in the cwd; skipped when the prior ran
-    // at a different SF dir (numbers would not be comparable).
+    // PRIOR-ROUND ADJUDICATION (scaladoc point 3): the prior is
+    // SPARK_GRAFT_PRIOR_BENCH, else the newest BENCH_r*.json in the cwd
+    // by HIGHEST PARSED ROUND NUMBER, not lexicographic order (r100 <
+    // r99 lexically; unpadded r9/r10 would also sort wrong).
     val priorQ: Map[String, Double] = {
-      import scala.jdk.CollectionConverters._
       val explicit = sys.env.get("SPARK_GRAFT_PRIOR_BENCH")
         .map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.exists(_))
-      // newest prior = HIGHEST PARSED ROUND NUMBER, not lexicographic
-      // order (r100 < r99 lexically; unpadded r9/r10 would also sort
-      // wrong), and the directory stream must be closed.
       val roundNum = "BENCH_r(\\d+)\\.json".r
-      val discovered =
-        try {
-          val stream = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-          try stream.iterator().asScala
-            .flatMap(p => p.getFileName.toString match {
-              case roundNum(n) => Some((n.toInt, p))
-              case _           => None
-            })
-            .toSeq.sortBy(_._1).lastOption.map(_._2)
-          finally stream.close()
-        } catch { case scala.util.control.NonFatal(_) => None }
-      explicit.orElse(discovered).flatMap { p =>
-        try {
-          var root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(p.toFile)
-          if (root.has("parsed")) root = root.get("parsed") // driver wrapper
-          val sfNode = root.get("sf")
-          if (sfNode != null && sfNode.isTextual && sfNode.asText != sfDir) {
-            System.err.println(s"[bench] prior $p ran at ${sfNode.asText}, not $sfDir — no adjudication")
-            None
-          } else Option(root.get("queries")).map(_.properties().asScala
-            .map(e => e.getKey -> e.getValue.asDouble).filter(_._2 > 0).toMap)
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] prior bench unreadable ($p): ${e.getMessage}"); None }
-      }.getOrElse(Map.empty)
+      val discovered = Option(new java.io.File(".").list()).toSeq.flatten
+        .collect { case n @ roundNum(r) => (r.toInt, java.nio.file.Paths.get(".", n)) }
+        .sortBy(_._1).lastOption.map(_._2)
+      explicit.orElse(discovered).fold(Map.empty[String, Double]) { p =>
+        val prior = scala.util.Try(java.nio.file.Files.readString(p)).toEither.left.map(e => s"unreadable: $e")
+          .flatMap(readPrior(_, sfDir, spark.sparkContext.defaultParallelism))
+        prior.left.foreach(why => System.err.println(s"[bench] prior $p $why — no adjudication"))
+        prior.getOrElse(Map.empty)
+      }
     }
-    def short(n: String): String = n.takeWhile(_ != '_')
-    // TWO-SIDED: a >1.25× regression AND a >1.25× improvement both get
-    // one isolated confirmation re-time — a silently-pruned plan that
-    // "got 2× faster" is as suspect as a regression. The re-time is an
-    // EMITTED ANNOTATION ONLY (queries_adjudicated / adjudicated line):
-    // it is NOT folded into value(). Folding min(value, re-time) on top
-    // of min(median, retime) was one more one-sided minimum harvesting
-    // noise downward — the headline is decided by the sweeps + the
-    // contention re-time alone, and the adjudication samples exist so a
-    // reader can judge whether a cross-round delta is real.
-    // name -> (prior, before, after); after = -1 when the re-run failed
-    val adjudicated: Map[String, (Double, Double, Double)] = prelim.flatMap {
-      case (name, med, _, _, true) =>
-        val before = sweepValue(name, med, ok = true)
-        priorQ.get(name).orElse(priorQ.get(short(name)))
-          .filter(p => before > p * 1.25 || before < p / 1.25)
-          .map { p =>
-            System.gc()
-            val (t, okA) = timeOne("adjudicate", name)
-            name -> ((p, before, if (okA) t else -1.0))
-          }
-      case _ => None
-    }.toMap
-    def fmt(v: Double): String =
-      if (v < 0) "-1" else "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def obj(pairs: Seq[(String, Double)]): String =
-      pairs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    // TWO-SIDED: a silently-pruned plan that "got 2× faster" is as
+    // suspect as a regression. The re-run is an annotation only, never
+    // folded into the value (scaladoc point 3).
+    val timings = retimed.map { t =>
+      priorQ.get(t.name).orElse(priorQ.get(short(t.name)))
+        .filter(p => t.ok && (t.value > p * 1.25 || t.value < p / 1.25))
+        .fold(t) { p =>
+          System.gc()
+          t.copy(adjudication = Some(Adjudication(p, timeOne("adjudicate", t.name).getOrElse(-1.0))))
+        }
+    }
 
-    // Preflight-failed queries re-enter the report here: -1 in every
-    // per-query map (merged back into catalog-name order) and in
-    // "failed", so the driver-visible line carries the breakage even
-    // though the sweeps never ran them.
-    val preflightEntries = preflightFailed.keys.toSeq.map(k => k -> -1.0)
-    val qsFull = (prelim.map { case (k, med, _, _, ok) => k -> sweepValue(k, med, ok) } ++ preflightEntries).sortBy(_._1)
-    val qsMax = (prelim.map { case (k, _, _, mx, ok) => k -> (if (ok) mx else -1.0) } ++ preflightEntries).sortBy(_._1)
-    val qsMed = (prelim.map { case (k, med, _, _, ok) => k -> (if (ok) med else -1.0) } ++ preflightEntries).sortBy(_._1)
-    val failed = (prelim.collect { case (k, _, _, _, false) => k } ++ preflightFailed.keys)
-      .sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = prelim.collect { case (k, med, _, _, true) => sweepValue(k, med, ok = true) }.sum
-
-    // Full-fidelity record (full query names, sweep medians/maxima,
-    // EVERY isolated re-time attempt, prior-round adjudications) for
-    // humans and the judge:
-    def objArr(pairs: Seq[(String, Seq[Double])]): String =
-      pairs.map { case (k, vs) => "\"" + k + "\":[" + vs.map(fmt).mkString(",") + "]" }
-        .mkString("{", ",", "}")
-    val adjDetail = adjudicated.toSeq.sortBy(_._1).map { case (k, (p, b, a)) =>
-      val dir = if (b > p) "regression" else "improvement"
-      s""""$k":{"prior":${fmt(p)},"before":${fmt(b)},"after":${fmt(a)},"direction":"$dir"}"""
-    }.mkString("{", ",", "}")
-    val preflightDetail = preflightFailed.toSeq.sortBy(_._1)
-      .map { case (k, m) => s"${Verify.jsonString(k)}:${Verify.jsonString(m)}" }.mkString("{", ",", "}")
-    val buildDetail = buildSecs.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString(",")
-    val detail =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,$buildDetail,"queries":${obj(qsFull)},"queries_median":${obj(qsMed)},"queries_max":${obj(qsMax)},"queries_retimed":${obj(retimed.toSeq.sortBy(_._1))},"retime_attempts":${objArr(retimeAttempts.toSeq.sortBy(_._1))},"queries_adjudicated":$adjDetail,"preflight_failed":$preflightDetail,"failed":$failed,"sf":"$sfDir"}"""
-    val detailPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json"))
-    java.nio.file.Files.write(detailPath, (detail + "\n").getBytes("UTF-8"))
-
-    // The driver captures only the LAST 2000 CHARS of this process's
-    // output and json.loads's the result line, so the line printed here
-    // must fit that window WHOLE: keys are shortened to their unique
-    // "qNN" prefix and seconds rounded to 10 ms (116 queries ≈ 1.7 kB
-    // at 1 ms — 2-digit precision buys headroom to ~140 queries; the
-    // full-precision numbers live in BENCH_DETAIL.json either way).
-    def fmt2(v: Double): String =
-      if (v < 0) "-1" else "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    def obj2(pairs: Seq[(String, Double)]): String =
-      pairs.map { case (k, v) => "\"" + k + "\":" + fmt2(v) }.mkString("{", ",", "}")
-    val shortable = allNames.map(short).distinct.size == allNames.size
-    def key(n: String): String = if (shortable) short(n) else n
-    val qsLine = obj2(qsFull.map { case (k, v) => key(k) -> v })
-    // the driver-visible adjudication: which queries the isolated
-    // re-time corrected, capped at the 8 largest median−retime deltas
-    // (plus the trigger count) to stay inside the 2 kB tail window
-    val medByName = qsMed.toMap
-    val retimedLine = obj2(retimed.toSeq
-      .sortBy { case (k, t) => -(medByName.getOrElse(k, t) - t) }
-      .take(8).map { case (k, t) => key(k) -> t })
-    // prior-round adjudication, compact: the count plus the 8 largest
-    // before−after corrections (full prior/before/after per query in
-    // BENCH_DETAIL's queries_adjudicated)
-    val adjLine = obj2(adjudicated.toSeq
-      .sortBy { case (_, (_, b, a)) => -(b - math.max(a, 0)) }
-      .take(8).map { case (k, (_, _, a)) => key(k) -> a })
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$runs,"queries":$qsLine,"queries_retimed":$retimedLine,"retimed_n":${retimed.size},"adjudicated":$adjLine,"adjudicated_n":${adjudicated.size},"failed":$failed,"sf":"$sfDir"}"""
+    val (line, detail) = report(sfDir, runs, buildSecs, timings, preflightFailed.toMap)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")), detail + "\n")
     // r22 (PERF-pipeline protection): the stdout line is ALSO written
     // verbatim to a file. The driver keeps only a ~2 kB stdout tail in
     // its BENCH_r*.json record, and at 241 queries the line exceeds
     // that window, so the STORED tail truncates the line's start — the
     // r20→r21 comparison went dark exactly this way. The file carries
-    // the same bytes durably; stdout behavior is unchanged
-    // (additions-only, timing protocol untouched).
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_LINE", "BENCH_LINE.json")),
-      (line + "\n").getBytes("UTF-8"))
+    // the same bytes durably.
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_LINE", "BENCH_LINE.json")), line + "\n")
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write BENCH_LINE.json: ${e.getMessage}") }
     println(line)

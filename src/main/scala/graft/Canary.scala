@@ -1,7 +1,8 @@
 package graft
 
-import graft.core.{Preflight, Sessions}
+import graft.core.{Json, Preflight, Sessions}
 import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 import scala.util.control.NonFatal
 
 /** Fixed quiet-box CANARY set for bench-drift adjudication.
@@ -70,39 +71,33 @@ object Canary {
     * identical code, below the 2× a real plan regression produces. */
   val DriftBand = 1.3
   /** One canary's isolated floor: the min over `runs` attempts. Each
-    * attempt runs under [[Preflight.bounded]] with the run budget, which
-    * drains the scratch caches after it, so a canary that throws or
-    * hangs is `Left(message)` — one failed entry — and stops after its
-    * first failed attempt. */
-  def floor(spark: SparkSession, sfDir: String, runs: Int)(name: String): Either[String, Double] = {
-    def timeOnce(): Either[String, Double] =
-      Preflight.bounded(spark, s"canary-$name", Preflight.RunBudgetMs) {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+    * attempt is one [[Preflight.timed]] run, which drains the scratch
+    * caches after it, so a canary that throws or hangs is
+    * `Left(message)` — one failed entry — and stops after its first
+    * failed attempt. */
+  def floor(spark: SparkSession, sfDir: String, runs: Int)(name: String): Either[String, Double] =
     (1 to runs).foldLeft[Either[String, Double]](Right(Double.PositiveInfinity)) { (best, _) =>
-      best.flatMap(b => timeOnce().map(math.min(b, _)))
+      best.flatMap(b => Preflight.timed(spark, s"canary-$name")(SparkEntry.queries(name)(spark, sfDir)).map(math.min(b, _)))
     }
-  }
 
-  /** The stamped floors this run may judge against, and the fragment the
-    * output line carries about them. A stamp is only comparable under
+  /** The stamped floors this run may judge against, and the note fields
+    * the output line carries about them. A stamp is only comparable under
     * the SAME settings: one taken at sf0.1 read against an sf1 run would
     * flag every canary DRIFT against the wrong floor. So an sf mismatch,
     * or a stamp with no "sf" field (it predates sf tagging and could
     * come from any scale), yields no floors — verdicts downgrade to
     * no_baseline. A runs/band difference only warps the floor mildly,
     * so it is kept and surfaced as a `baseline_warning`. */
-  def readBaseline(json: String, sfDir: String, runs: Int): (Map[String, Double], String) = {
+  def readBaseline(json: String, sfDir: String, runs: Int): (Map[String, Double], Seq[(String, String)]) = {
     import scala.jdk.CollectionConverters._
     // unreadable text reads as an untagged stamp
-    val root = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val root = try Json.mapper.readTree(json)
       catch { case NonFatal(_) => com.fasterxml.jackson.databind.node.MissingNode.getInstance }
     def field(k: String) = Option(root.get(k))
     val stampSf = field("sf").filter(_.isTextual).map(_.asText)
     if (stampSf.forall(_ != sfDir))
-      (Map.empty, s""","baseline_mismatch":"stamped at sf=${stampSf.getOrElse("<untagged legacy stamp>")}, running sf=$sfDir -- verdicts downgraded to no_baseline"""")
+      (Map.empty, Seq("baseline_mismatch" ->
+        s"stamped at sf=${stampSf.getOrElse("<untagged legacy stamp>")}, running sf=$sfDir -- verdicts downgraded to no_baseline"))
     else {
       val warns = Seq(
         field("runs").filter(_.isNumber).map(_.asInt).filter(_ != runs)
@@ -113,8 +108,46 @@ object Canary {
       val floors = field("queries").map(_.properties().asScala
         .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap)
         .getOrElse(Map.empty[String, Double])
-      (floors, if (warns.isEmpty) "" else s""","baseline_warning":"${warns.mkString("; ")}"""")
+      (floors, if (warns.isEmpty) Nil else Seq("baseline_warning" -> warns.mkString("; ")))
     }
+  }
+
+  private def r3(d: Double) = math.rint(d * 1000) / 1000
+
+  /** The stdout line: the settings, the baseline note, the count of
+    * canaries above their stamped floor's band, the floor geomean and
+    * one verdict per canary (a failed one carries its message). */
+  def line(sfDir: String, runs: Int, stamp: Boolean, baseline: Map[String, Double],
+           note: Seq[(String, String)], results: Seq[(String, Either[String, Double])]): String = {
+    val perQ = results.map {
+      case (n, Left(m)) => n -> ListMap("verdict" -> "failed", "message" -> m.take(300))
+      case (n, Right(s)) =>
+        val b = baseline.get(n)
+        val verdict = b match {
+          case None => if (stamp) "stamped" else "no_baseline"
+          case Some(bb) if s > bb * DriftBand => "DRIFT"
+          case Some(bb) if s < bb / DriftBand => "FAST"
+          case Some(_) => "ok"
+        }
+        n -> (ListMap[String, Any]("secs" -> r3(s)) ++
+          b.toSeq.flatMap(bb => Seq("base" -> r3(bb), "ratio" -> r3(s / bb))) + ("verdict" -> verdict))
+    }
+    val floors = results.collect { case (n, Right(s)) => n -> s }
+    val drifted = floors.count { case (n, s) => baseline.get(n).exists(bb => s > bb * DriftBand) }
+    // round-over-round GEOMEAN of the isolated floors (r19 verdict item
+    // 6): the full-catalog sweep's geomean has shown a +7–12%
+    // whole-catalog constant three rounds straight, each adjudicated
+    // away via these floors — so report the floor geomean as the
+    // primary drift number and read the sweep's only alongside it. A
+    // floor geomean near 1.0 with a sweep geomean of 1.1 IS the
+    // resident-catalog/box constant, mechanically.
+    val ratios = floors.flatMap { case (n, s) => baseline.get(n).map(s / _) }
+    val geomean =
+      if (ratios.isEmpty) Nil
+      else Seq("floor_geomean" -> r3(math.exp(ratios.map(math.log).sum / ratios.size)))
+    Json.write(ListMap[String, Any]("metric" -> "canary", "sf" -> sfDir, "runs" -> runs,
+      "band" -> DriftBand, "stamped" -> stamp) ++ note ++ Seq("n_drift" -> drifted) ++ geomean ++
+      Seq("queries" -> ListMap(perQ: _*)))
   }
 
   def main(args: Array[String]): Unit = {
@@ -131,51 +164,19 @@ object Canary {
 
     val results: Seq[(String, Either[String, Double])] =
       CanarySet.map(n => n -> floor(spark, sfDir, runs)(n))
-    val floors: Seq[(String, Double)] = results.flatMap {
-      case (n, Left(m)) => System.err.println(s"[canary] $n failed: $m"); None
-      case (n, Right(s)) => Some(n -> s)
-    }
+    results.foreach { case (n, r) => r.left.foreach(m => System.err.println(s"[canary] $n failed: $m")) }
 
-    def r3(d: Double) = math.rint(d * 1000) / 1000
     val p = java.nio.file.Paths.get(basePath)
-    val (baseline, baselineNote) =
-      if (stamp || !java.nio.file.Files.exists(p)) (Map.empty[String, Double], "")
+    val (baseline, note) =
+      if (stamp || !java.nio.file.Files.exists(p)) (Map.empty[String, Double], Nil)
       else readBaseline(java.nio.file.Files.readString(p), sfDir, runs)
 
-    val perQ = results.map {
-      case (n, Left(m)) => s""""$n":{"verdict":"failed","message":${Verify.jsonString(m.take(300))}}"""
-      case (n, Right(s)) =>
-        val b = baseline.get(n)
-        val verdict = b match {
-          case None => if (stamp) "stamped" else "no_baseline"
-          case Some(bb) if s > bb * DriftBand => "DRIFT"
-          case Some(bb) if s < bb / DriftBand => "FAST"
-          case Some(_) => "ok"
-        }
-        val extra = b.map(bb => s""","base":${r3(bb)},"ratio":${r3(s / bb)}""").getOrElse("")
-        s""""$n":{"secs":${r3(s)}$extra,"verdict":"$verdict"}"""
-    }.mkString(",")
-
     if (stamp) {
-      val qj = floors.map { case (n, s) => s""""$n":${r3(s)}""" }.mkString(",")
-      val out = s"""{"sf":"$sfDir","runs":$runs,"band":$DriftBand,"queries":{$qj}}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(basePath),
-        (out + "\n").getBytes("UTF-8"))
+      val floors = results.collect { case (n, Right(s)) => n -> r3(s) }
+      java.nio.file.Files.writeString(p, Json.write(ListMap("sf" -> sfDir, "runs" -> runs,
+        "band" -> DriftBand, "queries" -> ListMap(floors: _*))) + "\n")
     }
-    val drifted = floors.count { case (n, s) =>
-      baseline.get(n).exists(bb => s > bb * DriftBand) }
-    // round-over-round GEOMEAN of the isolated floors (r19 verdict item
-    // 6): the full-catalog sweep's geomean has shown a +7–12%
-    // whole-catalog constant three rounds straight, each adjudicated
-    // away via these floors — so report the floor geomean as the
-    // primary drift number and read the sweep's only alongside it. A
-    // floor geomean near 1.0 with a sweep geomean of 1.1 IS the
-    // resident-catalog/box constant, mechanically.
-    val ratios = floors.flatMap { case (n, s) => baseline.get(n).map(s / _) }
-    val geomean =
-      if (ratios.isEmpty) ""
-      else s""","floor_geomean":${r3(math.exp(ratios.map(math.log).sum / ratios.size))}"""
-    println(s"""{"metric":"canary","sf":"$sfDir","runs":$runs,"band":$DriftBand,"stamped":$stamp$baselineNote,"n_drift":$drifted$geomean,"queries":{$perQ}}""")
+    println(line(sfDir, runs, stamp, baseline, note, results))
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Preflight, Sessions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan and isolated timings for
   * named catalog queries. Usage:
@@ -19,32 +19,26 @@ object Explain {
     spark.stop()
   }
 
-  /** Explains each query, warms it once and times two writes of it.
-    * The build (with the explain and the warm-up) and each timed write
-    * run under [[Preflight.bounded]] with the run budget, which drains
-    * the scratch caches after each, so every write does the same work.
-    * A query that throws or hangs prints one `[explain] <name> failed`
-    * line and the next name still runs. Returns each name's two write
-    * times in seconds, or its failure message. */
+  /** Explains each query, then writes the built frame once to warm it
+    * and twice more to time it. The build (with the explain) runs under
+    * [[Preflight.bounded]] and each write is a [[Preflight.timed]] run,
+    * which drains the scratch caches after it, so every write does the
+    * same work. A query that throws or hangs prints one
+    * `[explain] <name> failed` line and the next name still runs.
+    * Returns each name's two write times in seconds, or its failure
+    * message. */
   def run(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[(String, Either[String, Seq[Double]])] =
     names.map { name =>
-      def write(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-      def timed(df: DataFrame, i: Int) =
-        Preflight.bounded(spark, s"explain-$name-run$i", Preflight.RunBudgetMs) {
-          val t0 = System.nanoTime()
-          write(df)
-          (System.nanoTime() - t0) / 1e9
-        }
       val secs = for {
         df <- Preflight.bounded(spark, s"explain-$name", Preflight.RunBudgetMs) {
           val df = SparkEntry.queries(name)(spark, sfDir)
           println(s"========== $name ==========")
           df.explain("formatted")
-          write(df)
           df
         }
-        r1 <- timed(df, 1)
-        r2 <- timed(df, 2)
+        _ <- Preflight.timed(spark, s"explain-$name-warm")(df)
+        r1 <- Preflight.timed(spark, s"explain-$name-run1")(df)
+        r2 <- Preflight.timed(spark, s"explain-$name-run2")(df)
       } yield Seq(r1, r2)
       secs match {
         case Left(m) => Console.err.println(s"[explain] $name failed: $m")

@@ -1,6 +1,5 @@
 package graft
-import java.nio.file.{Files, Paths}
-import graft.core.{Preflight, Sessions}
+import graft.core.{Json, Preflight, Sessions}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB oracle compare. Usage:
   *   sbt "runMain graft.Verify <sfDir> <outDir> [query ...]"
@@ -20,28 +19,17 @@ object Verify {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         }.left.foreach(m => System.err.println(s"[verify] $name failed: $m"))
       }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // the no-oracle queries' documented justification — distinguishes
-    // "unverifiable by design" (sketches, Spark-native hash fns) from
-    // "unverified" in the correctness artifact
-    val reasons = SparkEntry.noOracleReasons
-      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/no_oracle_reasons.json"), reasons)
+    writeOracles(outDir)
     spark.stop()
   }
 
-  /** JSON string literal. Escapes backslash, quote and ALL control chars
-    * (<0x20): a tab or CR in catalog SQL or in an error message would
-    * otherwise make the consumer's json.load fail. */
-  def jsonString(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** Writes each verifiable query's DuckDB SQL to oracle_sql.json and
+    * each other query's documented justification to
+    * no_oracle_reasons.json, which tells "unverifiable by design"
+    * (sketches, Spark-native hash fns) from "unverified" in the
+    * correctness artifact. tools/check_oracle.py reads both. */
+  def writeOracles(outDir: String): Unit = {
+    Json.mapper.writeValue(new java.io.File(s"$outDir/oracle_sql.json"), SparkEntry.oracleSql)
+    Json.mapper.writeValue(new java.io.File(s"$outDir/no_oracle_reasons.json"), SparkEntry.noOracleReasons)
+  }
 }

@@ -1,11 +1,12 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** The one guarded way to run catalog-query work: every runner (Bench,
   * Verify, Canary, Explain, the contract spec) passes each query's
-  * construction, analysis or execution through [[bounded]].
+  * construction, analysis or execution through [[bounded]], and times
+  * a query through [[timed]].
   *
   * Round-12 lesson: the full-catalog runners call every query builder,
   * and a builder that never RETURNS — q155's un-checkpointed iterative
@@ -64,6 +65,21 @@ object Preflight {
   private[core] def resetEscapedFatal(): Unit = escapedFatal.set(null)
 
   private val calls = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The one timed run of a query, for Bench, Canary and Explain:
+    * `query` is built and written to the noop sink under [[bounded]]
+    * with [[RunBudgetMs]], and the result is the seconds that took,
+    * measured inside the guard (the thread start and the cache drain
+    * are not in it). The noop sink materializes every column, where
+    * count() would let Catalyst prune projections and under-measure
+    * scan-heavy queries. Pass an already-built frame to time the write
+    * alone. */
+  def timed(spark: SparkSession, group: String)(query: => DataFrame): Either[String, Double] =
+    bounded(spark, group, RunBudgetMs) {
+      val t0 = System.nanoTime()
+      query.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
 
   def bounded[T](spark: SparkSession, group: String, timeoutMs: Long)(body: => T): Either[String, T] = {
     Option(escapedFatal.get()).foreach(throw _)
